@@ -16,7 +16,7 @@ reference C++ engine at /root/reference) as an idiomatic PySpark engine:
   sampling, multimodal plumbing)
 
 Architecture is Spark-first, NOT a port: sketch builds are one
-map-side-combined shuffle (mapInPandas partials -> groupBy merge),
+map-side-combined shuffle (mapInArrow partials -> mapInArrow merge),
 queries are broadcast joins of an O(log^2 N) dyadic cover against the
 sketch table, and everything crossing the JVM/Python boundary moves in
 Arrow batches (no per-row Python).

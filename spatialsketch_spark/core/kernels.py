@@ -68,6 +68,17 @@ class BaseKernel:
     def deserialize(self, blob: bytes):
         return pickle.loads(blob)
 
+    def encode_batch(self, states) -> tuple[np.ndarray, np.ndarray]:
+        """Payloads of ``states`` as one binary column buffer pair: int64
+        ``offsets`` (``len(states) + 1`` entries, from 0) and uint8
+        ``data``, where ``data[offsets[i]:offsets[i + 1]]`` is
+        ``serialize(states[i])``. Kernels with a fixed-layout codec
+        override this with a vectorized encoder."""
+        blobs = [self.serialize(s) for s in states]
+        offsets = np.zeros(len(blobs) + 1, dtype=np.int64)
+        offsets[1:] = np.cumsum([len(b) for b in blobs], dtype=np.int64)
+        return offsets, np.frombuffer(b"".join(blobs), dtype=np.uint8)
+
     # --- interface ---
     def build_grouped(self, cell_keys, items, values, ts):
         """-> (unique_cell_keys: int64[], states: list)"""
@@ -82,9 +93,9 @@ class BaseKernel:
         return None
 
     # Kernels that can fold a batch from (uc, inv) group labels without
-    # re-sorting override this; the partial builder then runs ONE
-    # np.unique(return_inverse) per grid instead of three argsorts
-    # (the r8 profile put 40% of build-task CPU in redundant argsort).
+    # re-sorting override this; the partial builder then hands them the
+    # group labels its pyramid grouping already computed for each grid,
+    # and no kernel sorts the batch again.
     build_from_groups = None
 
     def merge(self, states: list):
@@ -194,6 +205,8 @@ class CMKernel(BaseKernel):
 
     _MAGIC_D = b"CMD\x00\x00\x00\x00\x00"
     _MAGIC_S = b"CMS\x00\x00\x00\x00\x00"
+    _WORD_D = np.frombuffer(_MAGIC_D, np.int64)[0]
+    _WORD_S = np.frombuffer(_MAGIC_S, np.int64)[0]
 
     def _check_shape(self, blob: bytes):
         """Payloads carry their (d, w); a mismatch means a snapshot
@@ -236,13 +249,36 @@ class CMKernel(BaseKernel):
             out = np.zeros(self.d * self.w, dtype=np.int64)
             out[idx] = vals
             return out.reshape(self.d, self.w)
-        obj = pickle.loads(blob)                  # legacy payloads
-        if obj[0] == "d":
-            return obj[1]
-        _, shape, idx, vals = obj
-        out = np.zeros(shape[0] * shape[1], dtype=np.int64)
-        out[idx] = vals
-        return out.reshape(shape)
+        raise ValueError(f"not a CM payload (magic {bytes(blob[:8])!r})")
+
+    def encode_batch(self, states):
+        """Vectorized ``serialize`` over a (C, d, w) counter stack: the
+        same canonical CMS/CMD payloads byte for byte, written straight
+        into one int64 word buffer (every field is 8 bytes wide)."""
+        size = self.d * self.w
+        flat = np.ascontiguousarray(states, np.int64).reshape(-1, size)
+        nz = np.flatnonzero(flat.ravel() != 0)    # by cell, idx ascending
+        cell, idx = np.divmod(nz, size)
+        nnz = np.bincount(cell, minlength=len(flat))
+        sparse = nnz * 2 < size
+        offsets = np.zeros(len(flat) + 1, dtype=np.int64)
+        np.cumsum(np.where(sparse, 4 + 2 * nnz, 3 + size), out=offsets[1:])
+        out = np.empty(offsets[-1], dtype=np.int64)
+        start = offsets[:-1]
+        out[start] = np.where(sparse, self._WORD_S, self._WORD_D)
+        out[start + 1] = self.d
+        out[start + 2] = self.w
+        # sparse: nnz, then the ascending flat indices, then their values
+        out[start[sparse] + 3] = nnz[sparse]
+        rank = np.arange(len(nz)) - (np.cumsum(nnz) - nnz)[cell]
+        keep = sparse[cell]
+        nz, cell, idx, rank = nz[keep], cell[keep], idx[keep], rank[keep]
+        pos = start[cell] + 4 + rank
+        out[pos] = idx
+        out[pos + nnz[cell]] = flat.ravel()[nz]
+        # dense: the whole counter matrix
+        out[start[~sparse, None] + 3 + np.arange(size)] = flat[~sparse]
+        return offsets * 8, out.view(np.uint8)
 
     def deserialize_batch(self, payloads) -> np.ndarray:
         """B payloads -> one (B, d, w) int64 counter stack; the batched
@@ -276,31 +312,22 @@ class CMKernel(BaseKernel):
         comes for free from CM row 0."""
         return int(st[0].sum())
 
-    # NOTE on exactness: the per-batch counter build below accumulates
-    # int64 values through np.bincount's float64 weights, exact only
-    # while any single counter's per-batch increment stays < 2^53 (~9e15
-    # — far above any realistic Arrow batch; cross-batch accumulation is
-    # int64 `+=` in merge()). The CM is a lossy synopsis anyway; the
-    # engine's *exact-mode* claim rides on ExactKernel, which never goes
-    # through float weights.
     def prep_batch(self, items, values, ts):
         return {"h": self.hash(items)}                       # (d, n)
 
     def build_from_groups(self, uc, inv, items, values, ts, prep=None):
+        """-> the (len(uc), d, w) int64 counter stack; row i is cell
+        uc[i]'s state. Counters accumulate in int64 (np.add.at), so
+        they are exact at any batch size."""
         h = prep["h"] if prep is not None else self.hash(items)
-        vals = values.astype(np.int64)
-        n_cells = len(uc)
         rows = np.arange(self.d, dtype=np.int64)[:, None]
         flat = (inv[None, :] * self.d + rows) * self.w + h   # (d, n)
-        # bincount order differs from the sorted path but every partial
-        # sum is an integer < 2^53 in float64, so the counters are
-        # bit-identical (same exactness argument as the NOTE above)
-        counters = np.bincount(
-            flat.ravel(),
-            weights=np.broadcast_to(vals, (self.d, len(vals))).ravel(),
-            minlength=n_cells * self.d * self.w,
-        ).astype(np.int64).reshape(n_cells, self.d, self.w)
-        return [counters[i] for i in range(n_cells)]
+        counters = np.zeros(len(uc) * self.d * self.w, dtype=np.int64)
+        # both operands flat: np.add.at mis-adds a 1-D value array
+        # broadcast against a 2-D index array (numpy 1.26)
+        np.add.at(counters, flat.ravel(), np.broadcast_to(
+            values.astype(np.int64), flat.shape).ravel())
+        return counters.reshape(len(uc), self.d, self.w)
 
     def build_grouped(self, cell_keys, items, values, ts):
         uc, inv = np.unique(cell_keys, return_inverse=True)

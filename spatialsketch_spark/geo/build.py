@@ -2,12 +2,21 @@
 ``SpatialSketch::Update`` (SpatialSketch.cpp:535-599).
 
 Reference (per tuple): fan out to the (log2 N + 1)^2 dyadic grids, update
-one lazily-allocated nested sketch per grid. Here (per Arrow batch):
+one lazily-allocated nested sketch per grid. Here (per partition):
 
-  events ── mapInPandas(partial build: per-partition, per-grid grouped
-            numpy sketch build; ONE output row per touched (grid, cell))
-         ── groupBy(grid_key, cell).applyInPandas(merge partials)
-         ── sketch table (grid_key, cell, payload, n_events)
+  events ── mapInArrow(partial build: the partition's events grouped into
+            the cells of every live grid with ONE sort per x-level —
+            coarser y-levels are runs of the finer level's sorted cells;
+            per grid one kernel fold and one vectorized payload encode
+            into a single (offsets, data) buffer pair -> one Arrow batch
+            per grid, one row per touched (grid, cell))
+         ── hash shuffle on (grid_key, cell)
+         ── mapInArrow(merge partials; single partials pass through)
+         ── sketch table (grid_key, cell, payload, n_events, val_sum)
+
+Events must lie on the grid: an x or y outside [0, N) raises instead of
+aliasing into a neighbouring cell key. Stored payloads are the kernels'
+canonical ``serialize`` bytes, whatever path produced them.
 
 This is a *manual map-side combine*: the shuffle carries at most
 (#partitions x #touched cells) sketch partials — independent of event
@@ -35,7 +44,7 @@ import shutil
 import time
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import SketchConfig
@@ -43,6 +52,9 @@ from ..core.kernels import make_kernel
 
 SKETCH_SCHEMA = ("grid_key INT, cell BIGINT, payload BINARY, "
                  "n_events BIGINT, val_sum BIGINT")
+ARROW_SCHEMA = pa.schema([("grid_key", pa.int32()), ("cell", pa.int64()),
+                          ("payload", pa.binary()),
+                          ("n_events", pa.int64()), ("val_sum", pa.int64())])
 
 
 def live_grids(cfg: SketchConfig, min_level: int) -> list[tuple[int, int]]:
@@ -52,73 +64,139 @@ def live_grids(cfg: SketchConfig, min_level: int) -> list[tuple[int, int]]:
             if (kx, ky) not in cfg.dropped_grids]
 
 
+def pyramid_groups(x: np.ndarray, y: np.ndarray, values: np.ndarray,
+                   n: int, grids: list[tuple[int, int]]):
+    """Group one batch of events into the cells of every grid in
+    ``grids`` with one sort per x-level. Yields, per grid, ``(kx, ky,
+    cells, inv, counts, vsums)``: the ascending cell keys ``(x >> kx) * n
+    + (y >> ky)``, each event's index into them, and each cell's event
+    count and exact int64 value sum.
+
+    The sort runs on the finest y-level of each x-level. Sorted by
+    (x-cell, y-cell), the cells of a coarser y-level are runs of the
+    finer level's cells, so each coarser level comes from the finer one
+    in O(cells): shift the y part, mark the runs, remap ``inv``."""
+    ymask = n - 1
+    by_kx: dict[int, list[int]] = {}
+    for kx, ky in grids:
+        by_kx.setdefault(kx, []).append(ky)
+    for kx, kys in by_kx.items():
+        kys = sorted(kys)
+        key = (x >> kx) * n + (y >> kys[0])
+        order = np.argsort(key)
+        sorted_key = key[order]
+        run = _run_starts(sorted_key)
+        starts = np.flatnonzero(run)
+        cells = sorted_key[starts]
+        inv = np.empty(len(key), dtype=np.int64)
+        inv[order] = np.cumsum(run) - 1
+        counts = np.diff(np.append(starts, len(key)))
+        vsums = np.add.reduceat(values[order], starts)
+        prev = kys[0]
+        for ky in kys:
+            if ky != prev:
+                coarse = (cells & ~ymask) | ((cells & ymask) >> (ky - prev))
+                run = _run_starts(coarse)
+                starts = np.flatnonzero(run)
+                cells = coarse[starts]
+                inv = (np.cumsum(run) - 1)[inv]
+                counts = np.add.reduceat(counts, starts)
+                vsums = np.add.reduceat(vsums, starts)
+                prev = ky
+            yield kx, ky, cells, inv, counts, vsums
+
+
+def _run_starts(sorted_keys: np.ndarray) -> np.ndarray:
+    run = np.empty(len(sorted_keys), dtype=bool)
+    run[:1] = True
+    np.not_equal(sorted_keys[1:], sorted_keys[:-1], out=run[1:])
+    return run
+
+
+def _int64_columns(batches, names):
+    """Concatenate the named columns of Arrow record batches into int64
+    numpy arrays, or None when there are no rows. Nulls raise: they have
+    no cell and no count."""
+    batches = [b for b in batches if b.num_rows]
+    if not batches:
+        return None
+    out = []
+    for name in names:
+        col = pa.chunked_array([b.column(name) for b in batches])
+        if col.null_count:
+            raise ValueError(f"sketch input column {name!r} has "
+                             f"{col.null_count} nulls")
+        out.append(col.to_numpy().astype(np.int64, copy=False))
+    return out
+
+
+def _sketch_batches(grid_key, cells, offsets, data, n_events, val_sum,
+                    max_bytes: int = (1 << 31) - 1):
+    """Sketch rows as Arrow record batches of SKETCH_SCHEMA. The payload
+    column is built from the ``(offsets, data)`` buffer pair without
+    copying per row; its offsets are int32, so rows are cut into batches
+    of at most ``max_bytes`` payload bytes."""
+    lo, n = 0, len(cells)
+    while lo < n:
+        hi = min(n, int(np.searchsorted(offsets, offsets[lo] + max_bytes,
+                                        side="right")) - 1)
+        if hi <= lo:
+            raise ValueError(f"payload of {offsets[lo + 1] - offsets[lo]}"
+                             f" bytes exceeds {max_bytes}")
+        off = (offsets[lo:hi + 1] - offsets[lo]).astype(np.int32)
+        payload = pa.BinaryArray.from_buffers(
+            pa.binary(), hi - lo,
+            [None, pa.py_buffer(off),
+             pa.py_buffer(data[offsets[lo]:offsets[hi]])])
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(grid_key[lo:hi]), pa.array(cells[lo:hi]), payload,
+             pa.array(n_events[lo:hi]), pa.array(val_sum[lo:hi])],
+            schema=ARROW_SCHEMA)
+        lo = hi
+
+
+def _binary_buffers(arr: pa.BinaryArray):
+    """(int64 offsets, uint8 data) numpy views of a binary array."""
+    _, off, data = arr.buffers()
+    return (np.frombuffer(off, np.int32, len(arr) + 1, arr.offset * 4)
+            .astype(np.int64), np.frombuffer(data, np.uint8))
+
+
 def _partial_builder(cfg: SketchConfig, kind: str, min_level: int):
-    """Returns the mapInPandas function. Everything it needs travels in
-    the task closure (deterministic: kernels regenerate identical hash
-    coefficients from cfg.seed on every executor)."""
+    """Returns the mapInArrow function: one partition's events -> one
+    Arrow batch of partial sketches per live grid, one row per touched
+    cell. Everything it needs travels in the task closure
+    (deterministic: kernels regenerate identical hash coefficients from
+    cfg.seed on every executor)."""
     grids = live_grids(cfg, min_level)
     n = cfg.n
 
     def fn(batches):
+        cols = _int64_columns(batches, ("x", "y", "item", "value", "ts"))
+        if cols is None:
+            return
+        x, y, items, values, ts = cols
+        for name, v in (("x", x), ("y", y)):
+            if v.min() < 0 or v.max() >= n:
+                raise ValueError(
+                    f"event {name} outside [0, {n}): min {v.min()}, "
+                    f"max {v.max()}")
         kernel = make_kernel(kind, cfg)
-        xs, ys, its, vas, tss = [], [], [], [], []
-        for pdf in batches:
-            xs.append(pdf["x"].to_numpy(np.int64))
-            ys.append(pdf["y"].to_numpy(np.int64))
-            its.append(pdf["item"].to_numpy(np.int64))
-            vas.append(pdf["value"].to_numpy(np.int64))
-            tss.append(pdf["ts"].to_numpy(np.int64))
-        if not xs:
-            return
-        x = np.concatenate(xs); y = np.concatenate(ys)
-        items = np.concatenate(its); values = np.concatenate(vas)
-        ts = np.concatenate(tss)
-        if len(x) == 0:
-            return
-        out_gk, out_cell, out_payload = [], [], []
-        out_nev, out_vs = [], []
-        # once-per-batch precomputation (item hashes are grid-agnostic;
-        # hashing once instead of once per grid level was 18% of task
-        # CPU — guide §1.2 "per-task work")
+        # item hashes are grid-agnostic: hash once per partition, not
+        # once per grid
         prep = kernel.prep_batch(items, values, ts)
-        fast = kernel.build_from_groups
-        from spatialsketch_spark.core.kernels import int_group_sum
-        for kx, ky in grids:
-            keys = (x >> kx) * n + (y >> ky)
-            if fast is not None:
-                # ONE sort per grid (inside np.unique); counts via
-                # bincount, val_sum via integer-exact np.add.at (no
-                # float64-weight bincount — val_sum backs the exact
-                # 'count' query path and must hold past 2^53)
-                uc, inv = np.unique(keys, return_inverse=True)
-                states = fast(uc, inv, items, values, ts, prep)
-                counts = np.bincount(inv, minlength=len(uc)) \
-                    .astype(np.int64)
-                vsums = int_group_sum(inv, values, len(uc))
+        for kx, ky, cells, inv, counts, vsums in pyramid_groups(
+                x, y, values, n, grids):
+            if kernel.build_from_groups is not None:
+                states = kernel.build_from_groups(cells, inv, items,
+                                                  values, ts, prep)
             else:
-                uc, states = kernel.build_grouped(keys, items, values,
-                                                  ts)
-                order = np.argsort(keys, kind="stable")
-                starts = np.searchsorted(keys[order], uc)
-                counts = np.diff(np.append(starts, len(keys))) \
-                    .astype(np.int64)
-                vsums = np.add.reduceat(values[order], starts) \
-                    .astype(np.int64)
-            gk = cfg.grid_key(kx, ky)
-            for c, st, ne, vs in zip(uc.tolist(), states, counts.tolist(),
-                                     vsums.tolist()):
-                out_gk.append(gk)
-                out_cell.append(c)
-                out_payload.append(kernel.serialize(st))
-                out_nev.append(int(ne))
-                out_vs.append(int(vs))
-        yield pd.DataFrame({
-            "grid_key": pd.array(out_gk, dtype="int32"),
-            "cell": pd.array(out_cell, dtype="int64"),
-            "payload": pd.Series(out_payload, dtype=object),
-            "n_events": pd.array(out_nev, dtype="int64"),
-            "val_sum": pd.array(out_vs, dtype="int64"),
-        })
+                _, states = kernel.build_grouped(cells[inv], items,
+                                                 values, ts)
+            offsets, data = kernel.encode_batch(states)
+            gk = np.full(len(cells), cfg.grid_key(kx, ky), np.int32)
+            yield from _sketch_batches(gk, cells, offsets, data, counts,
+                                       vsums)
 
     return fn
 
@@ -127,59 +205,57 @@ def _merge_partitions(cfg: SketchConfig, kind: str):
     """Partition-level merge: after a hash repartition on (grid_key,
     cell), every cell's partials are co-located in one partition, so one
     Python/Arrow round merges *all* cells of the partition — avoiding
-    per-group pandas overhead on hundreds of thousands of tiny groups
-    (the groupBy().applyInPandas() shape would pay ~ms per cell)."""
+    per-group overhead on hundreds of thousands of tiny groups (the
+    groupBy().applyInPandas() shape would pay ~ms per cell)."""
 
     def fn(batches):
-        kernel = make_kernel(kind, cfg)
-        gk_l, cell_l, nev_l, vs_l, pay_l = [], [], [], [], []
-        for pdf in batches:
-            gk_l.append(pdf["grid_key"].to_numpy(np.int64))
-            cell_l.append(pdf["cell"].to_numpy(np.int64))
-            nev_l.append(pdf["n_events"].to_numpy(np.int64))
-            vs_l.append(pdf["val_sum"].to_numpy(np.int64))
-            pay_l.append(pdf["payload"].to_numpy())
-        if not gk_l:
+        # Spark matches output columns by position: pass-through batches
+        # must be in SKETCH_SCHEMA order (a parquet-read table puts its
+        # grid_key partition column last)
+        batches = [b.select(ARROW_SCHEMA.names) for b in batches
+                   if b.num_rows]
+        if not batches:
             return
-        gks = np.concatenate(gk_l)
-        cells = np.concatenate(cell_l)
-        nevs = np.concatenate(nev_l)
-        vss = np.concatenate(vs_l)
-        payloads = np.concatenate(pay_l)
-        if len(gks) == 0:
-            return
-        # vectorized grouping (no per-row python dict fold): sort by
-        # (grid_key, cell); with zorder locality most groups are a
-        # SINGLE partial — those pass their payload bytes through
-        # untouched (the codecs are canonical: serialize(deserialize(b))
-        # == b), skipping the deserialize+merge+serialize round trip
+        gks, cells, nevs, vss = _int64_columns(
+            batches, ("grid_key", "cell", "n_events", "val_sum"))
+        # group by (grid_key, cell); with zorder locality most groups
+        # are a SINGLE partial — those rows pass through in their input
+        # batches untouched (the codecs are canonical:
+        # serialize(deserialize(b)) == b)
         order = np.lexsort((cells, gks))
-        g_s, c_s = gks[order], cells[order]
-        new = np.empty(len(g_s), dtype=bool)
-        new[0] = True
-        new[1:] = (g_s[1:] != g_s[:-1]) | (c_s[1:] != c_s[:-1])
-        starts = np.flatnonzero(new)
-        bounds = np.append(starts, len(g_s))
-        nev_g = np.add.reduceat(nevs[order], starts).astype(np.int64)
-        vs_g = np.add.reduceat(vss[order], starts).astype(np.int64)
-        pay_s = payloads[order]
-        out_payload = []
-        for i in range(len(starts)):
-            s, e = bounds[i], bounds[i + 1]
-            if e - s == 1:
-                out_payload.append(pay_s[s])
-            else:
-                merged = kernel.merge([kernel.deserialize(pay_s[j])
-                                       for j in range(s, e)])
-                out_payload.append(kernel.serialize(merged))
-        yield pd.DataFrame({
-            "grid_key": pd.array(g_s[starts].astype(np.int32),
-                                 dtype="int32"),
-            "cell": pd.array(c_s[starts], dtype="int64"),
-            "payload": pd.Series(out_payload, dtype=object),
-            "n_events": pd.array(nev_g, dtype="int64"),
-            "val_sum": pd.array(vs_g, dtype="int64"),
-        })
+        run = _run_starts(gks[order]) | _run_starts(cells[order])
+        starts = np.flatnonzero(run)
+        sizes = np.diff(np.append(starts, len(order)))
+        multi = sizes > 1
+        if not multi.any():
+            yield from batches
+            return
+        members = order[np.repeat(multi, sizes)]    # grouped, in order
+        first = np.cumsum([0] + [b.num_rows for b in batches])
+        dropped = np.zeros(len(order), dtype=bool)
+        dropped[members] = True
+        for i, b in enumerate(batches):
+            keep = ~dropped[first[i]:first[i + 1]]
+            yield b if keep.all() else b.filter(pa.array(keep))
+        # the multi-partial groups: deserialize, merge, encode once
+        kernel = make_kernel(kind, cfg)
+        views = [_binary_buffers(b.column("payload")) for b in batches]
+        src = np.searchsorted(first, members, side="right") - 1
+        states = []
+        for j, bi in zip((members - first[src]).tolist(), src.tolist()):
+            off, data = views[bi]
+            states.append(kernel.deserialize(
+                data[off[j]:off[j + 1]].tobytes()))
+        k = sizes[multi].tolist()
+        bounds = np.cumsum([0] + k).tolist()
+        merged = [kernel.merge(states[s:e])
+                  for s, e in zip(bounds[:-1], bounds[1:])]
+        offsets, data = kernel.encode_batch(merged)
+        g_start = order[starts[multi]]
+        yield from _sketch_batches(
+            gks[g_start].astype(np.int32), cells[g_start], offsets, data,
+            np.add.reduceat(nevs[order], starts)[multi],
+            np.add.reduceat(vss[order], starts)[multi])
 
     return fn
 
@@ -205,7 +281,6 @@ def build_sketch_df(events: DataFrame, cfg: SketchConfig, kind: str,
       is still handled); the range shuffle moves raw events (small rows)
       instead of sketch blobs.
     """
-    from pyspark.sql import functions as F
     spark = events.sparkSession
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -236,10 +311,10 @@ def build_sketch_df(events: DataFrame, cfg: SketchConfig, kind: str,
         events = events.repartition(num_partitions)
     else:
         raise ValueError(f"unknown build mode {mode!r}")
-    partials = events.mapInPandas(_partial_builder(cfg, kind, min_level),
-                                  schema=SKETCH_SCHEMA)
+    partials = events.mapInArrow(_partial_builder(cfg, kind, min_level),
+                                 schema=SKETCH_SCHEMA)
     return partials.repartition(num_partitions, "grid_key", "cell") \
-        .mapInPandas(_merge_partitions(cfg, kind), schema=SKETCH_SCHEMA)
+        .mapInArrow(_merge_partitions(cfg, kind), schema=SKETCH_SCHEMA)
 
 
 class SketchStore:
@@ -301,20 +376,13 @@ class SketchStore:
             df = spark.read.parquet(f"{path}/sketch")
         else:
             df = df.cache()
-            df.count()      # materialize inside the timed core section
+        stats = cls._table_stats(df)    # materializes the cache
         build_core_wall = time.time() - t0
         # per-partition input lineage (north_rule: per-partition lineage
-        # + sketch-merge metrics in the checkpoint manifest) and table
-        # stats — bookkeeping jobs, outside the timed core build
-        lineage = [
-            {"partition": int(r["pid"]), "events": int(r["cnt"])}
-            for r in events.groupBy(
-                F.spark_partition_id().alias("pid")).count()
-            .withColumnRenamed("count", "cnt").collect()
-        ]
-        fingerprint = cls.fingerprint_events(events)
-        stats = df.agg(F.count("*").alias("cells"),
-                       F.sum("n_events").alias("merged_events")).collect()[0]
+        # + sketch-merge metrics in the checkpoint manifest) and the
+        # input fingerprint — one bookkeeping job, outside the timed
+        # core build
+        lineage, fingerprint = cls._input_stats(events)
         manifest = {
             "kind": kind,
             "min_level": min_level,
@@ -323,11 +391,10 @@ class SketchStore:
                     "seed": cfg.seed, "exact": cfg.exact,
                     "item_domain": cfg.item_domain,
                     "dropped_grids": sorted(cfg.dropped_grids)},
-            "lineage": sorted(lineage, key=lambda r: r["partition"]),
+            "lineage": lineage,
             "metrics": {
-                "input_events": int(sum(r["events"] for r in lineage)),
-                "sketch_cells": int(stats["cells"]),
-                "merged_events": int(stats["merged_events"]),
+                "input_events": fingerprint["n_events"],
+                **stats,
                 "build_wall_s": round(time.time() - t0, 3),
                 "build_core_wall_s": round(build_core_wall, 3),
                 "build_mode": mode,
@@ -407,25 +474,45 @@ class SketchStore:
                    path)
 
     @staticmethod
-    def fingerprint_events(events: DataFrame) -> dict:
-        """Partitioning-invariant input identity: row count, ts range,
-        and an order-invariant SUM of per-row xxhash64 (accumulated in
-        decimal(38,0) so it never overflows, then reduced mod 2^64).
-        Sum, not XOR: XOR of per-row hashes cancels pairwise, so two
-        inputs differing only in which rows are duplicated would
-        collide — sum is multiplicity-sensitive. Recorded in the
-        manifest and compared on resume so a stale snapshot built from
-        *different data* is never silently served."""
-        fp = events.agg(
+    def _table_stats(df: DataFrame) -> dict:
+        """Sketch-table size metrics for the manifest, in one job."""
+        r = df.agg(F.count("*").alias("cells"),
+                   F.sum("n_events").alias("merged_events")).collect()[0]
+        return {"sketch_cells": int(r["cells"]),
+                "merged_events": int(r["merged_events"] or 0)}
+
+    @staticmethod
+    def _input_stats(events: DataFrame) -> tuple[list[dict], dict]:
+        """(per-partition lineage, input fingerprint) from one
+        aggregation job over ``events``: each input partition's row
+        count, ts range and hash sum, combined on the driver."""
+        rows = events.groupBy(F.spark_partition_id().alias("pid")).agg(
             F.count("*").alias("n"), F.min("ts").alias("tmin"),
             F.max("ts").alias("tmax"),
             F.sum(F.xxhash64("ts", "item", "x", "y", "value")
-                  .cast("decimal(38,0)")).alias("sh")).collect()[0]
-        return {"n_events": int(fp["n"]),
-                "min_ts": int(fp["tmin"]) if fp["tmin"] is not None else None,
-                "max_ts": int(fp["tmax"]) if fp["tmax"] is not None else None,
-                "sum_hash": int(fp["sh"]) % (1 << 64)
-                if fp["sh"] is not None else None}
+                  .cast("decimal(38,0)")).alias("sh")).collect()
+        lineage = sorted(({"partition": int(r["pid"]), "events": int(r["n"])}
+                          for r in rows), key=lambda r: r["partition"])
+        tmin = [int(r["tmin"]) for r in rows if r["tmin"] is not None]
+        tmax = [int(r["tmax"]) for r in rows if r["tmax"] is not None]
+        sh = [int(r["sh"]) for r in rows if r["sh"] is not None]
+        return lineage, {
+            "n_events": sum(r["events"] for r in lineage),
+            "min_ts": min(tmin) if tmin else None,
+            "max_ts": max(tmax) if tmax else None,
+            "sum_hash": sum(sh) % (1 << 64) if sh else None}
+
+    @classmethod
+    def fingerprint_events(cls, events: DataFrame) -> dict:
+        """Partitioning-invariant input identity: row count, ts range,
+        and an order-invariant SUM of per-row xxhash64 (summed exactly,
+        then reduced mod 2^64). Sum, not XOR: XOR of per-row hashes
+        cancels pairwise, so two inputs differing only in which rows are
+        duplicated would collide — sum is multiplicity-sensitive.
+        Recorded in the manifest and compared on resume so a stale
+        snapshot built from *different data* is never silently
+        served."""
+        return cls._input_stats(events)[1]
 
     @staticmethod
     def _combine_fingerprints(fa: dict, fb: dict) -> dict:
@@ -483,8 +570,8 @@ class SketchStore:
                                 self.min_level, mode=mode)
         merged = (self.df.unionByName(delta)
                   .repartition(p, "grid_key", "cell")
-                  .mapInPandas(_merge_partitions(self.cfg, self.kind),
-                               schema=SKETCH_SCHEMA))
+                  .mapInArrow(_merge_partitions(self.cfg, self.kind),
+                              schema=SKETCH_SCHEMA))
         seq = int(self.manifest.get("snapshot_seq", 0)) + 1
         if self.path:
             # optimistic concurrency (Iceberg commit semantics): the
@@ -511,31 +598,20 @@ class SketchStore:
         else:
             data_dir = None
             merged = merged.cache()
-            merged.count()
-        delta_fp = self.fingerprint_events(new_events)
-        delta_lineage = [
-            {"partition": int(r["pid"]), "events": int(r["cnt"]),
-             "snapshot_seq": seq}
-            for r in new_events.groupBy(
-                F.spark_partition_id().alias("pid")).count()
-            .withColumnRenamed("count", "cnt").collect()
-        ]
-        stats = merged.agg(
-            F.count("*").alias("cells"),
-            F.sum("n_events").alias("merged_events")).collect()[0]
+        stats = self._table_stats(merged)   # materializes the cache
+        delta_lineage, delta_fp = self._input_stats(new_events)
+        for r in delta_lineage:
+            r["snapshot_seq"] = seq
         manifest = dict(self.manifest)
         manifest["input_fingerprint"] = self._combine_fingerprints(
             self.manifest["input_fingerprint"], delta_fp)
         manifest["snapshot_seq"] = seq
         manifest["parent_data_dir"] = self.manifest.get(
             "data_dir", "sketch" if self.path else None)
-        manifest["lineage"] = (self.manifest.get("lineage", [])
-                               + sorted(delta_lineage,
-                                        key=lambda r: r["partition"]))
+        manifest["lineage"] = self.manifest.get("lineage", []) + delta_lineage
         manifest["metrics"] = dict(self.manifest.get("metrics", {}))
         manifest["metrics"].update({
-            "sketch_cells": int(stats["cells"]),
-            "merged_events": int(stats["merged_events"]),
+            **stats,
             "input_events": (self.manifest.get("metrics", {})
                              .get("input_events", 0)
                              + delta_fp["n_events"]),

@@ -82,17 +82,11 @@ class StreamingSketch:
                                    self.min_level, mode="partials")
         partials.write.mode("overwrite") \
             .parquet(f"{self.batches_dir}/b{int(batch_id)}")
-        lineage = [
-            {"partition": int(r["pid"]), "events": int(r["cnt"]),
-             "batch_id": int(batch_id)}
-            for r in batch_df.groupBy(
-                F.spark_partition_id().alias("pid")).count()
-            .withColumnRenamed("count", "cnt").collect()
-        ]
-        meta = {"batch_id": int(batch_id),
-                "fingerprint": SketchStore.fingerprint_events(batch_df),
-                "lineage": sorted(lineage, key=lambda r: r["partition"]),
-                "ts": time.time()}
+        lineage, fingerprint = SketchStore._input_stats(batch_df)
+        for r in lineage:
+            r["batch_id"] = int(batch_id)
+        meta = {"batch_id": int(batch_id), "fingerprint": fingerprint,
+                "lineage": lineage, "ts": time.time()}
         with open(f"{self.batches_dir}/b{int(batch_id)}.json", "w") as f:
             json.dump(meta, f, sort_keys=True)
 
@@ -168,7 +162,7 @@ class StreamingSketch:
         fp, lineage, last_batch = self._accumulated_state()
         df = self.sketch_df()
         nparts = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        merged = df.repartition(nparts, "grid_key", "cell").mapInPandas(
+        merged = df.repartition(nparts, "grid_key", "cell").mapInArrow(
             _merge_partitions(self.cfg, self.kind), schema=SKETCH_SCHEMA)
         seq = int(man.get("snapshot_seq", -1)) + 1
         data_dir = f"sketch_s{seq}"
@@ -188,9 +182,6 @@ class StreamingSketch:
         merged.write.mode("overwrite").partitionBy("grid_key") \
               .parquet(f"{self.path}/{data_dir}")
         out = self.spark.read.parquet(f"{self.path}/{data_dir}")
-        stats = out.agg(
-            F.count("*").alias("cells"),
-            F.sum("n_events").alias("merged_events")).collect()[0]
         cfg = self.cfg
         manifest = {
             "kind": self.kind,
@@ -208,8 +199,7 @@ class StreamingSketch:
             "lineage": lineage,
             "metrics": {
                 "input_events": fp["n_events"],
-                "sketch_cells": int(stats["cells"]),
-                "merged_events": int(stats["merged_events"]),
+                **SketchStore._table_stats(out),
                 "build_wall_s": round(time.time() - t0, 3),
                 "build_mode": "streaming_compact",
             },

@@ -623,3 +623,23 @@ def test_multires_rollup_cascade_equals_flat(spark):
             flat[key] = flat.get(key, 0) + int(v)
         assert got[s] == flat
         assert sum(got[s].values()) == total
+
+
+@pytest.mark.parametrize("bad", [{"x": N}, {"y": -1}])
+def test_build_rejects_out_of_grid_events(spark, bad):
+    """x or y outside [0, N) has no cell: the partial builder raises
+    instead of aliasing the event into a neighbouring cell key."""
+    import pyarrow as pa
+    from spatialsketch_spark.geo.build import _partial_builder
+    cfg = SketchConfig.realistic(n=N, item_domain=ITEM_DOMAIN)
+    row = {"ts": 1, "item": 3, "x": 5, "y": 7, "value": 1, **bad}
+    batch = pa.RecordBatch.from_pydict(
+        {k: pa.array([v], pa.int64()) for k, v in row.items()})
+    name = next(iter(bad))
+    with pytest.raises(ValueError, match=f"event {name} outside"):
+        list(_partial_builder(cfg, "cm", MIN_LEVEL)(iter([batch])))
+    df = spark.createDataFrame([tuple(row.values())],
+                               "ts BIGINT, item BIGINT, x BIGINT, y BIGINT, "
+                               "value BIGINT")
+    with pytest.raises(Exception, match=f"event {name} outside"):
+        SketchStore.build(spark, df, cfg, "cm", MIN_LEVEL)

@@ -541,3 +541,147 @@ def test_elastic_build_cost_bound():
     _, st2 = kern2.build_grouped(cells, items2, vals, ts)
     rate2 = n / (time.perf_counter() - t0)
     assert rate2 > 30_000, f"elastic contended build: {rate2:,.0f} ev/s"
+
+
+def _cm_encode_cases(cm):
+    """(C, d, w) counter stacks covering every CM payload layout."""
+    rng = np.random.default_rng(21)
+    size = cm.d * cm.w
+    st = np.zeros((7, cm.d, cm.w), dtype=np.int64)       # row 0: all zero
+    st[1].flat[[0, size - 1]] = [5, -3]                  # sparse
+    st[2].flat[:size // 2] = 1                           # nnz*2 == d*w: dense
+    st[3].flat[:size // 2 - 1] = 2                       # one below: sparse
+    st[4] = rng.integers(1, 50, (cm.d, cm.w))            # full dense
+    st[5].flat[rng.choice(size, size // 3, replace=False)] = 7
+    st[6].flat[size // 2:] = rng.integers(1, 9, size - size // 2)
+    return st
+
+
+def test_cm_encode_batch_matches_serialize():
+    """The vectorized CM encoder writes the same canonical CMS/CMD bytes
+    as serialize(), cell for cell: sparse and dense cells, the
+    nnz*2 == d*w boundary and all-zero counters."""
+    cm = CMKernel(width=28, depth=3, seed=7)
+    st = _cm_encode_cases(cm)
+    assert np.count_nonzero(st[2]) * 2 == st[2].size
+    for states in (st, st[::-1], st[:1], st[:0], list(st)):
+        offsets, data = cm.encode_batch(states)
+        want = [cm.serialize(s) for s in states]
+        assert offsets[0] == 0 and offsets[-1] == len(data)
+        got = [data[a:b].tobytes() for a, b in zip(offsets[:-1],
+                                                   offsets[1:])]
+        assert got == want
+    # the boundary case really is dense, its neighbour sparse
+    assert cm.serialize(st[2])[:3] == b"CMD"
+    assert cm.serialize(st[3])[:3] == b"CMS"
+
+
+def test_default_encode_batch_matches_serialize():
+    fm = FMKernel(eps=0.25, delta=0.05, seed=7)
+    cells, items, values, ts = rand_events(500, 1000, seed=4)
+    _, states = fm.build_grouped(cells, items, values, ts)
+    offsets, data = fm.encode_batch(states)
+    assert [data[a:b].tobytes() for a, b in zip(offsets[:-1], offsets[1:])] \
+        == [fm.serialize(s) for s in states]
+
+
+def test_cm_deserialize_rejects_unknown_magic():
+    import pickle
+    cm = CMKernel(width=28, depth=3, seed=7)
+    legacy = pickle.dumps(("d", np.zeros((3, 28), dtype=np.int64)))
+    for blob in (legacy, b"XK1\x00\x00\x00\x00\x00" + bytes(16)):
+        with pytest.raises(ValueError, match="not a CM payload"):
+            cm.deserialize(blob)
+        with pytest.raises(ValueError, match="not a CM payload"):
+            cm.deserialize_batch([blob])
+
+
+@pytest.mark.parametrize("dropped", [frozenset(),
+                                     frozenset({(0, 0), (0, 3), (2, 1),
+                                                (4, 4), (6, 0), (3, 6)})])
+def test_pyramid_groups_equal_per_grid_unique(dropped):
+    """One sort per x-level, coarser y-levels derived from the finer
+    level's cells == an independent np.unique per grid (N=64,
+    min_level 0, with and without dropped grids)."""
+    from spatialsketch_spark.config import SketchConfig
+    from spatialsketch_spark.geo.build import live_grids, pyramid_groups
+    n = 64
+    cfg = SketchConfig.realistic(n=n, dropped_grids=dropped)
+    rng = np.random.default_rng(5)
+    x = rng.integers(0, n, 3000)
+    y = np.minimum(rng.geometric(0.05, 3000) - 1, n - 1)
+    values = rng.integers(-3, 10, 3000)
+    grids = live_grids(cfg, 0)
+    seen = []
+    for kx, ky, cells, inv, counts, vsums in pyramid_groups(
+            x, y, values, n, grids):
+        seen.append((kx, ky))
+        uc, uinv = np.unique((x >> kx) * n + (y >> ky), return_inverse=True)
+        np.testing.assert_array_equal(cells, uc)
+        np.testing.assert_array_equal(inv, uinv)
+        np.testing.assert_array_equal(counts, np.bincount(uinv))
+        np.testing.assert_array_equal(
+            vsums, np.bincount(uinv, weights=values).astype(np.int64))
+    assert sorted(seen) == sorted(grids)
+
+
+def test_sketch_batches_split_payload_bytes():
+    """Payload columns carry int32 offsets: rows are cut into batches
+    that each stay within the byte limit, losing nothing."""
+    from spatialsketch_spark.geo.build import _sketch_batches
+    blobs = [bytes([i]) * (i + 1) for i in range(10)]
+    offsets = np.concatenate([[0], np.cumsum([len(b) for b in blobs])])
+    data = np.frombuffer(b"".join(blobs), np.uint8)
+    ar = np.arange(10, dtype=np.int64)
+    batches = list(_sketch_batches(ar.astype(np.int32), ar, offsets, data,
+                                   ar, ar, max_bytes=12))
+    assert len(batches) > 1
+    assert all(sum(len(p) for p in b.column("payload").to_pylist()) <= 12
+               for b in batches)
+    assert [p for b in batches for p in b.column("payload").to_pylist()] \
+        == blobs
+    assert [c for b in batches for c in b.column("cell").to_pylist()] \
+        == ar.tolist()
+    with pytest.raises(ValueError, match="exceeds"):
+        list(_sketch_batches(ar.astype(np.int32), ar, offsets, data, ar, ar,
+                             max_bytes=5))
+
+
+@pytest.mark.parametrize("kind", ["cm", "fm"])
+def test_spark_build_equals_reference_table(spark, kind):
+    """A Spark build (Arrow partials, vectorized CM encoder / default
+    encoder for FM, merge of partials across 3 partitions) equals a
+    table assembled per grid from build_grouped + serialize."""
+    from spatialsketch_spark.config import SketchConfig
+    from spatialsketch_spark.core.kernels import make_kernel
+    from spatialsketch_spark.geo.build import build_sketch_df, live_grids
+    n = 64
+    cfg = SketchConfig.realistic(n=n, item_domain=500,
+                                 dropped_grids=frozenset({(1, 2)}))
+    rng = np.random.default_rng(8)
+    m = 4000
+    ev = {"ts": np.arange(m, dtype=np.int64),
+          "item": rng.integers(0, 500, m).astype(np.int64),
+          "x": rng.integers(0, n, m).astype(np.int64),
+          "y": np.minimum(rng.geometric(0.04, m) - 1, n - 1).astype(np.int64),
+          "value": rng.integers(1, 4, m).astype(np.int64)}
+    df = spark.createDataFrame(
+        list(zip(*(ev[c].tolist() for c in ev))),
+        "ts BIGINT, item BIGINT, x BIGINT, y BIGINT, value BIGINT")
+    got = sorted((r["grid_key"], r["cell"], bytes(r["payload"]),
+                  r["n_events"], r["val_sum"])
+                 for r in build_sketch_df(df, cfg, kind, 1, num_partitions=3,
+                                          mode="partials").collect())
+    kernel = make_kernel(kind, cfg)
+    want = []
+    for kx, ky in live_grids(cfg, 1):
+        keys = (ev["x"] >> kx) * n + (ev["y"] >> ky)
+        uc, states = kernel.build_grouped(keys, ev["item"], ev["value"],
+                                          ev["ts"])
+        _, inv = np.unique(keys, return_inverse=True)
+        cnt = np.bincount(inv)
+        vs = np.bincount(inv, weights=ev["value"]).astype(np.int64)
+        want += [(cfg.grid_key(kx, ky), int(c), kernel.serialize(s),
+                  int(cnt[i]), int(vs[i]))
+                 for i, (c, s) in enumerate(zip(uc.tolist(), states))]
+    assert got == sorted(want)

@@ -39,7 +39,7 @@ def test_build_is_two_shuffles(spark):
     ev = derive_geo_events(spark, SF_ORACLE, N, spread=False)
     p = formatted(build_sketch_df(ev, cfg, "exact", 4, mode="zorder"))
     assert n_exchanges(p) == 2, p
-    assert p.count("MapInPandas") >= 2           # partial build + merge
+    assert p.count("MapInArrow") >= 2            # partial build + merge
     assert "rangepartitioning" in p              # z-order locality
 
 
