@@ -127,8 +127,9 @@ class ExactKernel(BaseKernel):
                          np.ascontiguousarray(state["ts"], np.int64).tobytes()))
 
     def deserialize(self, blob: bytes):
-        if blob[:8] != self._MAGIC:           # legacy pickle payloads
-            return pickle.loads(blob)
+        if blob[:8] != self._MAGIC:
+            raise ValueError(
+                f"not an exact payload (magic {bytes(blob[:8])!r})")
         n = int(np.frombuffer(blob, np.int64, 1, 8)[0])
         return {"items": np.frombuffer(blob, np.int64, n, 16),
                 "values": np.frombuffer(blob, np.int64, n, 16 + 8 * n),
@@ -807,7 +808,7 @@ class ElasticKernel(BaseKernel):
         profile. Flat layout: header (b, lw, n_keys), per-bucket entry
         counts, then keys/counts/flags in bucket-dict order (order
         preserved, so serialize∘deserialize is byte-stable), guard,
-        light. Legacy pickle payloads still deserialize."""
+        light."""
         heavy = state["heavy"]
         counts = np.array([len(bkt) for bkt in heavy], dtype=np.int64)
         keys, cnts, flags = [], [], []
@@ -827,7 +828,8 @@ class ElasticKernel(BaseKernel):
 
     def deserialize(self, blob: bytes):
         if blob[:8] != self._MAGIC:
-            return pickle.loads(blob)                 # legacy payloads
+            raise ValueError(
+                f"not an elastic payload (magic {bytes(blob[:8])!r})")
         b, lw, nk = (int(v) for v in np.frombuffer(blob, np.int64, 3, 8))
         off = 32
         counts = np.frombuffer(blob, np.int64, b, off); off += 8 * b

@@ -461,14 +461,8 @@ def _frac_envelope(spark: SparkSession, sf_dir: str, eng,
     truth = (ev.join(F.broadcast(rects), cond)
              .groupBy("qid").agg(F.sum("value").alias("truth")))
 
-    cover_pdf = eng.cover_rows(qs)
-    import pandas as pd
-    cover = spark.createDataFrame(
-        pd.DataFrame(cover_pdf,
-                     columns=["qid", "grid_key", "cell", "coverage",
-                              "qkind", "item", "item_end", "t0"]),
-        schema=("qid BIGINT, grid_key INT, cell BIGINT, coverage DOUBLE, "
-                "qkind STRING, item BIGINT, item_end BIGINT, t0 BIGINT"))
+    cover = (eng._cover_df([(q.qid, q.ranges) for q in qs])
+             .withColumnRenamed("pid", "qid"))
     bound = (st.df.join(F.broadcast(
                  cover.where(F.col("coverage") < 1.0)
                  .select("qid", "grid_key", "cell")),

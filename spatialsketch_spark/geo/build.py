@@ -424,9 +424,7 @@ class SketchStore:
         """Committed-snapshot history, oldest first — the time-travel
         catalog (Iceberg ``table.snapshots()``). Each entry is the full
         manifest committed at that seq; data dirs of old snapshots stay
-        readable, so any entry can be opened with ``load(at_seq=...)``.
-        Falls back to the single current manifest for stores written
-        before per-snapshot metadata existed."""
+        readable, so any entry can be opened with ``load(at_seq=...)``."""
         import re
         try:
             names = os.listdir(path)
@@ -437,9 +435,6 @@ class SketchStore:
         out = []
         for s in seqs:
             with open(f"{path}/manifest_s{s}.json") as f:
-                out.append(json.load(f))
-        if not out and "manifest.json" in names:    # legacy layout
-            with open(f"{path}/manifest.json") as f:
                 out.append(json.load(f))
         return out
 

@@ -2,28 +2,42 @@
 ``SpatialSketch::QueryRanges`` (SpatialSketch.cpp:837-855 dispatch and
 the per-sketch query kernels C6-C10 in SURVEY.md §2).
 
-Per query: polygon -> rectangles (driver, Partitioner) -> dyadic cover
+Per batch: polygon -> rectangles (driver, Partitioner) -> dyadic cover
 rewritten against live grids (driver, effective_cover — replaces the
-reference's dropped-grid recursion SpatialSketch.cpp:802-832) -> a tiny
-cover DataFrame broadcast-joined against the sketch table ->
-groupBy(qid).applyInPandas finisher (deserialize the <= O(log^2 N)
-matched cells, merge, estimate). Catalyst sees: parquet scan with
-grid_key IN (...) partition pruning -> BroadcastHashJoin -> one small
-shuffle on qid.
+reference's dropped-grid recursion SpatialSketch.cpp:802-832), expanded
+once per distinct rect-set ("pid") into one Arrow cover table -> join
+against the sketch table pruned to the cover's grid keys (broadcast, or
+a shuffle against the bucketed cache past BROADCAST_COVER_ROWS) -> ONE
+matched relation (pid, coverage, sketch columns). Per-query metadata
+never enters the plan; it travels in the task closure of
+``_partials``, which answers both query classes from that relation:
+
+  additive kinds: one mapInPandas estimates every (cell, query) pair
+            where the join output lives and emits per-partition
+            (qid, partial) sums — only scalars leave the task.
+  merge kinds: repartition(pid) -> mapInPandas merges each rect-set's
+            de-duplicated cell states once, then answers its queries.
+
+``query()`` sums the partials per qid as a DataFrame; ``query_values()``
+collects them and folds on the driver.
 
 Query kinds and their reference semantics:
+  count     sum over cells of trunc(coverage * cell value sum), from the
+            val_sum column (reference 'Count' synopsis, Table 3a)
   freq      sum over cells of trunc(coverage * min-row CM estimate)
             (QueryFrequency SpatialSketch.cpp:857-896; trunc-to-int per
             sub-query :766,781-792)
   range_freq same with an item range via per-cell dyadic-CM
             (DyadCountMin Query path)
+  window    ECM HistSum per cell with t0, min over rows, coverage-scaled
+            (ECM query path :1175-1221)
   distinct  OR-merge FM bitmaps across cells, then estimate
             (QueryCountDistinct :947-994)
   member    BF probe per cell, any-positive (QueryMembership :1050-1089)
   l2        elementwise-add CM counters across cells, then min-row
             sum-of-squares (QueryRangesL2 :1142-1173)
-  window    ECM HistSum per cell with t0, min over rows, coverage-scaled
-            (ECM query path :1175-1221)
+  window_merge merge the cells' ECM histograms, then one HistSum
+            (ECM_merge mode :1175-1221)
 
 The ``exact`` kernel answers every kind exactly (collision-free mode) —
 that is what the DuckDB oracle gate exercises.
@@ -31,28 +45,45 @@ that is what the DuckDB oracle gate exercises.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from functools import reduce
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
-from ..core.dyadic import effective_cover
+from ..core.dyadic import cover_2d_np, effective_cover
 from ..core.kernels import int_group_sum, make_kernel
 from ..core.partitioner import Shape, shape_to_ranges
 from .build import SketchStore
 
 COVER_SCHEMA = "pid BIGINT, grid_key INT, cell BIGINT, coverage DOUBLE"
-QMAP_SCHEMA = ("pid BIGINT, qid BIGINT, qkind STRING, item BIGINT, "
-               "item_end BIGINT, t0 BIGINT")
 RESULT_SCHEMA = "qid BIGINT, est BIGINT"
+
+# qkind -> kernels that answer it (None: any kernel, from val_sum).
+# Checked for every query up front: a range_freq at a plain-CM store
+# would otherwise silently return point-frequency estimates.
+QKIND_KERNELS = {
+    "count": None,
+    "freq": {"exact", "cm", "ecm", "elastic"},
+    "range_freq": {"exact", "dcm"},
+    "window": {"exact", "ecm"},
+    "window_merge": {"exact", "ecm"},
+    "distinct": {"exact", "fm"},
+    "member": {"exact", "bf"},
+    "l2": {"exact", "cm"},
+}
+# sum over cells of trunc(coverage * cell estimate); every other kind
+# merges the cells' states before estimating
+ADDITIVE = frozenset({"count", "freq", "range_freq", "window"})
 
 
 @dataclass
 class QuerySpec:
     qid: int
     ranges: list          # [(x1, y1, x2, y2)] inclusive integer cell ranges
-    qkind: str = "freq"   # freq | range_freq | distinct | member | l2 | window
+    qkind: str = "freq"   # a QKIND_KERNELS key
     item: int = -1
     item_end: int = -1
     t0: int = -1
@@ -65,54 +96,29 @@ class QuerySpec:
                          qkind, item, item_end, t0)
 
 
-def _estimate_one(kernel, pdf: pd.DataFrame) -> int:
-    """Estimate for ONE query's matched cover cells."""
-    qkind = pdf["qkind"].iloc[0]
-    item = int(pdf["item"].iloc[0])
-    item_end = int(pdf["item_end"].iloc[0])
-    t0 = int(pdf["t0"].iloc[0])
-    states = [kernel.deserialize(b) for b in pdf["payload"]]
-    covs = pdf["coverage"].to_numpy()
-    if qkind == "count":
-        # region total (no item predicate) — exact from any kernel
-        # exposing query_total (reference 'Count' synopsis, Table 3a)
-        est = 0
-        for st, cov in zip(states, covs):
-            est += int(cov * kernel.query_total(st))
-    elif qkind in ("freq", "window"):
-        tt = t0 if (qkind == "window" and t0 >= 0) else None
-        ie = item_end if item_end >= 0 else None
-        est = 0
-        for st, cov in zip(states, covs):
-            e = kernel.query_item(st, item, ie, tt)
-            est += int(cov * e)           # trunc per sub-query (:766)
-    elif qkind == "range_freq":
-        est = 0
-        for st, cov in zip(states, covs):
-            if kernel.kind == "dcm":
-                e = kernel.query_range(st, item, item_end)
-            else:
-                e = kernel.query_item(st, item, item_end)
-            est += int(cov * e)
-    elif qkind == "distinct":
+def _estimate_one(kernel, states: list, q: QuerySpec) -> int:
+    """Merge-kind estimate for ONE query over its rect-set's cell
+    states. Fractional coverage is intentionally ignored (a merged
+    bitmap/filter/counter set has no meaningful scalar scaling)."""
+    if q.qkind == "distinct":
         if kernel.kind == "exact":
             allitems = np.unique(np.concatenate(
                 [kernel.distinct_items(st) for st in states]))
             est = int(len(allitems))
         else:                              # FM: OR-merge then estimate
             est = int(round(kernel.estimate(kernel.merge(states))))
-    elif qkind == "member":
-        hit = any(kernel.member(st, item) for st in states)
+    elif q.qkind == "member":
+        hit = any(kernel.member(st, q.item) for st in states)
         est = 1 if hit else 0
-    elif qkind == "window_merge":
+    elif q.qkind == "window_merge":
         # reference ECM_merge mode (SpatialSketch.cpp:1175-1221):
         # merge the cover cells' histograms first (MergeECM arrival
         # reconstruction), then one HistSum min-over-rows
         merged = states[0] if len(states) == 1 else kernel.merge(states)
-        est = kernel.query_item(merged, item,
-                                item_end if item_end >= 0 else None,
-                                t0 if t0 >= 0 else None)
-    elif qkind == "l2":
+        est = kernel.query_item(merged, q.item,
+                                q.item_end if q.item_end >= 0 else None,
+                                q.t0 if q.t0 >= 0 else None)
+    elif q.qkind == "l2":
         if kernel.kind == "exact":
             parts = [kernel.query_l2_counts(st) for st in states]
             allit = np.concatenate([p["items"] for p in parts])
@@ -123,148 +129,90 @@ def _estimate_one(kernel, pdf: pd.DataFrame) -> int:
         else:                              # CM: merge counters, L2 min-row
             est = int(kernel.l2_estimate(kernel.merge(states)))
     else:
-        raise ValueError(f"unknown qkind {qkind!r}")
+        raise ValueError(f"unknown merge qkind {q.qkind!r}")
     return int(est)
 
 
-def _additive_batch_ests(kernel, pdf: pd.DataFrame) -> np.ndarray:
-    """Per-matched-row estimates for one Arrow batch, vectorized per
-    kernel kind (the per-row pickle.loads + Python dispatch loop this
-    replaces was the dominant query-side cost at large batch sizes)."""
-    items = pdf["item"].to_numpy(np.int64)
-    iends = pdf["item_end"].to_numpy(np.int64)
-    t0s = pdf["t0"].to_numpy(np.int64)
-    payloads = pdf["payload"]
-    n = len(pdf)
+def _additive_ests(kernel, payloads: pd.Series, val_sum: np.ndarray,
+                   row: np.ndarray, qkind: np.ndarray, item: np.ndarray,
+                   item_end: np.ndarray, t0: np.ndarray) -> np.ndarray:
+    """Per-(cell, query) estimates before coverage scaling. Entry e
+    pairs matched row ``row[e]`` with the query fields ``qkind[e]``,
+    ``item[e]``, ... ; count entries read val_sum, every other entry its
+    row's payload, deserialized once however many entries read it."""
+    ests = np.zeros(len(row), dtype=np.int64)
+    is_cnt = qkind == "count"
+    ests[is_cnt] = val_sum[row[is_cnt]]
+    sel = ~is_cnt
+    if not sel.any():
+        return ests
+    urows, u = np.unique(row[sel], return_inverse=True)
+    blobs = payloads.iloc[urows].reset_index(drop=True)
+    qk, it, ie, tt = qkind[sel], item[sel], item_end[sel], t0[sel]
     if kernel.kind == "cm":
-        # mirror CMKernel.query_item's guards so a malformed QuerySpec
-        # fails loudly on the batch path too, not just the scalar one
-        bad_range = (iends >= 0) & (iends != items)
-        if bad_range.any():
+        # the scalar CMKernel.query_item guards, on the batch: item_end
+        # == item is a degenerate point freq and is accepted
+        if ((ie >= 0) & (ie != it)).any():
             raise ValueError("CM answers point frequencies only; item "
                              "ranges need a 'dcm' (or exact-mode) store")
-        if (t0s > 0).any():
+        if (tt > 0).any():
             raise ValueError("CM has no time dimension; window queries "
                              "need an 'ecm' (or exact-mode) store")
-        counters = kernel.deserialize_batch(payloads)
-        return kernel.query_items_batch(counters, items)
+        # one (B, d, w) counter stack, probed through the entry index
+        counters = kernel.deserialize_batch(blobs)
+        h = kernel.hash(it)                                   # (d, E)
+        ests[sel] = counters[u[:, None], np.arange(kernel.d)[None, :],
+                             h.T].min(axis=1)
+        return ests
+    states = [kernel.deserialize(b) for b in blobs]
     if kernel.kind == "exact":
-        # one concatenated pass: row-id-tagged masks answer freq /
+        # one concatenated pass: entry-tagged masks answer freq /
         # range_freq / window together (exact state = event arrays)
-        states = [kernel.deserialize(b) for b in payloads]
-        lens = np.fromiter((len(s["items"]) for s in states),
-                           dtype=np.int64, count=n)
+        ents = [states[i] for i in u.tolist()]
+        lens = np.fromiter((len(s["items"]) for s in ents),
+                           dtype=np.int64, count=len(ents))
         if int(lens.sum()) == 0:
-            return np.zeros(n, dtype=np.int64)
-        row = np.repeat(np.arange(n), lens)
-        allit = np.concatenate([s["items"] for s in states])
-        allva = np.concatenate([s["values"] for s in states])
-        allts = np.concatenate([s["ts"] for s in states])
-        lo = items[row]
-        hi = np.where(iends >= 0, iends, items)[row]
-        m = (allit >= lo) & (allit <= hi)
-        qk = pdf["qkind"].to_numpy()
-        twin = np.where((qk == "window") & (t0s >= 0), t0s,
-                        np.iinfo(np.int64).min)[row]
-        m &= allts >= twin
-        return int_group_sum(row[m], allva[m], n)
-    # dcm / ecm: per-row (bounded: dyadic item covers / EH folds)
-    out = np.empty(n, dtype=np.int64)
-    qkinds = pdf["qkind"].to_numpy()
-    for i in range(n):
-        st = kernel.deserialize(payloads.iloc[i])
-        item, ie, tt = int(items[i]), int(iends[i]), int(t0s[i])
-        if qkinds[i] == "range_freq" and kernel.kind == "dcm":
-            out[i] = kernel.query_range(st, item, ie)
+            return ests
+        ent = np.repeat(np.arange(len(ents)), lens)
+        allit = np.concatenate([s["items"] for s in ents])
+        allva = np.concatenate([s["values"] for s in ents])
+        allts = np.concatenate([s["ts"] for s in ents])
+        m = (allit >= it[ent]) & (allit <= np.where(ie >= 0, ie, it)[ent])
+        twin = np.where((qk == "window") & (tt >= 0), tt,
+                        np.iinfo(np.int64).min)
+        m &= allts >= twin[ent]
+        ests[sel] = int_group_sum(ent[m], allva[m], len(ents))
+        return ests
+    # dcm / ecm / elastic: per entry (bounded: dyadic item covers / EH
+    # folds)
+    out = np.empty(len(u), dtype=np.int64)
+    for e, i in enumerate(u.tolist()):
+        a, b, t = int(it[e]), int(ie[e]), int(tt[e])
+        if qk[e] == "range_freq" and kernel.kind == "dcm":
+            out[e] = kernel.query_range(states[i], a, b)
         else:
-            out[i] = kernel.query_item(st, item,
-                                       ie if ie >= 0 else None,
-                                       tt if tt >= 0 else None)
-    return out
+            out[e] = kernel.query_item(states[i], a,
+                                       b if b >= 0 else None,
+                                       t if t >= 0 else None)
+    ests[sel] = out
+    return ests
 
 
-def _additive_estimator(cfg, kind: str, with_counts: bool = False):
-    """Pre-shuffle partial sums for additive query kinds: compute
-    trunc(coverage * per-cell estimate) for every matched row in place,
-    emit one (qid, partial_sum) row per qid per partition. The payload
-    column never crosses a shuffle.
-
-    With ``with_counts`` the same pass also answers 'count' rows from
-    their val_sum column (their payload arrives NULLed, so no blob ever
-    crosses Arrow for them) — mixed batches then need ONE consumer job
-    instead of a JVM-count + additive pair (~30% faster per batch,
-    interleaved A/B)."""
-
-    def fn(batches):
-        kernel = make_kernel(kind, cfg)
-        sums: dict[int, int] = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            if with_counts:
-                is_cnt = (pdf["qkind"] == "count").to_numpy()
-                ests = np.zeros(len(pdf), dtype=np.int64)
-                if (~is_cnt).any():
-                    ests[~is_cnt] = _additive_batch_ests(
-                        kernel, pdf[~is_cnt])
-                if is_cnt.any():
-                    ests[is_cnt] = pdf["val_sum"].to_numpy(
-                        np.int64)[is_cnt]
-            else:
-                ests = _additive_batch_ests(kernel, pdf)
-            qids = pdf["qid"].to_numpy(np.int64)
-            covs = pdf["coverage"].to_numpy(np.float64)
-            # trunc per sub-query, exactly as the reference (:766) —
-            # values are non-negative so floor == trunc
-            contrib = np.floor(covs * ests).astype(np.int64)
-            uq, inv = np.unique(qids, return_inverse=True)
-            part = int_group_sum(inv, contrib, len(uq))
-            for q, v in zip(uq.tolist(), part.tolist()):
-                sums[q] = sums.get(q, 0) + v
-        if sums:
-            yield pd.DataFrame({
-                "qid": pd.array(list(sums.keys()), dtype="int64"),
-                "est": pd.array(list(sums.values()), dtype="int64"),
-            })
-
-    return fn
-
-
-def _pid_additive_estimator(cfg, kind: str, qmeta: dict):
-    """Placement-granular additive partials: input rows carry (pid,
-    coverage, val_sum, payload) ONCE per matched cell per distinct
-    rect-set; the per-query metadata lives in the task closure
-    (``qmeta``: pid -> (qids, qkinds, items, item_ends, t0s) numpy
-    arrays — a few KB for any realistic batch) and the expansion to
-    per-(query, cell) contributions happens in numpy AFTER the Arrow
-    transfer. Vs the per-qid flow this halves (or better) the Arrow
-    payload bytes for paired count+freq workloads and removes the
-    qmap broadcast exchange from the plan entirely.
-
-    CM fast path probes the (B, d, w) counter stack through an
-    expansion index (payloads deserialized once per CELL, not per
-    query); other kernels synthesize the expanded pdf and reuse
-    ``_additive_batch_ests``. Emits one (qid, partial) row set per
-    partition, same contract as ``_additive_estimator``."""
-    # flatten the per-pid query lists ONCE on the driver; the closure
-    # captures plain numpy arrays (KBs), not python object graphs
-    offsets: dict[int, int] = {}
-    nq_of: dict[int, int] = {}
-    qids_l, qkinds_l, items_l, iends_l, t0s_l = [], [], [], [], []
-    for pid, (qids, qkinds, items, iends, t0s) in qmeta.items():
-        offsets[pid] = len(qids_l)
-        nq_of[pid] = len(qids)
-        qids_l.extend(qids)
-        qkinds_l.extend(qkinds)
-        items_l.extend(items)
-        iends_l.extend(iends)
-        t0s_l.extend(t0s)
-    f_qids = np.asarray(qids_l, dtype=np.int64)
-    f_qkinds = np.asarray(qkinds_l, dtype=object)
-    f_items = np.asarray(items_l, dtype=np.int64)
-    f_iends = np.asarray(iends_l, dtype=np.int64)
-    f_t0s = np.asarray(t0s_l, dtype=np.int64)
-    f_is_cnt = f_qkinds == "count"
+def _additive_partials(cfg, kind: str, pid_queries: list):
+    """mapInPandas over matched rows (pid, coverage, val_sum, payload):
+    every row expands to (row, query) entries for its pid's additive
+    queries, estimated by ``_additive_ests`` and folded to one
+    (qid, partial) row per qid per partition. ``pid_queries[pid]`` is
+    that pid's additive queries; the closure carries them as flat numpy
+    columns in pid order (KBs for any realistic batch)."""
+    cnt = np.array([len(qs) for qs in pid_queries], dtype=np.int64)
+    start = np.cumsum(cnt) - cnt
+    flat = [q for qs in pid_queries for q in qs]
+    qids = np.array([q.qid for q in flat], dtype=np.int64)
+    qkinds = np.array([q.qkind for q in flat], dtype=object)
+    items = np.array([q.item for q in flat], dtype=np.int64)
+    iends = np.array([q.item_end for q in flat], dtype=np.int64)
+    t0s = np.array([q.t0 for q in flat], dtype=np.int64)
 
     def fn(batches):
         kernel = make_kernel(kind, cfg)
@@ -273,69 +221,20 @@ def _pid_additive_estimator(cfg, kind: str, qmeta: dict):
             if not len(pdf):
                 continue
             pids = pdf["pid"].to_numpy(np.int64)
+            nq = cnt[pids]
+            row = np.repeat(np.arange(len(pdf)), nq)
+            # a row's entries are its pid's contiguous query slice
+            qpos = np.repeat(start[pids] - (np.cumsum(nq) - nq), nq) \
+                + np.arange(len(row))
+            ests = _additive_ests(kernel, pdf["payload"],
+                                  pdf["val_sum"].to_numpy(np.int64), row,
+                                  qkinds[qpos], items[qpos], iends[qpos],
+                                  t0s[qpos])
             covs = pdf["coverage"].to_numpy(np.float64)
-            # expansion: rows of one pid x that pid's queries
-            order = np.argsort(pids, kind="stable")
-            ps = pids[order]
-            upids, starts = np.unique(ps, return_index=True)
-            bounds = np.append(starts, len(ps))
-            row_parts, qi_parts = [], []
-            for ui, pid in enumerate(upids.tolist()):
-                rows = order[bounds[ui]:bounds[ui + 1]]
-                nq = nq_of[pid]
-                row_parts.append(np.repeat(rows, nq))
-                qi_parts.append(np.tile(
-                    np.arange(offsets[pid], offsets[pid] + nq),
-                    len(rows)))
-            row_idx = np.concatenate(row_parts)
-            qpos = np.concatenate(qi_parts)
-            g_qids = f_qids[qpos]
-            g_is_cnt = f_is_cnt[qpos]
-            ests = np.zeros(len(row_idx), dtype=np.int64)
-            if g_is_cnt.any():
-                vs = pdf["val_sum"].to_numpy(np.int64)
-                ests[g_is_cnt] = vs[row_idx[g_is_cnt]]
-            ncnt = ~g_is_cnt
-            if ncnt.any():
-                if kernel.kind == "cm":
-                    # mirror _additive_batch_ests' dispatch guards
-                    # exactly: item_end == item is a degenerate point
-                    # freq, accepted on both surfaces
-                    _ie = f_iends[qpos[ncnt]]
-                    if ((_ie >= 0) & (_ie != f_items[qpos[ncnt]])).any():
-                        raise ValueError(
-                            "CM answers point frequencies only; item "
-                            "ranges need a 'dcm' (or exact-mode) store")
-                    if (f_t0s[qpos[ncnt]] > 0).any():
-                        raise ValueError(
-                            "CM has no time dimension; window queries "
-                            "need an 'ecm' (or exact-mode) store")
-                    # deserialize each referenced cell ONCE (count-only
-                    # placements carry NULL payloads and are never
-                    # referenced here)
-                    ri = row_idx[ncnt]
-                    uniq_rows, ri_compact = np.unique(
-                        ri, return_inverse=True)
-                    counters = kernel.deserialize_batch(
-                        pdf["payload"].iloc[uniq_rows]
-                        .reset_index(drop=True))
-                    h = kernel.hash(f_items[qpos[ncnt]])      # (d, E)
-                    ests[ncnt] = counters[
-                        ri_compact[:, None],
-                        np.arange(kernel.d)[None, :],
-                        h.T].min(axis=1)
-                else:
-                    sub = pd.DataFrame({
-                        "payload": pdf["payload"].iloc[
-                            row_idx[ncnt]].reset_index(drop=True),
-                        "item": f_items[qpos[ncnt]],
-                        "item_end": f_iends[qpos[ncnt]],
-                        "t0": f_t0s[qpos[ncnt]],
-                        "qkind": f_qkinds[qpos[ncnt]],
-                    })
-                    ests[ncnt] = _additive_batch_ests(kernel, sub)
-            contrib = np.floor(covs[row_idx] * ests).astype(np.int64)
-            uq, inv = np.unique(g_qids, return_inverse=True)
+            # trunc per sub-query, exactly as the reference (:766) —
+            # values are non-negative so floor == trunc
+            contrib = np.floor(covs[row] * ests).astype(np.int64)
+            uq, inv = np.unique(qids[qpos], return_inverse=True)
             part = int_group_sum(inv, contrib, len(uq))
             for q, v in zip(uq.tolist(), part.tolist()):
                 sums[q] = sums.get(q, 0) + v
@@ -348,10 +247,10 @@ def _pid_additive_estimator(cfg, kind: str, qmeta: dict):
     return fn
 
 
-def _finisher(cfg, kind: str):
-    """Partition-level finisher: after repartition(qid), all of a
-    query's matched cells share a partition; one Python/Arrow round
-    answers every query in the partition (no per-group pandas tax)."""
+def _merge_partials(cfg, kind: str, pid_queries: list):
+    """mapInPandas after repartition(pid): all of a rect-set's matched
+    cells share a partition; each pid's states are deserialized once
+    and answer every merge query of that pid (``pid_queries[pid]``)."""
 
     def fn(batches):
         kernel = make_kernel(kind, cfg)
@@ -360,15 +259,17 @@ def _finisher(cfg, kind: str):
             return
         allpdf = pd.concat(chunks, ignore_index=True)
         # merge-kind semantics ignore coverage (states are merged, not
-        # scaled), so two disjoint rects of one query hitting the same
-        # floor-level cell must contribute that cell's state ONCE —
+        # scaled), so two disjoint rects of one rect-set hitting the
+        # same floor-level cell must contribute that cell's state ONCE —
         # without this dedup the duplicated counters inflate l2 /
         # window_merge results for unaligned multi-rect regions.
-        allpdf = allpdf.drop_duplicates(subset=["qid", "grid_key", "cell"])
+        allpdf = allpdf.drop_duplicates(subset=["pid", "grid_key", "cell"])
         out_qid, out_est = [], []
-        for qid, grp in allpdf.groupby("qid", sort=False):
-            out_qid.append(int(qid))
-            out_est.append(_estimate_one(kernel, grp))
+        for pid, grp in allpdf.groupby("pid", sort=False):
+            states = [kernel.deserialize(b) for b in grp["payload"]]
+            for q in pid_queries[int(pid)]:
+                out_qid.append(q.qid)
+                out_est.append(_estimate_one(kernel, states, q))
         yield pd.DataFrame({"qid": pd.array(out_qid, dtype="int64"),
                             "est": pd.array(out_est, dtype="int64")})
 
@@ -381,145 +282,40 @@ class SpatialSketchEngine:
     def __init__(self, store: SketchStore):
         self.store = store
 
-    def cover_rows(self, queries: list[QuerySpec]) -> list[tuple]:
+    def _cover_table(self, pid_ranges: list) -> pa.Table:
+        """Driver-side cover of ``[(pid, ranges)]`` as one Arrow table
+        (COVER_SCHEMA): numpy cross-product covers when no grid is
+        dropped, ``effective_cover``'s rewrite otherwise. Arrow straight
+        from numpy skips the pandas block consolidation and the
+        row-based py4j conversion (~2x faster plan assembly than
+        createDataFrame(pandas) at cover sizes, PLANS.md)."""
         cfg = self.store.cfg
-        log_n = cfg.levels - 1
-        rows = []
-        for q in queries:
-            for (x1, y1, x2, y2) in q.ranges:
-                for kx, ky, cx, cy, cov in effective_cover(
-                        x1, y1, x2, y2, log_n, cfg.dropped_grids,
-                        floor_k=self.store.min_level):
-                    rows.append((q.qid, cfg.grid_key(kx, ky),
-                                 cx * cfg.n + cy, float(cov),
-                                 q.qkind, q.item, q.item_end, q.t0))
-        return rows
+        log_n, floor_k = cfg.levels - 1, self.store.min_level
+        rects = [r for _, rs in pid_ranges for r in rs]
+        rect_pid = np.array([pid for pid, rs in pid_ranges for _ in rs],
+                            dtype=np.int64)
+        if not cfg.dropped_grids:
+            ridx, kx, ky, cx, cy, cov = cover_2d_np(rects, log_n, floor_k)
+        else:
+            elems = [(i, *e) for i, (x1, y1, x2, y2) in enumerate(rects)
+                     for e in effective_cover(x1, y1, x2, y2, log_n,
+                                              cfg.dropped_grids,
+                                              floor_k=floor_k)]
+            ridx, kx, ky, cx, cy = np.array(
+                [e[:5] for e in elems], dtype=np.int64).reshape(-1, 5).T
+            cov = np.array([e[5] for e in elems], dtype=np.float64)
+        return pa.table({
+            "pid": rect_pid[ridx],
+            "grid_key": (kx + ky * cfg.levels).astype(np.int32),
+            "cell": (cx * cfg.n + cy).astype(np.int64),
+            "coverage": cov.astype(np.float64),
+        })
 
-    # up to this many rects the cover is expanded on the DRIVER (the
-    # reference's query planning is driver-side too): the batched numpy
-    # expansion costs ~30 us/rect, far below the fixed cost of the
-    # distributed expansion job it replaces (~1 s at any size)
-    DRIVER_COVER_RECTS = 8192
-
-    def _cover_df(self, pid_ranges: list):
-        """pid-keyed cover DataFrame over ``[(pid, ranges)]`` — NO
-        per-query metadata: queries sharing a rect-set (e.g. a count
-        and a freq probe of the same placement) expand and broadcast
-        their cover ONCE; qid/qkind/item/t0 ride the tiny broadcast
-        qid-map that ``_matched`` joins on pid afterwards. Small/medium
-        batches: computed on the driver — numpy cross-product covers
-        when no grids are dropped, the effective_cover rewrite
-        otherwise. Very large batches: the per-query bit arithmetic is
-        fanned out via mapInPandas so cover *throughput* scales with
-        executors, not driver cores."""
-        spark = self.store.spark
-        cfg = self.store.cfg
-        n_rects = sum(len(rs) for _, rs in pid_ranges)
-        if n_rects <= self.DRIVER_COVER_RECTS:
-            if not cfg.dropped_grids:
-                from ..core.dyadic import cover_2d_np
-                rects, pids = [], []
-                for pid, rs in pid_ranges:
-                    for r in rs:
-                        rects.append(r)
-                        pids.append(pid)
-                ridx, kx, ky, cx, cy, cov = cover_2d_np(
-                    rects, cfg.levels - 1, self.store.min_level)
-                # pyarrow Table, straight from the numpy arrays: skips
-                # the pandas block consolidation AND the row-based py4j
-                # conversion — measured ~2x faster plan assembly than
-                # createDataFrame(pandas) at cover sizes (the dominant
-                # fresh-batch floor component, PLANS.md)
-                import pyarrow as pa
-                tbl = pa.table({
-                    "pid": np.asarray(pids, dtype=np.int64)[ridx],
-                    "grid_key": (kx + ky * cfg.levels).astype(np.int32),
-                    "cell": (cx * cfg.n + cy).astype(np.int64),
-                    "coverage": cov.astype(np.float64),
-                })
-                return spark.createDataFrame(tbl, schema=COVER_SCHEMA)
-            else:
-                rows = []
-                log_n = cfg.levels - 1
-                for pid, rs in pid_ranges:
-                    for (x1, y1, x2, y2) in rs:
-                        for kx, ky, cx, cy, cov in effective_cover(
-                                x1, y1, x2, y2, log_n, cfg.dropped_grids,
-                                floor_k=self.store.min_level):
-                            rows.append((pid, cfg.grid_key(kx, ky),
-                                         cx * cfg.n + cy, float(cov)))
-                cover_pdf = pd.DataFrame(
-                    rows, columns=["pid", "grid_key", "cell", "coverage"])
-            return spark.createDataFrame(cover_pdf, schema=COVER_SCHEMA)
-        # distributed: ship (pid, rect) rows, expand per partition
-        rect_rows = [(pid, x1, y1, x2, y2)
-                     for pid, rs in pid_ranges
-                     for (x1, y1, x2, y2) in rs]
-        spec_pdf = pd.DataFrame(rect_rows,
-                                columns=["pid", "x1", "y1", "x2", "y2"])
-        spec = spark.createDataFrame(
-            spec_pdf, schema="pid BIGINT, x1 BIGINT, y1 BIGINT, "
-                             "x2 BIGINT, y2 BIGINT")
-        log_n = cfg.levels - 1
-        dropped = cfg.dropped_grids
-        floor_k = self.store.min_level
-        n = cfg.n
-        levels = cfg.levels
-
-        def expand(batches):
-            from ..core.dyadic import cover_2d_np
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                if not dropped:
-                    # fast path: batched numpy cross-product covers
-                    rects = zip(pdf["x1"].to_numpy(), pdf["y1"].to_numpy(),
-                                pdf["x2"].to_numpy(), pdf["y2"].to_numpy())
-                    ridx, kx, ky, cx, cy, cov = cover_2d_np(
-                        rects, log_n, floor_k)
-                    yield pd.DataFrame({
-                        "pid": pdf["pid"].to_numpy()[ridx],
-                        "grid_key": (kx + ky * levels).astype("int32"),
-                        "cell": cx * n + cy,
-                        "coverage": cov,
-                    })
-                    continue
-                out = {k: [] for k in ["pid", "grid_key", "cell",
-                                       "coverage"]}
-                for r in pdf.itertuples(index=False):
-                    for kx, ky, cx, cy, cov in effective_cover(
-                            r.x1, r.y1, r.x2, r.y2, log_n, dropped, floor_k):
-                        out["pid"].append(r.pid)
-                        out["grid_key"].append(kx + ky * levels)
-                        out["cell"].append(cx * n + cy)
-                        out["coverage"].append(float(cov))
-                yield pd.DataFrame(out)
-
-        nparts = min(len(rect_rows),
-                     int(spark.conf.get("spark.sql.shuffle.partitions")))
-        return spec.repartition(nparts).mapInPandas(expand,
-                                                    schema=COVER_SCHEMA)
-
-    def _query_grids(self, q: QuerySpec):
-        cfg = self.store.cfg
-        for (x1, y1, x2, y2) in q.ranges:
-            yield from effective_cover(x1, y1, x2, y2, cfg.levels - 1,
-                                       cfg.dropped_grids,
-                                       floor_k=self.store.min_level)
-
-    def _estimate_cover_rows(self, pid_ranges: list) -> int:
-        """Driver-side cover-size estimate from a <=64-entry sample
-        (each rect-set's cover is O(log^2 N) cells — expanding a sample
-        costs microseconds and avoids a counting job)."""
-        cfg = self.store.cfg
-        step = max(1, len(pid_ranges) // 64)
-        sample = pid_ranges[::step][:64]
-        cells = sum(1 for _, rs in sample for (x1, y1, x2, y2) in rs
-                    for _ in effective_cover(x1, y1, x2, y2,
-                                             cfg.levels - 1,
-                                             cfg.dropped_grids,
-                                             floor_k=self.store.min_level))
-        return int(cells / max(1, len(sample)) * len(pid_ranges))
+    def _cover_df(self, pid_ranges: list) -> DataFrame:
+        """pid-keyed cover DataFrame (COVER_SCHEMA) over
+        ``[(pid, ranges)]``."""
+        return self.store.spark.createDataFrame(
+            self._cover_table(pid_ranges), schema=COVER_SCHEMA)
 
     # broadcast the cover relation up to this many rows (~60 B/row ->
     # ~200 MB broadcast ceiling); beyond it, shuffle-join against the
@@ -545,46 +341,29 @@ class SpatialSketchEngine:
         return max(1, -(-int(cells) // self.CELLS_PER_SCAN_TASK))
 
     def _matched_pids(self, queries: list[QuerySpec]):
-        """Payload-bearing matched rows at PLACEMENT granularity:
-        dedup identical rect-sets (e.g. the count and the freq probe
-        of one placement, or repeated canned regions) so the cover is
-        expanded and broadcast once per DISTINCT rect-set, join the
-        sketch table, and return (matched_df(pid, coverage, sketch
-        cols), qmap_rows) — per-query metadata attachment is the
-        caller's choice (broadcast join for the DataFrame path, a
-        python-side expansion for query_values)."""
+        """The matched relation at PLACEMENT granularity: identical
+        rect-sets (e.g. the count and the freq probe of one placement,
+        or repeated canned regions) share a pid, so the cover is
+        expanded and joined once per DISTINCT rect-set. Returns
+        (matched DataFrame (grid_key, cell, sketch columns, pid,
+        coverage), the pid of each query)."""
         groups: dict[tuple, int] = {}
         pid_ranges: list = []
-        qmap_rows = []
+        qpid = []
         for q in queries:
-            key = tuple(map(tuple, q.ranges))
-            pid = groups.get(key)
-            if pid is None:
-                pid = len(pid_ranges)
-                groups[key] = pid
+            pid = groups.setdefault(tuple(map(tuple, q.ranges)), len(groups))
+            if pid == len(pid_ranges):
                 pid_ranges.append((pid, q.ranges))
-            qmap_rows.append((pid, q.qid, q.qkind, q.item,
-                              q.item_end, q.t0))
-        cover = self._cover_df(pid_ranges)
-        if len(queries) < 64:
-            # precise grid_key pruning list, driver-computed
-            needed = sorted({self.store.cfg.grid_key(kx, ky)
-                             for q in queries
-                             for kx, ky, _, _, _ in self._query_grids(q)})
-        else:
-            # medium/large batches touch essentially every live grid;
-            # recomputing per-query covers just to prune is pure waste
-            from .build import live_grids
-            needed = sorted(self.store.cfg.grid_key(kx, ky) for kx, ky in
-                            live_grids(self.store.cfg, self.store.min_level))
-        # broadcast strictly by estimated cover SIZE — how the cover was
-        # built (driver vs distributed) must not bypass the ~200 MB
-        # broadcast ceiling (8192 full-span rects can expand past 4M rows)
-        if self._estimate_cover_rows(pid_ranges) <= self.BROADCAST_COVER_ROWS:
+            qpid.append(pid)
+        tbl = self._cover_table(pid_ranges)
+        cover = self.store.spark.createDataFrame(tbl, schema=COVER_SCHEMA)
+        # exact grid_key pruning list, from the cover itself
+        needed = np.unique(tbl["grid_key"].to_numpy()).tolist()
+        if tbl.num_rows <= self.BROADCAST_COVER_ROWS:
             # broadcast the cover -> zero shuffle on the sketch side;
-            # the broadcast exchange is canonically identical across the
-            # per-qkind consumer branches, so ReuseExchange materializes
-            # the cover ONCE per batch.
+            # the broadcast exchange is canonically identical across
+            # the additive and merge branches, so ReuseExchange
+            # materializes the cover ONCE per batch.
             pruned = self.store.df.where(F.col("grid_key").isin(needed))
             nt = self._scan_tasks()
             if nt is not None:
@@ -599,113 +378,79 @@ class SpatialSketchEngine:
             pruned = self.store.bucketed_df().where(
                 F.col("grid_key").isin(needed))
             m = pruned.join(cover, ["grid_key", "cell"])
-        return m, qmap_rows
+        return m, qpid
 
-    def _matched(self, queries: list[QuerySpec]):
-        # per-query metadata rides a tiny broadcast qid-map joined on
-        # pid after the sketch join, so the payload-bearing join
-        # probes half (or less) the hash table a per-qid cover would
-        # need
-        spark = self.store.spark
-        m, qmap_rows = self._matched_pids(queries)
-        qmap = spark.createDataFrame(qmap_rows, schema=QMAP_SCHEMA)
-        return m.join(F.broadcast(qmap), "pid").drop("pid")
-
-    def query(self, queries: list[QuerySpec]) -> DataFrame:
-        """-> DataFrame(qid, est); missing-cell-safe (untouched cells
-        contribute 0, the analogue of lazily-unallocated sketches).
-
-        Three physical strategies by query class:
-        - 'count': pure JVM — SUM(trunc(coverage * val_sum)) per qid;
-          no payload ever leaves the sketch table scan (codegen'd).
-        - additive kinds (freq / range_freq / window): the per-cell
-          estimate is computed WHERE the join output lives (mapInPandas,
-          pre-shuffle partial sums); only (qid, partial) scalars shuffle.
-          Sum-over-cells is associative, trunc applied per cell exactly
-          as the reference does (SpatialSketch.cpp:766).
-        - merge kinds (distinct / member / l2 / window_merge): cell
-          states must be merged before estimating — payloads shuffle by
-          qid, but these queries match only O(log^2 N) cells each.
-          Fractional coverage is intentionally IGNORED for merge kinds
-          (a merged bitmap/filter/counter set has no meaningful scalar
-          scaling); duplicate (qid, cell) matches are deduped before
-          the merge.
-
-        Each qkind is validated against the store's kernel up front —
-        dispatching e.g. a range_freq at a plain-CM store would
-        otherwise silently return point-frequency estimates.
-        """
-        _QKIND_KERNELS = {
-            "count": None,                        # val_sum column, any kernel
-            "freq": {"exact", "cm", "ecm", "elastic"},
-            "range_freq": {"exact", "dcm"},
-            "window": {"exact", "ecm"},
-            "window_merge": {"exact", "ecm"},
-            "distinct": {"exact", "fm"},
-            "member": {"exact", "bf"},
-            "l2": {"exact", "cm"},
-        }
+    def _partials(self, queries: list[QuerySpec]) -> DataFrame:
+        """-> DataFrame(qid, est) of per-partition partial answers; a
+        qid's answer is the sum of its rows (merge kinds emit one row
+        per qid). Validates every query, then adds an additive and/or a
+        merge branch over ONE matched relation — each only when the
+        batch has queries of that class."""
         kind = "exact" if self.store.cfg.exact else self.store.kind
         for q in queries:
-            allowed = _QKIND_KERNELS.get(q.qkind, ())
-            if allowed is not None and kind not in (allowed or ()):
+            allowed = QKIND_KERNELS.get(q.qkind, ())
+            if allowed is not None and kind not in allowed:
                 raise ValueError(
                     f"query kind {q.qkind!r} is not answerable by a "
                     f"{self.store.kind!r} store (needs one of "
                     f"{sorted(allowed) if allowed else '?'})")
         spark = self.store.spark
-        counts = [q for q in queries if q.qkind == "count"]
-        additive = [q for q in queries
-                    if q.qkind in ("freq", "range_freq", "window")]
-        mergeful = [q for q in queries
-                    if q.qkind in ("distinct", "member", "l2",
-                                   "window_merge")]
-        # ONE cover + ONE sketch join for the whole batch; the per-class
-        # consumers below filter on qkind. Their shared subtree (cover
-        # expansion + broadcast + join) is canonically identical, so
-        # ReuseExchange materializes it once per batch.
-        m_all = self._matched(queries)
+        cfg = self.store.cfg
+        m, qpid = self._matched_pids(queries)
+        n_pids = max(qpid, default=-1) + 1
+        add_q = [[] for _ in range(n_pids)]
+        mrg_q = [[] for _ in range(n_pids)]
+        for pid, q in zip(qpid, queries):
+            (add_q if q.qkind in ADDITIVE else mrg_q)[pid].append(q)
+
+        def rows_of(pid_queries):
+            # only the pids that carry queries of this class
+            pids = [p for p, qs in enumerate(pid_queries) if qs]
+            if len(pids) == n_pids:
+                return m, pids
+            return m.where(F.col("pid").isin(pids)), pids
+
         parts = []
-        if counts and not additive:
-            # count-only batch: pure JVM, payload never read
-            m = m_all.where(F.col("qkind") == "count")
+        rows, pids = rows_of(add_q)
+        if pids:
+            # pids asking only counts never read the blob: NULL it
+            # before the Arrow transfer
+            blind = [p for p in pids
+                     if all(q.qkind == "count" for q in add_q[p])]
+            payload = F.col("payload")
+            if blind:
+                payload = F.when(F.col("pid").isin(blind), F.lit(None)) \
+                    .otherwise(payload)
             parts.append(
-                m.groupBy("qid").agg(
-                    F.sum(F.floor(F.col("coverage") * F.col("val_sum")))
-                    .cast("bigint").alias("est")))
-        elif additive:
-            # one consumer for additive rows — and, in MIXED batches,
-            # for count rows too: they are answered from val_sum inside
-            # the same mapInPandas with their payload NULLed before the
-            # Arrow transfer (no blob crosses for them), saving a whole
-            # consumer job per batch vs separate branches
-            with_counts = bool(counts)
-            kinds = ["freq", "range_freq", "window"] + (
-                ["count"] if with_counts else [])
-            m = m_all.where(F.col("qkind").isin(kinds)).select(
-                "qid", "coverage", "qkind", "item", "item_end", "t0",
-                "val_sum",
-                F.when(F.col("qkind") == "count", F.lit(None))
-                .otherwise(F.col("payload")).alias("payload"))
-            partial = m.mapInPandas(
-                _additive_estimator(self.store.cfg, self.store.kind,
-                                    with_counts=with_counts),
-                schema=RESULT_SCHEMA)
-            parts.append(partial.groupBy("qid").agg(
-                F.sum("est").cast("bigint").alias("est")))
-        if mergeful:
-            m = m_all.where(F.col("qkind").isin(
-                "distinct", "member", "l2", "window_merge"))
-            n_parts = min(max(1, len(mergeful)),
-                          int(spark.conf.get("spark.sql.shuffle.partitions")))
-            parts.append(m.repartition(n_parts, "qid").mapInPandas(
-                _finisher(self.store.cfg, self.store.kind),
-                schema=RESULT_SCHEMA))
-        all_qids = spark.createDataFrame(
+                rows.select("pid", "coverage", "val_sum",
+                            payload.alias("payload"))
+                .mapInPandas(_additive_partials(cfg, self.store.kind,
+                                                add_q),
+                             schema=RESULT_SCHEMA))
+        rows, pids = rows_of(mrg_q)
+        if pids:
+            n_parts = min(len(pids), int(spark.conf.get(
+                "spark.sql.shuffle.partitions")))
+            parts.append(
+                rows.select("pid", "grid_key", "cell", "payload")
+                .repartition(n_parts, "pid")
+                .mapInPandas(_merge_partials(cfg, self.store.kind, mrg_q),
+                             schema=RESULT_SCHEMA))
+        if not parts:
+            return spark.createDataFrame([], schema=RESULT_SCHEMA)
+        return reduce(DataFrame.unionByName, parts)
+
+    def query(self, queries: list[QuerySpec]) -> DataFrame:
+        """-> DataFrame(qid, est), one row per query; missing-cell-safe
+        (untouched cells contribute 0, the analogue of lazily-
+        unallocated sketches). The surface for SQL-integrated consumers
+        (the driver gate included): ``_partials`` summed per qid, then a
+        broadcast fill for queries that matched no cell. Raises
+        ValueError for a query kind the store's kernel cannot answer."""
+        res = self._partials(queries).groupBy("qid").agg(
+            F.sum("est").cast("bigint").alias("est"))
+        all_qids = self.store.spark.createDataFrame(
             [(q.qid,) for q in queries], schema="qid BIGINT")
-        res = parts[0]
-        for p in parts[1:]:
-            res = res.unionByName(p)
         # the aggregated result is <= |queries| rows — broadcast it so
         # the missing-qid fill join never plans an SMJ (two exchanges +
         # sorts for a few hundred rows; AQE usually rescues this at
@@ -714,81 +459,18 @@ class SpatialSketchEngine:
                 .select("qid", F.coalesce("est", F.lit(0)).alias("est")))
 
     def query_values(self, queries: list[QuerySpec]) -> dict:
-        """Low-latency batch answers -> {qid: est} (VERDICT r4 task 2).
-
-        Same semantics as ``query()`` (asserted equal in
-        tests/test_plans.py), but the per-partition additive partials
-        — at most |queries| x #partitions tiny (qid, est) rows — are
-        collected and folded on the DRIVER instead of flowing through
-        a groupBy shuffle plus a qid-fill broadcast join. A fresh
-        600-query batch drops from ~1.45 s to ~0.9 s on the sandbox
-        (each batch sheds one shuffle stage, one broadcast exchange
-        and one job; profiled in scripts/profile_prepared_batch.py).
+        """Low-latency batch answers -> {qid: est}, equal to ``query()``
+        (asserted in tests/test_plans.py). The same ``_partials`` — at
+        most |queries| x #partitions tiny (qid, est) rows — are
+        collected and folded on the DRIVER instead of flowing through a
+        groupBy shuffle plus a qid-fill broadcast join, so each batch
+        sheds one shuffle stage, one broadcast exchange and one job.
 
         Scale posture: the driver fold is O(|queries|) — exactly the
         size of the answer the caller receives either way (the
         reference's query API returns the same, SpatialSketch.cpp:
-        837-855); no payload or per-cell row is ever collected. Merge
-        kinds (distinct/member/l2/window_merge) need their cross-cell
-        shuffle regardless and fall through to ``query()``.
-        ``query()`` remains the DataFrame surface for SQL-integrated
-        consumers (the driver gate included)."""
-        additive = [q for q in queries
-                    if q.qkind in ("freq", "range_freq", "window",
-                                   "count")]
-        out: dict[int, int] = {}
-        if len(additive) < len(queries):
-            rest = [q for q in queries if q.qkind not in
-                    ("freq", "range_freq", "window", "count")]
-            for r in self.query(rest).collect():
-                out[int(r["qid"])] = int(r["est"])
-        if not additive:
-            return out
-        # re-validate through query()'s guard table by reusing its
-        # kind check (a range_freq at a plain-CM store must fail here
-        # too, not return garbage)
-        kind = "exact" if self.store.cfg.exact else self.store.kind
-        _allowed = {"count": None,
-                    "freq": {"exact", "cm", "ecm", "elastic"},
-                    "range_freq": {"exact", "dcm"},
-                    "window": {"exact", "ecm"}}
-        for q in additive:
-            allowed = _allowed[q.qkind]
-            if allowed is not None and kind not in allowed:
-                raise ValueError(
-                    f"query kind {q.qkind!r} is not answerable by a "
-                    f"{self.store.kind!r} store")
-        # placement-granular matched rows: payloads cross Arrow once
-        # per (distinct rect-set, cell); per-query metadata travels in
-        # the estimator closure, so the qmap broadcast exchange
-        # disappears from the plan and paired count+freq workloads
-        # halve their Arrow bytes
-        m, qmap_rows = self._matched_pids(additive)
-        qmeta: dict = {}
-        for pid, qid, qkind, item, item_end, t0 in qmap_rows:
-            e = qmeta.setdefault(pid, ([], [], [], [], []))
-            e[0].append(qid)
-            e[1].append(qkind)
-            e[2].append(item)
-            e[3].append(item_end)
-            e[4].append(t0)
-        pure_count_pids = [pid for pid, e in qmeta.items()
-                           if all(k == "count" for k in e[1])]
-        if pure_count_pids:
-            # count-only placements never read the blob
-            payload_col = (F.when(F.col("pid").isin(pure_count_pids),
-                                  F.lit(None))
-                           .otherwise(F.col("payload")))
-        else:
-            payload_col = F.col("payload")
-        sel = m.select("pid", "coverage", "val_sum",
-                       payload_col.alias("payload"))
-        partial = sel.mapInPandas(
-            _pid_additive_estimator(self.store.cfg, self.store.kind,
-                                    qmeta),
-            schema=RESULT_SCHEMA)
-        for q in additive:
-            out[q.qid] = 0
-        for r in partial.collect():
+        837-855); no payload or per-cell row is ever collected."""
+        out = {q.qid: 0 for q in queries}
+        for r in self._partials(queries).collect():
             out[int(r["qid"])] += int(r["est"])
         return out

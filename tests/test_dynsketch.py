@@ -58,6 +58,37 @@ def test_plan_respects_budget_and_queries_stay_exact(spark, events):
     assert got[1] == truth_all.filter(F.col("item") == 3).count()
 
 
+def test_dropped_grid_batch_size_invariant(spark, events):
+    """A DynSketch store (dropped grids, coarsened floor) answers one
+    batch of >= 64 count/freq queries exactly as it answers the same
+    queries split into batches of < 64: the cover rewrite and the
+    grid-key pruning list must not depend on the batch size."""
+    import dataclasses
+    cfg = SketchConfig.exact_mode(item_domain=ITEM_DOMAIN, n=N)
+    store = SketchStore.build(spark, events, cfg, "exact", 0)
+    sizes = grid_sizes(store.df, cfg.levels)
+    plan = plan_drops(sizes, cfg.levels, 0,
+                      budget_bytes=sum(sizes.values()) // 3)
+    assert plan.dropped
+    eng = SpatialSketchEngine(SketchStore(
+        spark, apply_plan(store.df, plan, cfg.levels),
+        dataclasses.replace(cfg, dropped_grids=plan.dropped), "exact",
+        plan.min_level))
+    qs = []
+    for i in range(36):
+        r = [(i % 13, (i * 7) % 11, min(N - 1, 20 + (i * 5) % 40),
+              min(N - 1, 25 + (i * 3) % 35))]
+        qs.append(QuerySpec(2 * i, r, "count"))
+        qs.append(QuerySpec(2 * i + 1, r, "freq", item=i % 5))
+    assert len(qs) >= 64
+    split = {}
+    for k in range(0, len(qs), 24):
+        split.update(eng.query_values(qs[k:k + 24]))
+    assert eng.query_values(qs) == split
+    assert {r["qid"]: r["est"] for r in eng.query(qs).collect()} == split
+    assert any(split.values())
+
+
 def test_window_merge_mode(spark, events):
     """ECM_merge mode: merge cover-cell histograms, then HistSum —
     exact with the exact kernel; close to the per-cell mode with ECM."""

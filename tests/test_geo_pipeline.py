@@ -3,6 +3,7 @@ partitioning invariance, polygon queries vs exact Spark SQL, resume."""
 
 import numpy as np
 import pytest
+from pyspark.errors import PythonException
 from pyspark.sql import functions as F
 
 from spatialsketch_spark.config import SketchConfig
@@ -224,15 +225,12 @@ def test_bucketed_join_fallback_matches_broadcast(spark, events, exact_store):
                     "count") for i in range(96)]
     want = sorted((r["qid"], r["est"])
                   for r in eng.query(qs).collect())
-    drv, bc = (SpatialSketchEngine.DRIVER_COVER_RECTS,
-               SpatialSketchEngine.BROADCAST_COVER_ROWS)
-    SpatialSketchEngine.DRIVER_COVER_RECTS = 0
+    bc = SpatialSketchEngine.BROADCAST_COVER_ROWS
     SpatialSketchEngine.BROADCAST_COVER_ROWS = 0
     try:
         got = sorted((r["qid"], r["est"])
                      for r in eng.query(qs).collect())
     finally:
-        SpatialSketchEngine.DRIVER_COVER_RECTS = drv
         SpatialSketchEngine.BROADCAST_COVER_ROWS = bc
     assert got == want
 
@@ -294,29 +292,28 @@ def test_fingerprint_multiplicity_sensitive(spark, events):
     assert fa["sum_hash"] != fb["sum_hash"]
 
 
-def test_cm_batch_path_rejects_malformed_specs(spark):
-    """The vectorized CM batch estimator enforces the same guards as
-    the scalar kernel: item ranges and window t0 fail loudly."""
-    import pandas as pd
-    from spatialsketch_spark.core.kernels import make_kernel
-    from spatialsketch_spark.geo.query import _additive_batch_ests
-    cfg = SketchConfig(n=N, eps=0.1, delta=0.05, item_domain=ITEM_DOMAIN)
-    kernel = make_kernel("cm", cfg)
-    _, states = kernel.build_grouped(
-        np.zeros(1, np.int64), np.array([7], np.int64),
-        np.array([1], np.int64), np.array([0], np.int64))
-    payload = kernel.serialize(states[0])
-
-    def pdf(item, item_end, t0):
-        return pd.DataFrame({"item": [item], "item_end": [item_end],
-                             "t0": [t0], "payload": [payload],
-                             "qkind": ["freq"]})
-
-    assert _additive_batch_ests(kernel, pdf(7, -1, -1))[0] == 1
-    with pytest.raises(ValueError, match="point frequencies"):
-        _additive_batch_ests(kernel, pdf(7, 9, -1))
-    with pytest.raises(ValueError, match="time dimension"):
-        _additive_batch_ests(kernel, pdf(7, -1, 5))
+def test_cm_batch_path_rejects_malformed_specs(spark, events):
+    """A CM store enforces the scalar kernel's guards on both public
+    surfaces: item ranges and window t0 fail loudly, while a degenerate
+    item_end == item is a point frequency."""
+    cfg = SketchConfig.realistic(n=N, eps=0.1, delta=0.05,
+                                 item_domain=ITEM_DOMAIN)
+    eng = SpatialSketchEngine(SketchStore.build(spark, events, cfg, "cm",
+                                                MIN_LEVEL))
+    r = [(0, 0, 31, 31)]
+    point = eng.query_values([QuerySpec(0, r, "freq", item=7)])
+    assert eng.query_values(
+        [QuerySpec(0, r, "freq", item=7, item_end=7)]) == point
+    for bad, msg in ((QuerySpec(0, r, "freq", item=7, item_end=9),
+                      "CM answers point frequencies"),
+                     (QuerySpec(0, r, "freq", item=7, t0=5),
+                      "CM has no time dimension")):
+        # the guards run in the estimator task: both surfaces re-raise
+        # the task's ValueError on the driver
+        with pytest.raises(PythonException, match=f"ValueError: {msg}"):
+            eng.query_values([bad])
+        with pytest.raises(PythonException, match=f"ValueError: {msg}"):
+            eng.query([bad]).collect()
 
 
 def _store_rows(st):
@@ -576,6 +573,28 @@ def test_cover_dedup_all_classes_share_rects(spark, events, exact_store):
             groups[key] = len(pid_ranges)
             pid_ranges.append((groups[key], q.ranges))
     assert len(pid_ranges) == 1
+
+
+def test_merge_kinds_dedup_cells_shared_by_rects(spark, events):
+    """On a min_level > 0 store, two disjoint unaligned rects inside one
+    floor-level block both cover that block's cell. Merge kinds ignore
+    coverage, so the cell's state must enter the merge ONCE: the
+    two-rect query answers exactly like one rect over the whole block
+    (a duplicated state would multiply an exact l2 by 4)."""
+    cfg = SketchConfig.exact_mode(item_domain=ITEM_DOMAIN, n=N)
+    eng = SpatialSketchEngine(SketchStore.build(spark, events, cfg,
+                                                "exact", 3))
+    top = (events.groupBy((F.col("x") / 8).cast("int").alias("bx"),
+                          (F.col("y") / 8).cast("int").alias("by"),
+                          "item")
+           .count().orderBy(F.desc("count"), "bx", "by", "item").first())
+    x0, y0, item = top["bx"] * 8, top["by"] * 8, int(top["item"])
+    split = [(x0, y0, x0 + 2, y0 + 7), (x0 + 4, y0, x0 + 7, y0 + 7)]
+    block = [(x0, y0, x0 + 7, y0 + 7)]
+    for kind in ("l2", "window_merge", "distinct"):
+        got = eng.query_values([QuerySpec(0, split, kind, item=item, t0=0),
+                                QuerySpec(1, block, kind, item=item, t0=0)])
+        assert got[0] == got[1] > 0, (kind, got)
 
 
 def test_trajectory_stats_handcrafted(spark):

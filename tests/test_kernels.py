@@ -585,15 +585,29 @@ def test_default_encode_batch_matches_serialize():
         == [fm.serialize(s) for s in states]
 
 
-def test_cm_deserialize_rejects_unknown_magic():
+@pytest.mark.parametrize("kind", ["cm", "exact", "elastic"])
+def test_cm_deserialize_rejects_unknown_magic(kind):
+    """Every raw-buffer codec rejects a payload it did not write — a
+    legacy pickle or another kernel's header — instead of unpickling
+    it."""
     import pickle
-    cm = CMKernel(width=28, depth=3, seed=7)
+    from spatialsketch_spark.core.kernels import ElasticKernel
+    kernel = {"cm": lambda: CMKernel(width=28, depth=3, seed=7),
+              "exact": ExactKernel,
+              "elastic": lambda: ElasticKernel(n_buckets=4, slots=4,
+                                               light_width=32, seed=7),
+              }[kind]()
     legacy = pickle.dumps(("d", np.zeros((3, 28), dtype=np.int64)))
-    for blob in (legacy, b"XK1\x00\x00\x00\x00\x00" + bytes(16)):
-        with pytest.raises(ValueError, match="not a CM payload"):
-            cm.deserialize(blob)
-        with pytest.raises(ValueError, match="not a CM payload"):
-            cm.deserialize_batch([blob])
+    foreign = (ExactKernel._MAGIC if kind == "cm"
+               else CMKernel._MAGIC_S) + bytes(16)
+    decoders = [kernel.deserialize]
+    if kind == "cm":
+        decoders.append(lambda blob: kernel.deserialize_batch([blob]))
+    for blob in (legacy, foreign):
+        for decode in decoders:
+            with pytest.raises(ValueError,
+                               match=r"not an? (CM|exact|elastic) payload"):
+                decode(blob)
 
 
 @pytest.mark.parametrize("dropped", [frozenset(),

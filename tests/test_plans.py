@@ -98,7 +98,7 @@ def test_probe_scan_sized_small_store_not_bucketed_path(spark):
     orig = SpatialSketchEngine.BROADCAST_COVER_ROWS
     SpatialSketchEngine.BROADCAST_COVER_ROWS = 0
     try:
-        p2 = formatted(eng._matched(qs))
+        p2 = formatted(eng._matched_pids(qs)[0])
         assert "Coalesce" not in p2.split("InMemoryTableScan")[0], p2
     finally:
         SpatialSketchEngine.BROADCAST_COVER_ROWS = orig
@@ -107,8 +107,8 @@ def test_probe_scan_sized_small_store_not_bucketed_path(spark):
 def test_query_values_equals_query(spark):
     """query_values (driver partial fold, the low-latency batch
     surface bench.py measures) must return IDENTICAL answers to the
-    DataFrame query() path for every query class — additive kinds
-    folded on the driver, merge kinds falling through to query()."""
+    DataFrame query() path for every query class: both fold the same
+    partials, on the driver and as a DataFrame respectively."""
     from spatialsketch_spark.gate import exact_store
     from spatialsketch_spark.geo.query import (QuerySpec,
                                                SpatialSketchEngine)
@@ -125,6 +125,12 @@ def test_query_values_equals_query(spark):
     want = {int(r["qid"]): int(r["est"]) for r in eng.query(qs).collect()}
     got = eng.query_values(qs)
     assert got == want and len(got) == len(qs)
+    # one rect-set carrying additive AND merge queries: one pid, both
+    # branches, one query_values call
+    mixed = [q for q in qs if q.ranges == [rects[2]]
+             and q.qkind in ("count", "freq", "l2", "distinct")]
+    assert eng._matched_pids(mixed)[1] == [0] * 4
+    assert eng.query_values(mixed) == {q.qid: want[q.qid] for q in mixed}
     # kind-guard parity: a bad dispatch must raise, not return garbage
     from spatialsketch_spark.config import SketchConfig
     from spatialsketch_spark.geo.build import SketchStore
@@ -167,8 +173,8 @@ def test_span_ops_stay_jvm_side(spark):
 
 
 def test_query_values_equals_query_dcm_ecm(spark):
-    """The pid-granular estimator's generic fallback (non-CM kernels:
-    per-expanded-row deserialize + _additive_batch_ests) must equal
+    """The additive estimator's per-entry branch (dcm / ecm kernels:
+    one deserialize per cell, one kernel probe per entry) must equal
     the DataFrame path on REAL dcm (range_freq) and ecm (window)
     stores — the two kinds with per-row python estimation."""
     from spatialsketch_spark.config import SketchConfig
