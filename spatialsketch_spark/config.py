@@ -81,7 +81,9 @@ def get_spark(app: str = "spatialsketch", cpus: int | None = None,
               shuffle_partitions: int | None = None):
     """Build the standard session. local[...] here; on a real cluster the
     same code ships via spark-submit --py-files (no local assumptions in
-    the engine itself)."""
+    the engine itself). Python workers fork from the engine's daemon
+    (``spatialsketch_spark.daemon``), which stops every task from
+    re-reading Spark's zip archives."""
     from pyspark.sql import SparkSession
 
     if cpus is None:
@@ -99,5 +101,6 @@ def get_spark(app: str = "spatialsketch", cpus: int | None = None,
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "spatialsketch_spark.daemon")
         .getOrCreate()
     )

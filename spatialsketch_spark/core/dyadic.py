@@ -50,11 +50,10 @@ def canonical_cover(a: int, b: int, log_n: int, floor_k: int = 0
     containing them with fractional coverage = overlap / block
     (ObtainIntervals coverage path, SpatialSketch.cpp:660-676).
     """
+    a = max(0, a)
+    b = min((1 << log_n) - 1, b)
     if a > b:
         return []
-    n = 1 << log_n
-    a = max(0, a)
-    b = min(n - 1, b)
     out: list[tuple[int, int, float]] = []
     if floor_k > 0:
         block = 1 << floor_k
@@ -116,38 +115,84 @@ def cover_2d(x1: int, y1: int, x2: int, y2: int, log_n: int,
     return out
 
 
+def _log2_exact(x: np.ndarray) -> np.ndarray:
+    """floor(log2(x)) for positive int64 values below 2^53."""
+    return np.frexp(x.astype(np.float64))[1].astype(np.int64) - 1
+
+
+def _canonical_cover_np(a, b, log_n: int, floor_k: int = 0):
+    """``canonical_cover`` over many ranges at once. Returns
+    ``(count, level, start, coverage)``: range i's elements, in
+    ``canonical_cover``'s order, are ``level/start/coverage[o:o +
+    count[i]]`` with ``o = (cumsum(count) - count)[i]``.
+
+    The floor-level head and tail partials are one masked pass each; the
+    greedy middle takes at most 2·log_n rounds over the ranges still
+    open, each emitting the block ``k = min(ctz(a), floor(log2(b - a +
+    1)))`` at ``a``."""
+    n = 1 << log_n
+    a = np.maximum(np.asarray(a, dtype=np.int64), 0)
+    b = np.minimum(np.asarray(b, dtype=np.int64), n - 1)
+    live = a <= b
+    block = 1 << floor_k
+    a_blk, b_blk = a >> floor_k, b >> floor_k
+    single = live & (a_blk == b_blk)        # floor_k 0: a == b, level 0
+    multi = live & ~single
+    cut_head = multi & ((a & (block - 1)) != 0)
+    tail = multi & (((b + 1) & (block - 1)) != 0)
+    head = single | cut_head
+    head_start, tail_start = a_blk << floor_k, b_blk << floor_k
+    head_cov = np.where(single, b - a + 1, head_start + block - a) / block
+    tail_cov = (b - tail_start + 1) / block
+    ga = np.where(cut_head, head_start + block, a)
+    gb = np.where(tail, tail_start - 1, b)
+    # greedy middle: round r emits range idx[j]'s (r+1)-th middle block
+    rounds, n_mid = [], np.zeros(len(a), dtype=np.int64)
+    idx = np.flatnonzero(multi & (ga <= gb))
+    ga, gb = ga[idx], gb[idx]
+    while idx.size:
+        ctz = np.where(ga == 0, log_n, _log2_exact(ga & -ga))
+        k = np.minimum(ctz, _log2_exact(gb - ga + 1))
+        rounds.append((idx, k, ga))
+        n_mid[idx] += 1
+        ga = ga + (np.int64(1) << k)
+        more = ga <= gb
+        idx, ga, gb = idx[more], ga[more], gb[more]
+    count = head + n_mid + tail
+    off = np.cumsum(count) - count
+    total = int(count.sum())
+    level = np.empty(total, dtype=np.int64)
+    start = np.empty(total, dtype=np.int64)
+    cov = np.ones(total, dtype=np.float64)
+    at = off[head]
+    level[at], start[at], cov[at] = floor_k, head_start[head], head_cov[head]
+    for r, (r_idx, k, ga) in enumerate(rounds):
+        at = off[r_idx] + head[r_idx] + r
+        level[at], start[at] = k, ga
+    at = off[tail] + count[tail] - 1
+    level[at], start[at], cov[at] = floor_k, tail_start[tail], tail_cov[tail]
+    return count, level, start, cov
+
+
 def cover_2d_np(rects, log_n: int, floor_k: int = 0):
     """Batch 2-D covers as numpy arrays: rects is an iterable of
     (x1, y1, x2, y2); returns (rect_idx, kx, ky, cx, cy, coverage)
-    int64/float64 arrays. Same elements as cover_2d per rect (asserted
-    in tests) — the per-axis covers stay tiny Python (<= 2 log n
-    intervals), but the cross product and row materialization are
-    vectorized, which is what the large-batch query planner pays per
-    rect (the per-element list-append form costs ~1 ms/rect; this is
-    ~10x cheaper)."""
-    idxs, kxs, kys, cxs, cys, covs = [], [], [], [], [], []
-    for i, (x1, y1, x2, y2) in enumerate(rects):
-        xs = canonical_cover(int(x1), int(x2), log_n, floor_k)
-        ys = canonical_cover(int(y1), int(y2), log_n, floor_k)
-        if not xs or not ys:
-            continue
-        xk = np.fromiter((k for k, _, _ in xs), np.int64, len(xs))
-        xc = np.fromiter((s >> k for k, s, _ in xs), np.int64, len(xs))
-        xv = np.fromiter((c for _, _, c in xs), np.float64, len(xs))
-        yk = np.fromiter((k for k, _, _ in ys), np.int64, len(ys))
-        yc = np.fromiter((s >> k for k, s, _ in ys), np.int64, len(ys))
-        yv = np.fromiter((c for _, _, c in ys), np.float64, len(ys))
-        nx, ny = len(xs), len(ys)
-        kxs.append(np.repeat(xk, ny)); cxs.append(np.repeat(xc, ny))
-        kys.append(np.tile(yk, nx));   cys.append(np.tile(yc, nx))
-        covs.append(np.repeat(xv, ny) * np.tile(yv, nx))
-        idxs.append(np.full(nx * ny, i, dtype=np.int64))
-    if not idxs:
-        z = np.zeros(0, dtype=np.int64)
-        return z, z, z, z, z, np.zeros(0, dtype=np.float64)
-    return (np.concatenate(idxs), np.concatenate(kxs),
-            np.concatenate(kys), np.concatenate(cxs),
-            np.concatenate(cys), np.concatenate(covs))
+    int64/float64 arrays holding exactly ``cover_2d``'s elements per
+    rect, in its order (asserted in tests). Both axes' covers come from
+    one ``_canonical_cover_np`` call each; the per-rect cross product
+    (x outer, y inner) is index arithmetic over their offsets."""
+    r = np.asarray(rects, dtype=np.int64).reshape(-1, 4)
+    nx, kx, sx, vx = _canonical_cover_np(r[:, 0], r[:, 2], log_n, floor_k)
+    ny, ky, sy, vy = _canonical_cover_np(r[:, 1], r[:, 3], log_n, floor_k)
+    m = nx * ny
+    ridx = np.repeat(np.arange(len(r), dtype=np.int64), m)
+    local = np.arange(len(ridx), dtype=np.int64) - np.repeat(
+        np.cumsum(m) - m, m)
+    ny_e = ny[ridx]
+    xi = (np.cumsum(nx) - nx)[ridx] + local // ny_e
+    yi = (np.cumsum(ny) - ny)[ridx] + local % ny_e
+    return (ridx, kx[xi], ky[yi], sx[xi] >> kx[xi], sy[yi] >> ky[yi],
+            vx[xi] * vy[yi])
 
 
 def effective_cover(x1: int, y1: int, x2: int, y2: int, log_n: int,

@@ -209,12 +209,10 @@ class CMKernel(BaseKernel):
     _WORD_D = np.frombuffer(_MAGIC_D, np.int64)[0]
     _WORD_S = np.frombuffer(_MAGIC_S, np.int64)[0]
 
-    def _check_shape(self, blob: bytes):
+    def _check_shape(self, d: int, w: int):
         """Payloads carry their (d, w); a mismatch means a snapshot
         built under a different eps/delta is being read — fail loudly
         instead of silently scattering counters into the wrong layout."""
-        d = int(np.frombuffer(blob, np.int64, 1, 8)[0])
-        w = int(np.frombuffer(blob, np.int64, 1, 16)[0])
         if d != self.d or w != self.w:
             raise ValueError(
                 f"CM payload shape ({d},{w}) does not match this "
@@ -238,19 +236,18 @@ class CMKernel(BaseKernel):
         return self._MAGIC_D + shape + flat.tobytes()
 
     def deserialize(self, blob: bytes):
+        if blob[:8] not in (self._MAGIC_D, self._MAGIC_S):
+            raise ValueError(f"not a CM payload (magic {bytes(blob[:8])!r})")
+        self._check_shape(*np.frombuffer(blob, np.int64, 2, 8).tolist())
         if blob[:8] == self._MAGIC_D:
-            self._check_shape(blob)
             return np.frombuffer(blob, np.int64, self.d * self.w,
                                  24).reshape(self.d, self.w)
-        if blob[:8] == self._MAGIC_S:
-            self._check_shape(blob)
-            nnz = int(np.frombuffer(blob, np.int64, 1, 24)[0])
-            idx = np.frombuffer(blob, np.int64, nnz, 32)
-            vals = np.frombuffer(blob, np.int64, nnz, 32 + 8 * nnz)
-            out = np.zeros(self.d * self.w, dtype=np.int64)
-            out[idx] = vals
-            return out.reshape(self.d, self.w)
-        raise ValueError(f"not a CM payload (magic {bytes(blob[:8])!r})")
+        nnz = int(np.frombuffer(blob, np.int64, 1, 24)[0])
+        idx = np.frombuffer(blob, np.int64, nnz, 32)
+        vals = np.frombuffer(blob, np.int64, nnz, 32 + 8 * nnz)
+        out = np.zeros(self.d * self.w, dtype=np.int64)
+        out[idx] = vals
+        return out.reshape(self.d, self.w)
 
     def encode_batch(self, states):
         """Vectorized ``serialize`` over a (C, d, w) counter stack: the
@@ -283,19 +280,46 @@ class CMKernel(BaseKernel):
 
     def deserialize_batch(self, payloads) -> np.ndarray:
         """B payloads -> one (B, d, w) int64 counter stack; the batched
-        probe then answers every (row, item) in one fancy-index."""
-        out = np.zeros((len(payloads), self.d, self.w), dtype=np.int64)
-        flat = out.reshape(len(payloads), self.d * self.w)
-        for i, blob in enumerate(payloads):
-            if blob[:8] == self._MAGIC_S:
-                self._check_shape(blob)
-                nnz = int(np.frombuffer(blob, np.int64, 1, 24)[0])
-                idx = np.frombuffer(blob, np.int64, nnz, 32)
-                flat[i, idx] = np.frombuffer(blob, np.int64, nnz,
-                                             32 + 8 * nnz)
-            else:
-                flat[i, :] = self.deserialize(blob).ravel()
-        return out
+        probe then answers every (row, item) in one fancy-index. The
+        inverse of ``encode_batch``: one word buffer, every magic, shape
+        and length checked (one bad payload fails the batch), one gather
+        for the dense payloads and one scatter for the sparse entries."""
+        size = self.d * self.w
+        nbytes = np.fromiter(map(len, payloads), np.int64, len(payloads))
+        # 32 pad bytes: every payload's 4-word header (magic, d, w, nnz)
+        # is readable, a short payload's reading into what follows it
+        buf = np.frombuffer(b"".join([*payloads, bytes(32)]), np.uint8)
+        start = np.cumsum(nbytes) - nbytes
+        head = buf[start[:, None] + np.arange(32)]
+        magic, d, w, nnz = head.view(np.int64).reshape(-1, 4).T
+        dense = magic == self._WORD_D
+        bad = np.flatnonzero((nbytes < 8) | (~dense & (magic != self._WORD_S)))
+        if len(bad):
+            i = bad[0]
+            raise ValueError("not a CM payload (magic "
+                             f"{head[i, :min(8, nbytes[i])].tobytes()!r})")
+        bad = np.flatnonzero((nbytes >= 24) & ((d != self.d) | (w != self.w)))
+        if len(bad):
+            self._check_shape(int(d[bad[0]]), int(w[bad[0]]))
+        nnz = np.where(dense, 0, nnz)
+        want = np.where(dense, 24 + 8 * size, 32 + 16 * nnz)
+        bad = np.flatnonzero((nnz < 0) | (nnz > size) | (nbytes != want))
+        if len(bad):
+            i = bad[0]
+            raise ValueError(f"CM payload {i} is {nbytes[i]} bytes; its "
+                             f"header implies {want[i]} (truncated?)")
+        words, at0 = buf.view(np.int64), start // 8
+        out = np.zeros((len(payloads), size), dtype=np.int64)
+        out[dense] = words[at0[dense, None] + 3 + np.arange(size)]
+        # sparse: entry j of payload p sits at word 4 + j, its value nnz
+        # words later
+        p = np.repeat(np.arange(len(payloads)), nnz)
+        at = at0[p] + 4 + np.arange(len(p)) - (np.cumsum(nnz) - nnz)[p]
+        idx = words[at]
+        if ((idx < 0) | (idx >= size)).any():
+            raise ValueError("CM payload counter index out of range")
+        out.reshape(-1)[p * size + idx] = words[at + nnz[p]]
+        return out.reshape(len(payloads), self.d, self.w)
 
     def query_items_batch(self, counters: np.ndarray,
                           items: np.ndarray) -> np.ndarray:
@@ -1029,6 +1053,12 @@ class DCMKernel(BaseKernel):
         bit-identical: grouped sums are exact int64, bincount partial
         sums are integers < 2^53 in float64, and per-cell prefix lists
         come out sorted exactly as np.unique produced them before."""
+        # the combined key below is injective only on [0, 2^(L+1))
+        if len(items) and (items.min() < 0
+                           or items.max() >= 1 << (self.L + 1)):
+            raise ValueError(
+                f"dyadic-CM items must lie in [0, 2^{self.L + 1}); this "
+                f"batch spans [{items.min()}, {items.max()}]")
         va = values.astype(np.int64)
         inv64 = inv.astype(np.int64)
         n_cells = len(uc)

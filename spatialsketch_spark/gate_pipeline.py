@@ -19,7 +19,7 @@ def _parallelism(spark: SparkSession) -> int:
 
 def _spread(spark: SparkSession, path: str, per_part: int = 64 << 10
             ) -> DataFrame:
-    """Read a (single-file) parquet and spread it for CPU-heavy
+    """Read a parquet file or directory and spread it for CPU-heavy
     downstream work with SIZE-ADAPTIVE parallelism: one partition per
     ~64 KB of input, capped at the session parallelism. The old fixed
     .repartition(shuffle_partitions) paid a 32-task exchange + stage
@@ -31,7 +31,13 @@ def _spread(spark: SparkSession, path: str, per_part: int = 64 << 10
     import os
     df = spark.read.parquet(path)
     try:
-        size = os.path.getsize(path)
+        if os.path.isdir(path):
+            # Spark's output layout; like Spark, skip "_"/"." files
+            # (_SUCCESS markers, .crc checksums)
+            size = sum(e.stat().st_size for e in os.scandir(path)
+                       if e.is_file() and not e.name.startswith(("_", ".")))
+        else:
+            size = os.path.getsize(path)
     except OSError:
         size = per_part * _parallelism(spark)
     target = max(1, min(_parallelism(spark), size // per_part))

@@ -128,9 +128,22 @@ def test_cover_2d_np_matches_scalar():
     for fk in (0, 3, 4):
         ridx, kx, ky, cx, cy, cov = cover_2d_np(rects, 8, fk)
         for i, r in enumerate(rects):
-            want = sorted(cover_2d(*r, 8, fk, fk))
+            want = cover_2d(*r, 8, fk, fk)
             m = ridx == i
-            got = sorted(zip(kx[m].tolist(), ky[m].tolist(),
-                             cx[m].tolist(), cy[m].tolist(),
-                             cov[m].tolist()))
+            got = list(zip(kx[m].tolist(), ky[m].tolist(),
+                           cx[m].tolist(), cy[m].tolist(),
+                           cov[m].tolist()))
             assert got == want, (fk, r)
+
+
+def test_off_grid_range_emits_no_cell():
+    """A range entirely off the grid covers nothing, at any floor level
+    (clamping first: before, a floor-level block outside [0, N) came
+    out); a partly off-grid range covers its on-grid part."""
+    from spatialsketch_spark.core.dyadic import cover_2d_np
+    assert canonical_cover(-2, -2, 4, 1) == []
+    assert canonical_cover(17, 17, 4, 2) == []
+    assert canonical_cover(-5, -1, 4, 0) == []
+    assert canonical_cover(-3, 2, 4, 1) == canonical_cover(0, 2, 4, 1)
+    assert canonical_cover(13, 40, 4, 2) == canonical_cover(13, 15, 4, 2)
+    assert len(cover_2d_np([(-2, 0, -2, 3), (0, 17, 3, 17)], 4, 1)[0]) == 0

@@ -401,8 +401,9 @@ def test_cm_codec_rejects_shape_mismatch():
         blob = a.serialize(st)
         with pytest.raises(ValueError):
             b.deserialize(blob)
-        with pytest.raises(ValueError):
-            b.deserialize_batch([a.serialize(sparse)])
+        with pytest.raises(ValueError, match="shape"):
+            b.deserialize_batch([b.serialize(np.zeros((4, 55), np.int64)),
+                                 blob])
 
 
 def test_eh_unit_counts_closed_form():
@@ -576,6 +577,61 @@ def test_cm_encode_batch_matches_serialize():
     assert cm.serialize(st[3])[:3] == b"CMS"
 
 
+def test_cm_deserialize_batch_matches_deserialize():
+    """The vectorized batch decode equals per-payload ``deserialize``
+    on every layout (sparse, dense, all-zero, the nnz*2 == d*w
+    boundary), in any order and mix, and inverts ``encode_batch``."""
+    import pandas as pd
+    cm = CMKernel(width=28, depth=3, seed=7)
+    st = _cm_encode_cases(cm)
+    blobs = [cm.serialize(s) for s in st]
+    for batch in (blobs, blobs[::-1], blobs[:1], blobs[1:2] * 3,
+                  blobs * 2, pd.Series(blobs)):
+        want = np.stack([cm.deserialize(b) for b in batch])
+        np.testing.assert_array_equal(cm.deserialize_batch(batch), want)
+    assert cm.deserialize_batch([]).shape == (0, cm.d, cm.w)
+    offsets, data = cm.encode_batch(st)
+    np.testing.assert_array_equal(cm.deserialize_batch(
+        [data[a:b].tobytes() for a, b in zip(offsets[:-1], offsets[1:])]),
+        st)
+
+
+def test_cm_deserialize_batch_rejects_bad_lengths():
+    """A truncated or overlong payload, or a sparse one whose entry
+    count or counter index does not fit its (d, w), fails the batch
+    instead of reading into its neighbour's words."""
+    cm = CMKernel(width=28, depth=3, seed=7)
+    st = _cm_encode_cases(cm)
+    sparse, dense = cm.serialize(st[1]), cm.serialize(st[4])
+    words = np.frombuffer(sparse, np.int64).copy()
+    words[3] = 10 ** 6                                   # nnz too large
+    big_nnz = words.tobytes()
+    words = np.frombuffer(sparse, np.int64).copy()
+    words[4] = cm.d * cm.w                               # index off the end
+    off_idx = words.tobytes()
+    for blob in (sparse[:-8], sparse[:-3], sparse[:24], sparse[:12],
+                 dense[:-8], dense + bytes(8), big_nnz):
+        with pytest.raises(ValueError, match="bytes"):
+            cm.deserialize_batch([dense, blob, sparse])
+    with pytest.raises(ValueError, match="index"):
+        cm.deserialize_batch([dense, off_idx, sparse])
+
+
+def test_dcm_rejects_out_of_domain_items():
+    """The dyadic-CM's combined (cell, prefix) key is injective only for
+    items in [0, 2^(L+1)); items outside fail the batch instead of
+    aliasing another cell's prefixes."""
+    k = DCMKernel(log_domain=8, width=64, depth=3, exact_levels=3, seed=7)
+    cells = np.array([0, 1, 1], dtype=np.int64)
+    ones = np.ones(3, dtype=np.int64)
+    for bad in (-1, 1 << 9):
+        with pytest.raises(ValueError, match="dyadic-CM items"):
+            k.build_grouped(cells, np.array([5, bad, 7]), ones, ones)
+    _, states = k.build_grouped(cells, np.array([0, (1 << 9) - 1, 7]),
+                                ones, ones)
+    assert states[1]["exact"][0][0].tolist() == [7, (1 << 9) - 1]
+
+
 def test_default_encode_batch_matches_serialize():
     fm = FMKernel(eps=0.25, delta=0.05, seed=7)
     cells, items, values, ts = rand_events(500, 1000, seed=4)
@@ -602,8 +658,11 @@ def test_cm_deserialize_rejects_unknown_magic(kind):
                else CMKernel._MAGIC_S) + bytes(16)
     decoders = [kernel.deserialize]
     if kind == "cm":
+        good = kernel.serialize(np.ones((3, 28), dtype=np.int64))
         decoders.append(lambda blob: kernel.deserialize_batch([blob]))
-    for blob in (legacy, foreign):
+        decoders.append(
+            lambda blob: kernel.deserialize_batch([good, blob, good]))
+    for blob in (legacy, foreign, b"CM"):
         for decode in decoders:
             with pytest.raises(ValueError,
                                match=r"not an? (CM|exact|elastic) payload"):

@@ -2032,3 +2032,29 @@ def test_triangle_edge_fanout_bound(spark):
     # per-group quadratic term cannot dominate a 100 TB job
     assert stats["gmax"] <= max(64, n_users // 2), \
         (stats["gmax"], n_users)
+
+
+def test_spread_sizes_directory_parquet(spark, tmp_path):
+    """The same data as one parquet file and as a Spark-style directory
+    (a part file plus a _SUCCESS marker) spreads to the same partition
+    count — a directory is sized by its part files, not its inode."""
+    import os
+    import shutil
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from spatialsketch_spark.gate_pipeline import _spread
+    rng = np.random.default_rng(3)
+    text = [rng.bytes(256).hex() for _ in range(1500)]    # ~0.8 MB
+    one = str(tmp_path / "one.parquet")
+    pq.write_table(pa.table({"text": text}), one, compression="none")
+    folder = tmp_path / "dir.parquet"
+    folder.mkdir()
+    shutil.copy(one, folder / "part-00000.parquet")
+    (folder / "_SUCCESS").touch()
+    assert os.path.getsize(one) > 64 << 10
+    n_file = _spread(spark, one).rdd.getNumPartitions()
+    assert n_file > 1
+    assert _spread(spark, str(folder)).rdd.getNumPartitions() == n_file

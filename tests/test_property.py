@@ -44,16 +44,19 @@ def test_ecm_const_fold_equals_insert_fold_property(k, width, weight, data):
 @given(log_n=st.integers(2, 8), floor_k=st.integers(0, 3),
        data=st.data())
 def test_cover_2d_np_equals_scalar_property(log_n, floor_k, data):
+    """The batched cover emits exactly cover_2d's elements, in its order,
+    per rect of a batch, including ranges that are reversed or lie
+    partly or wholly off the grid."""
     n = 1 << log_n
-    x1 = data.draw(st.integers(0, n - 1))
-    x2 = data.draw(st.integers(x1, n - 1))
-    y1 = data.draw(st.integers(0, n - 1))
-    y2 = data.draw(st.integers(y1, n - 1))
+    coord = st.integers(-n // 2, n + n // 2)
+    rects = data.draw(st.lists(st.tuples(coord, coord, coord, coord),
+                               min_size=1, max_size=6))
     fk = min(floor_k, log_n)
-    ridx, kx, ky, cx, cy, cov = cover_2d_np([(x1, y1, x2, y2)], log_n, fk)
-    got = sorted(zip(kx.tolist(), ky.tolist(), cx.tolist(),
-                     cy.tolist(), cov.tolist()))
-    want = sorted(cover_2d(x1, y1, x2, y2, log_n, fk, fk))
+    ridx, kx, ky, cx, cy, cov = cover_2d_np(rects, log_n, fk)
+    got = list(zip(ridx.tolist(), kx.tolist(), ky.tolist(), cx.tolist(),
+                   cy.tolist(), cov.tolist()))
+    want = [(i, *e) for i, r in enumerate(rects)
+            for e in cover_2d(*r, log_n, fk, fk)]
     assert got == want
 
 
