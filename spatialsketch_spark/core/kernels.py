@@ -1,11 +1,19 @@
 """Mergeable synopsis kernels, numpy-vectorized over *groups of cells*.
 
-Each kernel turns a batch of events that share a grid — arrays
-``(cell_keys, items, values, ts)`` — into per-cell sketch states, merges
-states (commutative, associative — the property that makes the
-map-side-combined Spark build exact), serializes states for the sketch
-table's BinaryType payload column, and answers the reference's query
-kinds.
+Each kernel turns a batch of events that share a grid into per-cell
+sketch states, merges states (commutative, associative — the property
+that makes the map-side-combined Spark build exact), serializes states
+for the sketch table's BinaryType payload column, and answers the
+reference's query kinds.
+
+One build interface: ``build_from_groups(uc, inv, items, values, ts,
+prep)`` folds a batch already grouped into cells — ``uc`` the ascending
+cell keys, ``inv`` each event's index into them — and returns one state
+per cell. ``prep`` is the kernel's ``prep_batch`` output (item hashes),
+computed once per batch and reused for every grid of the pyramid. The
+Spark partial builder hands every kernel the group labels its pyramid
+grouping computed; ``BaseKernel.build_grouped`` is the short helper that
+groups raw cell keys first.
 
 Reference kernels being re-expressed:
 - CountMin insert/query/merge/L2: CountMin.cpp:122-158, 184-194, 196-215
@@ -80,9 +88,16 @@ class BaseKernel:
         return offsets, np.frombuffer(b"".join(blobs), dtype=np.uint8)
 
     # --- interface ---
+    def build_from_groups(self, uc, inv, items, values, ts, prep=None):
+        """-> one state per cell: ``states[i]`` summarizes the events
+        with ``inv == i``, the events of cell ``uc[i]``."""
+        raise NotImplementedError
+
     def build_grouped(self, cell_keys, items, values, ts):
         """-> (unique_cell_keys: int64[], states: list)"""
-        raise NotImplementedError
+        uc, inv = np.unique(cell_keys, return_inverse=True)
+        return uc, self.build_from_groups(
+            uc, inv, items, values, ts, self.prep_batch(items, values, ts))
 
     def prep_batch(self, items, values, ts):
         """Once-per-batch precomputation reusable across every grid
@@ -92,17 +107,8 @@ class BaseKernel:
         measured 0.68 s/200k-row task before, guide §1.2/§4.2)."""
         return None
 
-    # Kernels that can fold a batch from (uc, inv) group labels without
-    # re-sorting override this; the partial builder then hands them the
-    # group labels its pyramid grouping already computed for each grid,
-    # and no kernel sorts the batch again.
-    build_from_groups = None
-
     def merge(self, states: list):
         raise NotImplementedError
-
-    def size_bytes(self, state) -> int:
-        return len(self.serialize(state))
 
 
 class ExactKernel(BaseKernel):
@@ -135,27 +141,12 @@ class ExactKernel(BaseKernel):
                 "values": np.frombuffer(blob, np.int64, n, 16 + 8 * n),
                 "ts": np.frombuffer(blob, np.int64, n, 16 + 16 * n)}
 
-    def build_grouped(self, cell_keys, items, values, ts):
-        # ONE global lexsort by (cell, ts, item) replaces the old
-        # argsort-by-cell + per-cell lexsort((item, ts)) — identical
-        # states (lexsort is stable, so equal (cell, ts, item) triples
-        # keep their relative order exactly as the two-stage stable
-        # sort did), ~half the sort work per task.
-        o = np.lexsort((items, ts, cell_keys))
-        k_s = cell_keys[o]
-        it_s, va_s, ts_s = items[o], values[o], ts[o]
-        uc, starts = np.unique(k_s, return_index=True)
-        bounds = np.append(starts, len(k_s))
-        states = [{"items": it_s[s:e], "values": va_s[s:e],
-                   "ts": ts_s[s:e]}
-                  for s, e in zip(bounds[:-1], bounds[1:])]
-        return uc, states
-
     def build_from_groups(self, uc, inv, items, values, ts, prep=None):
+        # one stable lexsort by (cell, ts, item): each cell's state rows
+        # in the order merge() sorts them
         o = np.lexsort((items, ts, inv))
         it_s, va_s, ts_s = items[o], values[o], ts[o]
-        starts = np.searchsorted(inv[o], np.arange(len(uc)))
-        bounds = np.append(starts, len(it_s))
+        bounds = np.searchsorted(inv[o], np.arange(len(uc) + 1))
         return [{"items": it_s[s:e], "values": va_s[s:e],
                  "ts": ts_s[s:e]}
                 for s, e in zip(bounds[:-1], bounds[1:])]
@@ -354,10 +345,6 @@ class CMKernel(BaseKernel):
             values.astype(np.int64), flat.shape).ravel())
         return counters.reshape(len(uc), self.d, self.w)
 
-    def build_grouped(self, cell_keys, items, values, ts):
-        uc, inv = np.unique(cell_keys, return_inverse=True)
-        return uc, self.build_from_groups(uc, inv, items, values, ts)
-
     def merge(self, states):
         out = states[0].copy()
         for s in states[1:]:
@@ -406,10 +393,6 @@ class FMKernel(BaseKernel):
                          bits.ravel())
         return [words[i] for i in range(len(uc))]
 
-    def build_grouped(self, cell_keys, items, values, ts):
-        uc, inv = np.unique(cell_keys, return_inverse=True)
-        return uc, self.build_from_groups(uc, inv, items, values, ts)
-
     def merge(self, states):
         out = states[0].copy()
         for s in states[1:]:
@@ -456,10 +439,6 @@ class BFKernel(BaseKernel):
         np.bitwise_or.at(words, (cols.ravel(), widx.ravel()),
                          bits.ravel())
         return [words[i] for i in range(len(uc))]
-
-    def build_grouped(self, cell_keys, items, values, ts):
-        uc, inv = np.unique(cell_keys, return_inverse=True)
-        return uc, self.build_from_groups(uc, inv, items, values, ts)
 
     def merge(self, states):
         out = states[0].copy()
@@ -560,7 +539,6 @@ class ECMKernel(BaseKernel):
         got = self._unit_memo.get(m)
         if got is not None:
             return got
-        import bisect
         i = bisect.bisect_right(self._unit_keys, m) - 1
         base = self._unit_keys[i]
         cur = list(self._unit_memo[base])
@@ -669,22 +647,24 @@ class ECMKernel(BaseKernel):
             del eh[i2]
             size = merged[0]
 
-    def build_grouped(self, cell_keys, items, values, ts):
-        # one stable lexsort by (cell, ts) == the old argsort-by-cell +
-        # per-cell stable argsort-by-ts; hash the whole sorted batch
-        # once instead of once per cell
-        o_all = np.lexsort((ts, cell_keys))
-        k_s = cell_keys[o_all]
-        items_s, values_s, ts_s = items[o_all], values[o_all], ts[o_all]
-        uc, starts = np.unique(k_s, return_index=True)
-        bounds = np.append(starts, len(k_s))
-        h_all = hash_items(items_s, self.coeffs, self.w)   # (d, n)
+    def prep_batch(self, items, values, ts):
+        return {"h": hash_items(items, self.coeffs, self.w)}     # (d, n)
+
+    def build_from_groups(self, uc, inv, items, values, ts, prep=None):
+        # one stable lexsort by (cell, ts): each cell's events in arrival
+        # order, the batch's item hashes gathered into that order
+        if prep is None:
+            prep = self.prep_batch(items, values, ts)
+        o_all = np.lexsort((ts, inv))
+        values_s, ts_s = values[o_all], ts[o_all]
+        h_all = prep["h"][:, o_all]
+        bounds = np.searchsorted(inv[o_all], np.arange(len(uc) + 1))
         states = []
         for ci in range(len(uc)):
             s, e = bounds[ci], bounds[ci + 1]
-            it, va, t = items_s[s:e], values_s[s:e], ts_s[s:e]
+            va, t = values_s[s:e], ts_s[s:e]
             h = h_all[:, s:e]
-            m_total = len(it)
+            m_total = e - s
             # the fold pays one python round per (row, slot) SUBSTREAM;
             # it wins only when substreams are long (hot coarse-grid
             # cells — exactly where the per-event loop explodes). Cold
@@ -714,13 +694,13 @@ class ECMKernel(BaseKernel):
                 states.append(ehs)
                 continue
             ehs = [[[] for _ in range(self.w)] for _ in range(self.d)]
-            for j in range(len(it)):
+            for j in range(m_total):
                 tv = int(t[j])
                 vv = float(va[j])
                 for r in range(self.d):
                     self._eh_insert(ehs[r][h[r, j]], tv, vv)
             states.append(ehs)
-        return uc, states
+        return states
 
     def _flatten(self, eh: list) -> list:
         """EH -> (time, weight) arrivals, half at start / half at end
@@ -961,24 +941,25 @@ class ElasticKernel(BaseKernel):
             m = contended[bpos]
             self._insert_seq(st, items[m], values[m], bpos[m], lpos[m])
 
-    def build_grouped(self, cell_keys, items, values, ts):
-        # one stable lexsort by (cell, ts) == the old argsort-by-cell +
-        # per-cell stable argsort-by-ts; bucket/light positions hashed
-        # for the whole sorted batch once instead of once per cell
-        o_all = np.lexsort((ts, cell_keys))
-        k_s = cell_keys[o_all]
+    def prep_batch(self, items, values, ts):
+        return self._positions(items)
+
+    def build_from_groups(self, uc, inv, items, values, ts, prep=None):
+        # one stable lexsort by (cell, ts): each cell's events in arrival
+        # order, the batch's bucket/light positions gathered into it
+        bpos, lpos = prep if prep is not None else self._positions(items)
+        o_all = np.lexsort((ts, inv))
         items_s, values_s = items[o_all], values[o_all]
-        uc, starts = np.unique(k_s, return_index=True)
-        bounds = np.append(starts, len(k_s))
-        bpos_all, lpos_all = self._positions(items_s)
+        bpos_s, lpos_s = bpos[o_all], lpos[o_all]
+        bounds = np.searchsorted(inv[o_all], np.arange(len(uc) + 1))
         states = []
         for ci in range(len(uc)):
             s, e = bounds[ci], bounds[ci + 1]
             st = self._new_state()
             self._insert_fast(st, items_s[s:e], values_s[s:e],
-                              bpos_all[s:e], lpos_all[s:e])
+                              bpos_s[s:e], lpos_s[s:e])
             states.append(st)
-        return uc, states
+        return states
 
     def merge(self, states):
         out = self._new_state()
@@ -1092,10 +1073,6 @@ class DCMKernel(BaseKernel):
             ).astype(np.int64).reshape(n_cells, self.d, self.w)
         return [{"exact": per_cell_exact[ci], "cms": cms_all[ci]}
                 for ci in range(n_cells)]
-
-    def build_grouped(self, cell_keys, items, values, ts):
-        uc, inv = np.unique(cell_keys, return_inverse=True)
-        return uc, self.build_from_groups(uc, inv, items, values, ts)
 
     def merge(self, states):
         out_exact = {}

@@ -42,6 +42,7 @@ import json
 import os
 import shutil
 import time
+import uuid
 
 import numpy as np
 import pyarrow as pa
@@ -187,12 +188,8 @@ def _partial_builder(cfg: SketchConfig, kind: str, min_level: int):
         prep = kernel.prep_batch(items, values, ts)
         for kx, ky, cells, inv, counts, vsums in pyramid_groups(
                 x, y, values, n, grids):
-            if kernel.build_from_groups is not None:
-                states = kernel.build_from_groups(cells, inv, items,
-                                                  values, ts, prep)
-            else:
-                _, states = kernel.build_grouped(cells[inv], items,
-                                                 values, ts)
+            states = kernel.build_from_groups(cells, inv, items, values,
+                                              ts, prep)
             offsets, data = kernel.encode_batch(states)
             gk = np.full(len(cells), cfg.grid_key(kx, ky), np.int32)
             yield from _sketch_batches(gk, cells, offsets, data, counts,
@@ -263,28 +260,28 @@ def _merge_partitions(cfg: SketchConfig, kind: str):
 def build_sketch_df(events: DataFrame, cfg: SketchConfig, kind: str,
                     min_level: int, num_partitions: int | None = None,
                     mode: str = "zorder") -> DataFrame:
-    """events(ts,item,x,y,value) -> sketch DataFrame. Two shuffle
-    strategies (equal output — asserted in tests):
-
-    mode='partials' (skew-safe fallback): per-partition partial sketches
-      -> hash shuffle on (grid_key, cell) -> partition-level merge. The
-      shuffle carries partials (bounded by touched-cells x partitions);
-      a pathological hot cell still merges only #partitions partials.
+    """events(ts,item,x,y,value) -> sketch DataFrame. Two modes decide
+    how events reach the partial build; both feed the same partial
+    builder and the same merge stage (equal output — asserted in tests):
 
     mode='zorder' (locality fast path): range-partition the raw events on
       their Z-order (Morton) value first. A Z-contiguous partition holds
       whole dyadic subtrees, so partials dedup near-perfectly at EVERY
       pyramid level (only cells straddling partition boundaries produce
       >1 partial) — shuffle volume drops from touched-cells x partitions
-      to ~total-cells + O(partitions x levels^2). Same merge stage, same
-      output (hash-partitioning a grid cell's events across partitions
-      is still handled); the range shuffle moves raw events (small rows)
-      instead of sketch blobs.
+      to ~total-cells + O(partitions x levels^2). The range shuffle moves
+      raw events (small rows) instead of sketch blobs.
+
+    mode='partials' (skew-safe fallback): round-robin the events, build
+      per-partition partial sketches, hash shuffle them on (grid_key,
+      cell) and merge. The shuffle carries partials (bounded by
+      touched-cells x partitions); a pathological hot cell still merges
+      only #partitions partials.
     """
     spark = events.sparkSession
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if mode in ("zorder", "zhash"):
+    if mode == "zorder":
         z = F.lit(0).cast("bigint")
         for b in range(cfg.levels - 1):
             z = (z
@@ -292,19 +289,7 @@ def build_sketch_df(events: DataFrame, cfg: SketchConfig, kind: str,
                     * F.lit(1 << (2 * b + 1)))
                  + (F.shiftright("y", b).bitwiseAND(F.lit(1))
                     * F.lit(1 << (2 * b))))
-        if mode == "zorder":
-            events = events.repartitionByRange(num_partitions, z)
-        else:
-            # zhash: hash-partition on coarse Z-blocks — same locality for
-            # all levels below the block level, but no range-sampling job
-            # and fully deterministic partitioning. Block level chosen so
-            # there are ~8 blocks per partition.
-            import math
-            block_level = max(min_level, (cfg.levels - 1)
-                              - max(1, math.ceil(
-                                  math.log(max(num_partitions * 8, 2), 4))))
-            events = events.repartition(num_partitions,
-                                        F.shiftright(z, 2 * block_level))
+        events = events.repartitionByRange(num_partitions, z)
     elif mode == "partials":
         # ensure the narrow input is actually parallel (a single parquet
         # file otherwise serializes the whole partial build on one core)
@@ -313,7 +298,19 @@ def build_sketch_df(events: DataFrame, cfg: SketchConfig, kind: str,
         raise ValueError(f"unknown build mode {mode!r}")
     partials = events.mapInArrow(_partial_builder(cfg, kind, min_level),
                                  schema=SKETCH_SCHEMA)
-    return partials.repartition(num_partitions, "grid_key", "cell") \
+    return merge_partials(partials, cfg, kind, num_partitions)
+
+
+def merge_partials(df: DataFrame, cfg: SketchConfig, kind: str,
+                   num_partitions: int | None = None) -> DataFrame:
+    """The merge stage: hash-repartition sketch rows on (grid_key, cell)
+    so every cell's partials share a partition, then merge them to one
+    row per cell. Serves the build, ``merge_events`` (snapshot + delta)
+    and streaming compaction (snapshot + micro-batch partials)."""
+    if num_partitions is None:
+        num_partitions = int(
+            df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return df.repartition(num_partitions, "grid_key", "cell") \
         .mapInArrow(_merge_partitions(cfg, kind), schema=SKETCH_SCHEMA)
 
 
@@ -412,12 +409,22 @@ class SketchStore:
         (``manifest_s<seq>.json`` — the Iceberg metadata-log analogue,
         one file per committed snapshot, never rewritten) then repoint
         the current-pointer file ``manifest.json`` (the
-        version-hint/catalog analogue)."""
+        version-hint/catalog analogue). The pointer is written to a temp
+        file in the same directory and renamed over ``manifest.json``,
+        so a write that fails partway leaves the previous snapshot
+        current instead of a torn pointer."""
         seq = int(manifest.get("snapshot_seq", 0))
         with open(f"{path}/manifest_s{seq}.json", "w") as f:
             json.dump(manifest, f, indent=1, sort_keys=True)
-        with open(f"{path}/manifest.json", "w") as f:
-            json.dump(manifest, f, indent=1, sort_keys=True)
+        tmp = f"{path}/.manifest.{uuid.uuid4().hex}.tmp"
+        try:
+            with open(tmp, "w") as f:
+                json.dump(manifest, f, indent=1, sort_keys=True)
+            os.replace(tmp, f"{path}/manifest.json")
+        except BaseException:
+            if os.path.exists(tmp):
+                os.remove(tmp)
+            raise
 
     @classmethod
     def snapshots(cls, path: str) -> list[dict]:
@@ -560,13 +567,10 @@ class SketchStore:
                 "compact()ed streaming snapshot)")
         t0 = time.time()
         spark = self.spark
-        p = int(spark.conf.get("spark.sql.shuffle.partitions"))
         delta = build_sketch_df(new_events, self.cfg, self.kind,
                                 self.min_level, mode=mode)
-        merged = (self.df.unionByName(delta)
-                  .repartition(p, "grid_key", "cell")
-                  .mapInArrow(_merge_partitions(self.cfg, self.kind),
-                              schema=SKETCH_SCHEMA))
+        merged = merge_partials(self.df.unionByName(delta), self.cfg,
+                                self.kind)
         seq = int(self.manifest.get("snapshot_seq", 0)) + 1
         if self.path:
             # optimistic concurrency (Iceberg commit semantics): the

@@ -185,12 +185,15 @@ def overlap_join(a: DataFrame, b: DataFrame, block: int,
     the blowup ~2x. Returns a.* + b.* + (ov_lo, ov_hi)."""
     if block <= 0:
         raise ValueError("block must be positive")
-    # exact integer floor division for the block keys (ADVICE r7: the
-    # float quotient loses exactness for |bounds| at/past 2^53, e.g.
-    # epoch nanoseconds, silently breaking block coverage and the
-    # exactly-once start-block rule). Nonnegative bounds are asserted
-    # by the sequence (a negative lo would raise on a descending
-    # range); `div` truncation == floor for nonnegative operands.
+    # exact integer block keys (ADVICE r7: the float quotient loses
+    # exactness for |bounds| at/past 2^53, e.g. epoch nanoseconds,
+    # silently breaking block coverage and the exactly-once start-block
+    # rule). `div` truncates toward zero, so it is not floor division
+    # for negative bounds, but it is monotone: both sides explode onto
+    # the same keys the start-block check uses, so coverage and
+    # exactly-once hold for negative bounds too. The one cost is that
+    # the block straddling zero is 2·block − 1 wide,
+    # [-(block - 1), block - 1].
     blks = lambda lo, hi: F.explode(  # noqa: E731
         F.sequence(F.expr(f"{lo} div {block}"),
                    F.expr(f"{hi} div {block}")))

@@ -47,7 +47,7 @@ from pyspark.sql import functions as F
 
 from ..config import SketchConfig
 from ..geo.build import (SKETCH_SCHEMA, SketchStore, build_sketch_df,
-                         _merge_partitions)
+                         merge_partials)
 
 
 class StreamingSketch:
@@ -160,10 +160,7 @@ class StreamingSketch:
         t0 = time.time()
         man = self._current_manifest()
         fp, lineage, last_batch = self._accumulated_state()
-        df = self.sketch_df()
-        nparts = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        merged = df.repartition(nparts, "grid_key", "cell").mapInArrow(
-            _merge_partitions(self.cfg, self.kind), schema=SKETCH_SCHEMA)
+        merged = merge_partials(self.sketch_df(), self.cfg, self.kind)
         seq = int(man.get("snapshot_seq", -1)) + 1
         data_dir = f"sketch_s{seq}"
         # optimistic concurrency, check #1 (ADVICE r4): verify the

@@ -532,6 +532,53 @@ def test_merge_events_concurrent_commit_rejected(spark, events, tmp_path):
             == SketchStore.fingerprint_events(events))
 
 
+def test_torn_pointer_write_keeps_previous_snapshot(spark, events, tmp_path,
+                                                   monkeypatch):
+    """A current-pointer write that fails partway through a merge_events
+    commit leaves the previous snapshot current: it still loads with its
+    rows intact, and a retry from it commits the next seq."""
+    import json
+    import os
+    import re
+
+    import spatialsketch_spark.geo.build as build_mod
+
+    class TornJson:
+        """json whose dump dies halfway through any file but a
+        per-snapshot manifest_s<seq>.json."""
+        load = staticmethod(json.load)
+
+        @staticmethod
+        def dump(obj, f, **kw):
+            text = json.dumps(obj, **kw)
+            if re.search(r"manifest_s\d+\.json$", str(f.name)):
+                f.write(text)
+                return
+            f.write(text[:len(text) // 2])
+            f.flush()
+            raise OSError("disk full")
+
+    cfg = SketchConfig.exact_mode(item_domain=ITEM_DOMAIN, n=N)
+    p = str(tmp_path / "store")
+    a = events.where(F.col("ts") % 2 == 0)
+    b = events.where(F.col("ts") % 2 == 1)
+    s0 = SketchStore.build(spark, a, cfg, "exact", 2, p)
+    rows0 = _store_rows(s0)
+    monkeypatch.setattr(build_mod, "json", TornJson)
+    with pytest.raises(OSError, match="disk full"):
+        s0.merge_events(b)
+    monkeypatch.undo()
+    assert not [f for f in os.listdir(p) if f.endswith(".tmp")]
+    cur = SketchStore.load(spark, p, cfg, "exact")
+    assert cur.manifest["snapshot_seq"] == 0
+    assert _store_rows(cur) == rows0
+    s1 = cur.merge_events(b)
+    assert SketchStore.load(spark, p, cfg, "exact") \
+        .manifest["snapshot_seq"] == 1
+    assert (s1.manifest["input_fingerprint"]
+            == SketchStore.fingerprint_events(events))
+
+
 def test_combine_fingerprints_legacy_manifest_rejected():
     """A pre-sum_hash manifest (xor_hash era) is not union-combinable —
     merge must fail with the rebuild remedy, not a bare KeyError."""

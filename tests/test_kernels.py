@@ -720,11 +720,18 @@ def test_sketch_batches_split_payload_bytes():
                              max_bytes=5))
 
 
-@pytest.mark.parametrize("kind", ["cm", "fm"])
+KINDS = ["exact", "cm", "fm", "bf", "dcm", "ecm", "elastic"]
+
+
+@pytest.mark.parametrize("kind", KINDS)
 def test_spark_build_equals_reference_table(spark, kind):
-    """A Spark build (Arrow partials, vectorized CM encoder / default
-    encoder for FM, merge of partials across 3 partitions) equals a
-    table assembled per grid from build_grouped + serialize."""
+    """A Spark build (Arrow partials, each kind's encoder, merge of
+    partials across 3 partitions) equals a table assembled per grid from
+    each partition's build_grouped partials, merged per cell and
+    serialized. ECM and Elastic merges are lossy, so the reference
+    merges the same per-partition partials the build does; for the
+    other kinds that equals one build over all events."""
+    from pyspark.sql import functions as F
     from spatialsketch_spark.config import SketchConfig
     from spatialsketch_spark.core.kernels import make_kernel
     from spatialsketch_spark.geo.build import build_sketch_df, live_grids
@@ -733,6 +740,8 @@ def test_spark_build_equals_reference_table(spark, kind):
                                  dropped_grids=frozenset({(1, 2)}))
     rng = np.random.default_rng(8)
     m = 4000
+    # unique ts: an ECM merge re-sorts arrivals by time, so the order of
+    # a cell's partials then cannot change the merged state
     ev = {"ts": np.arange(m, dtype=np.int64),
           "item": rng.integers(0, 500, m).astype(np.int64),
           "x": rng.integers(0, n, m).astype(np.int64),
@@ -745,16 +754,102 @@ def test_spark_build_equals_reference_table(spark, kind):
                   r["n_events"], r["val_sum"])
                  for r in build_sketch_df(df, cfg, kind, 1, num_partitions=3,
                                           mode="partials").collect())
+    # the partition of every event under the build's round-robin
+    # exchange (every column kept: the exchange sorts whole rows first)
+    part = {r["ts"]: r["p"] for r in df.repartition(3)
+            .withColumn("p", F.spark_partition_id()).collect()}
+    pid = np.array([part[t] for t in ev["ts"].tolist()])
+    assert len(set(pid.tolist())) == 3
     kernel = make_kernel(kind, cfg)
     want = []
     for kx, ky in live_grids(cfg, 1):
         keys = (ev["x"] >> kx) * n + (ev["y"] >> ky)
-        uc, states = kernel.build_grouped(keys, ev["item"], ev["value"],
-                                          ev["ts"])
-        _, inv = np.unique(keys, return_inverse=True)
+        partials = {}
+        for p in range(3):
+            sel = pid == p
+            uc, states = kernel.build_grouped(keys[sel], ev["item"][sel],
+                                              ev["value"][sel], ev["ts"][sel])
+            for c, st in zip(uc.tolist(), states):
+                partials.setdefault(c, []).append(st)
+        uc, inv = np.unique(keys, return_inverse=True)
         cnt = np.bincount(inv)
         vs = np.bincount(inv, weights=ev["value"]).astype(np.int64)
-        want += [(cfg.grid_key(kx, ky), int(c), kernel.serialize(s),
-                  int(cnt[i]), int(vs[i]))
-                 for i, (c, s) in enumerate(zip(uc.tolist(), states))]
+        for i, c in enumerate(uc.tolist()):
+            sts = partials[c]
+            st = sts[0] if len(sts) == 1 else kernel.merge(sts)
+            want.append((cfg.grid_key(kx, ky), c, kernel.serialize(st),
+                         int(cnt[i]), int(vs[i])))
     assert got == sorted(want)
+    if kind not in ("ecm", "elastic"):
+        # exact monoids: the merged partials equal one whole-batch build
+        kx, ky = live_grids(cfg, 1)[0]
+        keys = (ev["x"] >> kx) * n + (ev["y"] >> ky)
+        _, states = kernel.build_grouped(keys, ev["item"], ev["value"],
+                                         ev["ts"])
+        gk = cfg.grid_key(kx, ky)
+        assert [w[2] for w in sorted(want) if w[0] == gk] == \
+            [kernel.serialize(st) for st in states]
+
+
+@pytest.mark.parametrize("kind", ["ecm", "elastic"])
+def test_build_from_groups_equals_each_cell_alone(kind, monkeypatch):
+    """Folding many cells from their group labels, with the batch's item
+    hashes from one prep_batch, equals folding every cell on its own.
+    For ECM the lone fold is also the per-event _eh_insert reference
+    (the closed-form folds disabled)."""
+    from spatialsketch_spark.core.kernels import ElasticKernel
+    rng = np.random.default_rng(23)
+    n = 20_000
+    # ~300 cells, a few hot enough for ECM's closed-form fold
+    cells = (np.minimum(rng.geometric(0.01, n), 300) * 7 + 3).astype(np.int64)
+    items = rng.integers(0, 200, n).astype(np.int64)
+    values = np.where(rng.random(n) < 0.5, 1,
+                      rng.integers(1, 4, n)).astype(np.int64)
+    ts = rng.integers(0, n // 2, n).astype(np.int64)   # ties, unsorted
+    if kind == "ecm":
+        kern = ECMKernel(width=4, depth=2, k=2, seed=7)
+    else:
+        kern = ElasticKernel(n_buckets=8, slots=2, light_width=32, seed=7)
+    uc, inv = np.unique(cells, return_inverse=True)
+    states = kern.build_from_groups(uc, inv, items, values, ts,
+                                    kern.prep_batch(items, values, ts))
+    assert len(states) == len(uc) > 250
+    one = np.zeros(1, dtype=np.int64)
+
+    def alone(c):
+        sel = cells == c
+        z = np.zeros(int(sel.sum()), dtype=np.int64)
+        return kern.build_from_groups(one, z, items[sel], values[sel],
+                                      ts[sel])[0]
+
+    for c, st in zip(uc.tolist(), states):
+        if kind == "ecm":
+            assert st == alone(c), c
+        else:
+            assert kern.serialize(st) == kern.serialize(alone(c)), c
+    if kind == "ecm":
+        assert max(np.bincount(inv)) >= 4 * kern.d * kern.w
+        monkeypatch.setattr(ECMKernel, "_UNIT_FOLD_MAX", 0)
+        for c, st in zip(uc.tolist(), states):
+            assert st == alone(c), c
+
+
+def test_one_build_interface(spark):
+    """Every kind folds through build_from_groups; build_grouped is the
+    one BaseKernel helper; the build has two modes."""
+    import spatialsketch_spark.core.kernels as K
+    from spatialsketch_spark.config import SketchConfig
+    from spatialsketch_spark.geo.build import build_sketch_df
+    cfg = SketchConfig.realistic(n=64, item_domain=500)
+    made = {type(K.make_kernel(kind, cfg)) for kind in KINDS}
+    assert all("build_from_groups" in vars(c) for c in made)
+    kernels = [c for c in vars(K).values()
+               if isinstance(c, type) and issubclass(c, K.BaseKernel)]
+    assert made < set(kernels)
+    assert [c for c in kernels if "build_grouped" in vars(c)] \
+        == [K.BaseKernel]
+    df = spark.createDataFrame([(0, 1, 2, 3, 1)],
+                               "ts BIGINT, item BIGINT, x BIGINT, y BIGINT, "
+                               "value BIGINT")
+    with pytest.raises(ValueError, match="unknown build mode"):
+        build_sketch_df(df, cfg, "cm", 1, mode="zhash")

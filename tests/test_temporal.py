@@ -198,3 +198,32 @@ def test_overlap_join_exactly_once_across_blocks(spark):
     assert (1, 11) in pairs          # a_hi == b_lo boundary
     assert (5, 14) in pairs          # multi-block-wide both sides
     assert (4, 13) not in pairs      # gap of 1: disjoint
+
+
+def test_overlap_join_negative_and_zero_crossing_bounds(spark):
+    """Bounds below and across zero: `div` truncates toward zero, so the
+    block straddling zero spans [-(block-1), block-1]. The block keys
+    stay monotone and shared by both sides and the start-block check,
+    so the blocked plan emits exactly the brute-force overlap pairs,
+    each once, with the right (ov_lo, ov_hi)."""
+    from spatialsketch_spark.pipeline.temporal import overlap_join
+
+    a_rows = [(1, -250, -101), (2, -99, 99), (3, -5, 5), (4, -1000, 1000),
+              (5, 0, 0), (6, -100, -100), (7, 99, 150), (8, -301, -300)]
+    b_rows = [(10, -100, -100), (11, 0, 250), (12, -300, -200),
+              (13, 100, 100), (14, -1, -1), (15, -199, -101),
+              (16, 1, 98), (17, -302, -299)]
+    a = spark.createDataFrame(a_rows, "a_id INT, a_lo BIGINT, a_hi BIGINT")
+    b = spark.createDataFrame(b_rows, "b_id INT, b_lo BIGINT, b_hi BIGINT")
+    got = [tuple(r) for r in overlap_join(a, b, block=100)
+           .select("a_id", "b_id", "ov_lo", "ov_hi").collect()]
+    want = sorted((ai, bi, max(alo, blo), min(ahi, bhi))
+                  for ai, alo, ahi in a_rows for bi, blo, bhi in b_rows
+                  if alo <= bhi and blo <= ahi)
+    assert sorted(got) == want
+    assert len(got) == len(set(got))
+    pairs = {(ai, bi) for ai, bi, _, _ in want}
+    assert (3, 14) in pairs          # both inside the zero block
+    assert (2, 10) not in pairs      # -99 vs -100: disjoint by one
+    assert (6, 10) in pairs          # equal negative points touch
+    assert (8, 17) in pairs          # both left of the zero block
