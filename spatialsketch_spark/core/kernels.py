@@ -15,6 +15,12 @@ Spark partial builder hands every kernel the group labels its pyramid
 grouping computed; ``BaseKernel.build_grouped`` is the short helper that
 groups raw cell keys first.
 
+One query interface: ``qkinds`` names the kinds a kernel answers besides
+``count`` (read from val_sum); ``additive_ests`` answers the additive
+kinds per (cell, query) entry, ``merged_est`` one merge-kind query over
+a rect-set's cell states. Serving only dispatches to them, as
+``SpatialSketch::QueryRanges`` does (SpatialSketch.cpp:837-855).
+
 Reference kernels being re-expressed:
 - CountMin insert/query/merge/L2: CountMin.cpp:122-158, 184-194, 196-215
 - FM insert/estimate/merge:       FM.cpp:102-148, 154-172
@@ -67,8 +73,14 @@ def _canon(obj):
     return obj
 
 
+def _opt(v) -> int | None:
+    """-1 (unset) query field -> None, else the int."""
+    return int(v) if v >= 0 else None
+
+
 class BaseKernel:
     kind = "base"
+    qkinds: frozenset = frozenset()
 
     def serialize(self, state) -> bytes:
         return pickle.dumps(_canon(state), protocol=4)
@@ -110,6 +122,30 @@ class BaseKernel:
     def merge(self, states: list):
         raise NotImplementedError
 
+    def additive_ests(self, payloads, ent, qkind, item, item_end,
+                      t0) -> np.ndarray:
+        """-> int64[len(ent)]: entry e's estimate over the state of
+        ``payloads[ent[e]]``, before coverage scaling, for the query
+        fields ``qkind[e]``, ``item[e]``, ``item_end[e]``, ``t0[e]``
+        (-1: unset). Each distinct payload is deserialized once. The
+        base probes entry by entry through ``query_item``."""
+        states = [self.deserialize(b) for b in payloads]
+        return np.fromiter(
+            (self.query_item(states[i], a, _opt(b), _opt(t))
+             for i, a, b, t in zip(ent.tolist(), item.tolist(),
+                                   item_end.tolist(), t0.tolist())),
+            dtype=np.int64, count=len(ent))
+
+    def merged_est(self, states: list, qkind: str, item: int,
+                   item_end: int, t0: int) -> int:
+        """Merge-kind estimate of one query over its rect-set's cell
+        states (-1: unset field; coverage is ignored). The base merges
+        the states, then probes once: ``window_merge``, the reference's
+        ECM_merge mode (SpatialSketch.cpp:1175-1221)."""
+        merged = states[0] if len(states) == 1 else self.merge(states)
+        return int(self.query_item(merged, item, _opt(item_end),
+                                   _opt(t0)))
+
 
 class ExactKernel(BaseKernel):
     """Collision-free synopsis: the exact per-cell event arrays.
@@ -123,6 +159,8 @@ class ExactKernel(BaseKernel):
     """
 
     kind = "exact"
+    qkinds = frozenset({"freq", "range_freq", "window", "window_merge",
+                        "distinct", "member", "l2"})
     _MAGIC = b"XK1\x00\x00\x00\x00\x00"   # 8 bytes so arrays stay 8-aligned
 
     def serialize(self, state) -> bytes:
@@ -165,14 +203,37 @@ class ExactKernel(BaseKernel):
             m &= st["ts"] >= t0
         return int(st["values"][m].sum())
 
-    def query_total(self, st) -> int:
-        return int(st["values"].sum())
+    def additive_ests(self, payloads, ent, qkind, item, item_end, t0):
+        # one concatenated pass: entry-tagged masks answer freq /
+        # range_freq / window together (exact state = event arrays)
+        states = [self.deserialize(b) for b in payloads]
+        ents = [states[i] for i in ent.tolist()]
+        lens = np.fromiter((len(s["items"]) for s in ents),
+                           dtype=np.int64, count=len(ents))
+        e = np.repeat(np.arange(len(ents)), lens)
+        allit = np.concatenate([s["items"] for s in ents])
+        allva = np.concatenate([s["values"] for s in ents])
+        allts = np.concatenate([s["ts"] for s in ents])
+        m = (allit >= item[e]) & (allit <= np.where(item_end >= 0,
+                                                    item_end, item)[e])
+        twin = np.where((qkind == "window") & (t0 >= 0), t0,
+                        np.iinfo(np.int64).min)
+        m &= allts >= twin[e]
+        return int_group_sum(e[m], allva[m], len(ents))
 
-    def query_l2_counts(self, st) -> dict:
-        """item -> count map contribution (merged across cells, then L2)."""
-        uc, inv = np.unique(st["items"], return_inverse=True)
-        cnt = int_group_sum(inv, st["values"], len(uc))
-        return {"items": uc, "counts": cnt}
+    def merged_est(self, states, qkind, item, item_end, t0):
+        if qkind == "distinct":
+            return int(len(np.unique(np.concatenate(
+                [self.distinct_items(st) for st in states]))))
+        if qkind == "member":
+            return int(any(self.member(st, item) for st in states))
+        if qkind == "l2":
+            uc, inv = np.unique(np.concatenate(
+                [st["items"] for st in states]), return_inverse=True)
+            cnt = int_group_sum(inv, np.concatenate(
+                [st["values"] for st in states]), len(uc))
+            return int((cnt ** 2).sum())
+        return super().merged_est(states, qkind, item, item_end, t0)
 
     def distinct_items(self, st) -> np.ndarray:
         return np.unique(st["items"])
@@ -186,6 +247,7 @@ class CMKernel(BaseKernel):
     (the reference shares hashab_ across cells, SpatialSketch.cpp:365-373)."""
 
     kind = "cm"
+    qkinds = frozenset({"freq", "l2"})
 
     def __init__(self, width: int, depth: int, seed: int = 7):
         self.w = int(width)
@@ -312,21 +374,35 @@ class CMKernel(BaseKernel):
         out.reshape(-1)[p * size + idx] = words[at + nnz[p]]
         return out.reshape(len(payloads), self.d, self.w)
 
-    def query_items_batch(self, counters: np.ndarray,
-                          items: np.ndarray) -> np.ndarray:
-        """Vectorized point-frequency probe: counters (B, d, w),
-        items (B,) -> min-over-rows estimates (B,)."""
-        h = self.hash(items)                                   # (d, B)
-        b_idx = np.arange(counters.shape[0])[:, None]          # (B, 1)
-        r_idx = np.arange(self.d)[None, :]                     # (1, d)
-        return counters[b_idx, r_idx, h.T].min(axis=1)
+    def query_items_batch(self, counters: np.ndarray, items: np.ndarray,
+                          ent: np.ndarray | None = None) -> np.ndarray:
+        """Vectorized point-frequency probe: counters (B, d, w), items
+        (E,) -> min-over-rows estimates (E,); entry e probes counter
+        matrix ``ent[e]`` (default: E == B, entry e matrix e)."""
+        if ent is None:
+            ent = np.arange(counters.shape[0])
+        h = self.hash(items)                                   # (d, E)
+        return counters[ent[:, None], np.arange(self.d)[None, :],
+                        h.T].min(axis=1)
 
-    def query_total(self, st) -> int:
-        """Exact total mass in the cell: every insert adds `value` once
-        per row, so any single row sums to the cell total — the
-        reference's plain 'Count' synopsis (Tech Report Table 3 (a))
-        comes for free from CM row 0."""
-        return int(st[0].sum())
+    @staticmethod
+    def _check_point(item, item_end, t0):
+        # -1: unset; item_end == item is a point range and is accepted
+        if np.any((item_end >= 0) & (item_end != item)):
+            raise ValueError("CM answers point frequencies only; item "
+                             "ranges need a 'dcm' (or exact-mode) store")
+        if np.any(t0 > 0):
+            raise ValueError("CM has no time dimension; window queries "
+                             "need an 'ecm' (or exact-mode) store")
+
+    def additive_ests(self, payloads, ent, qkind, item, item_end, t0):
+        # one (B, d, w) counter stack, probed through the entry index
+        self._check_point(item, item_end, t0)
+        return self.query_items_batch(self.deserialize_batch(payloads),
+                                      item, ent)
+
+    def merged_est(self, states, qkind, item, item_end, t0):
+        return self.l2_estimate(self.merge(states))      # qkind == "l2"
 
     def prep_batch(self, items, values, ts):
         return {"h": self.hash(items)}                       # (d, n)
@@ -352,12 +428,8 @@ class CMKernel(BaseKernel):
         return out
 
     def query_item(self, st, item, item_end=None, t0=None) -> int:
-        if item_end is not None and item_end != item:
-            raise ValueError("CM answers point frequencies only; item "
-                             "ranges need a 'dcm' (or exact-mode) store")
-        if t0 is not None and t0 > 0:
-            raise ValueError("CM has no time dimension; window queries "
-                             "need an 'ecm' (or exact-mode) store")
+        self._check_point(item, -1 if item_end is None else item_end,
+                          -1 if t0 is None else t0)
         h = self.hash(np.array([item]))[:, 0]
         return int(st[np.arange(self.d), h].min())    # CountMin.cpp:184-194
 
@@ -371,6 +443,7 @@ class FMKernel(BaseKernel):
     estimate = 2^(mean lowest-unset-bit) / phi (FM.cpp:135-148)."""
 
     kind = "fm"
+    qkinds = frozenset({"distinct"})
 
     def __init__(self, eps: float, delta: float, seed: int = 7):
         import math
@@ -410,12 +483,17 @@ class FMKernel(BaseKernel):
             rs[i] = r
         return float(2.0 ** rs.mean() / FM_PHI)
 
+    def merged_est(self, states, qkind, item, item_end, t0):
+        # OR-merge the bitmaps, then estimate (qkind == "distinct")
+        return int(round(self.estimate(self.merge(states))))
+
 
 class BFKernel(BaseKernel):
     """Bloom filter: m bits packed into uint64 words, d hash rows
     (BloomFilter.cpp:28-37 sizing, :80-125 insert/query)."""
 
     kind = "bf"
+    qkinds = frozenset({"member"})
 
     def __init__(self, expected_n: int, delta: float, seed: int = 7):
         import math
@@ -451,6 +529,11 @@ class BFKernel(BaseKernel):
         w = (h >> 6).astype(np.int64)
         b = (np.uint64(1) << (h.astype(np.uint64) & np.uint64(63)))
         return bool(np.all((st[w] & b) != 0))
+
+    def merged_est(self, states, qkind, item, item_end, t0):
+        # any cell's filter positive (qkind == "member"): probing each
+        # filter is not equivalent to probing their OR-merge
+        return int(any(self.member(st, item) for st in states))
 
 
 class _EHFold:
@@ -513,6 +596,7 @@ class ECMKernel(BaseKernel):
     """
 
     kind = "ecm"
+    qkinds = frozenset({"freq", "window", "window_merge"})
 
     def __init__(self, width: int, depth: int, k: int, seed: int = 7):
         self.w = int(width)
@@ -790,6 +874,7 @@ class ElasticKernel(BaseKernel):
     """
 
     kind = "elastic"
+    qkinds = frozenset({"freq"})
 
     def __init__(self, n_buckets: int, slots: int, light_width: int,
                  lam: int = 8, seed: int = 7):
@@ -1017,6 +1102,7 @@ class DCMKernel(BaseKernel):
     """
 
     kind = "dcm"
+    qkinds = frozenset({"range_freq"})
 
     def __init__(self, log_domain: int, width: int, depth: int,
                  exact_levels: int, seed: int = 7):
@@ -1086,12 +1172,15 @@ class DCMKernel(BaseKernel):
             cms += s["cms"]
         return {"exact": out_exact, "cms": cms}
 
-    def query_range(self, st, a: int, b: int) -> int:
-        """Canonical 1-D cover over item ids; exact levels answered
-        exactly, CM levels by min-row point estimates."""
+    def query_item(self, st, item, item_end=None, t0=None) -> int:
+        """Frequency of the item range [item, item_end] (no item_end:
+        the one-item range) by its canonical 1-D cover over item ids;
+        exact levels answered exactly, CM levels by min-row point
+        estimates. The store has no time dimension: t0 is not read."""
         from .dyadic import cover_1d_items
+        end = item if item_end is None else item_end
         total = 0
-        for lvl, prefix in cover_1d_items(a, b, self.L):
+        for lvl, prefix in cover_1d_items(item, end, self.L):
             if lvl < self.exact_levels:
                 up, cnt = st["exact"][lvl]
                 j = np.searchsorted(up, prefix)

@@ -287,7 +287,7 @@ rvals AS (
   FROM probes p2 CROSS JOIN hash h2
   LEFT JOIN rowbits rb ON rb.qid = p2.qid AND rb.r = h2.r),
 est AS (
-  -- engine rounds (query.py _estimate_one: int(round(estimate)));
+  -- engine rounds (FMKernel.merged_est: int(round(estimate)));
   -- python round is half-even vs DuckDB half-away, but the fixture
   -- estimate sits 0.13 from the boundary — far beyond any libm ulp
   SELECT qid, CAST(ROUND(pow(2.0, SUM(rr) / {k.d}.0) / {FM_PHI})
@@ -406,9 +406,10 @@ def q_env_window_ecm(spark, sf_dir) -> DataFrame:
     builds has the closed-form shape ``_eh_from_sorted_const`` derives
     (class counts = the cascade recurrence, proven equal to the closed
     digit formula in tests/test_kernels.py), window estimates are
-    ADDITIVE over cover cells (query.py:82-88 — no cross-cell merge on
-    the 'window' path), and DuckDB rebuilds the buckets, HistSum and
-    min-over-rows bit-for-bit; est is hash-compared alongside ok."""
+    ADDITIVE over cover cells (ECMKernel.additive_ests — no cross-cell
+    merge on the 'window' path), and DuckDB rebuilds the buckets,
+    HistSum and min-over-rows bit-for-bit; est is hash-compared
+    alongside ok."""
     st = _store(spark, sf_dir, "ecm")
     eng = SpatialSketchEngine(st)
     qs = [QuerySpec(i, [r], "window", item=it, t0=t0)

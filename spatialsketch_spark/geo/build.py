@@ -550,13 +550,16 @@ class SketchStore:
         """Incremental batch update — the table-level mirror of the
         reference's continuous ``Update()`` (SpatialSketch.cpp:535-599)
         and the MERGE INTO-style posture the Iceberg north rule names:
-        build the sketch DELTA from ``new_events`` only, monoid-merge it
-        into this snapshot's table, and write a NEW snapshot (data dir
+        build the sketch DELTA from ``new_events`` only, merge it into
+        this snapshot's table, and write a NEW snapshot (data dir
         ``sketch_s<seq>``, manifest repointed, parent recorded — old
-        snapshot dirs stay readable). Because every kernel's merge is a
-        commutative monoid, ``build(A).merge_events(B)`` equals
-        ``build(A ∪ B)`` bit-for-bit per kernel kind (asserted in
-        tests/test_geo_pipeline.py); the union input fingerprint is
+        snapshot dirs stay readable). Where the kernel's merge is a
+        commutative monoid (exact, CM, FM, BF, DCM),
+        ``build(A).merge_events(B)`` equals ``build(A ∪ B)`` bit-for-bit
+        (test_merge_events_equals_full_build); the ECM and Elastic
+        merges are deterministic but lossy, so there the result stays
+        inside the kernel's estimate envelope instead
+        (test_merge_events_lossy_kinds). The union input fingerprint is
         combined arithmetically, so a later ``build_or_load`` over
         A ∪ B serves the merged snapshot without a rebuild."""
         if "input_fingerprint" not in self.manifest:

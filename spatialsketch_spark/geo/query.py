@@ -39,8 +39,11 @@ Query kinds and their reference semantics:
   window_merge merge the cells' ECM histograms, then one HistSum
             (ECM_merge mode :1175-1221)
 
-The ``exact`` kernel answers every kind exactly (collision-free mode) —
-that is what the DuckDB oracle gate exercises.
+Every kind but ``count`` is answered by the store's kernel
+(``core/kernels.py``): its ``qkinds`` names the kinds it answers, and
+its ``additive_ests`` / ``merged_est`` answer them; this module only
+dispatches. The ``exact`` kernel answers every kind exactly
+(collision-free mode) — that is what the DuckDB oracle gate exercises.
 """
 
 from __future__ import annotations
@@ -61,19 +64,6 @@ from .build import SketchStore
 COVER_SCHEMA = "pid BIGINT, grid_key INT, cell BIGINT, coverage DOUBLE"
 RESULT_SCHEMA = "qid BIGINT, est BIGINT"
 
-# qkind -> kernels that answer it (None: any kernel, from val_sum).
-# Checked for every query up front: a range_freq at a plain-CM store
-# would otherwise silently return point-frequency estimates.
-QKIND_KERNELS = {
-    "count": None,
-    "freq": {"exact", "cm", "ecm", "elastic"},
-    "range_freq": {"exact", "dcm"},
-    "window": {"exact", "ecm"},
-    "window_merge": {"exact", "ecm"},
-    "distinct": {"exact", "fm"},
-    "member": {"exact", "bf"},
-    "l2": {"exact", "cm"},
-}
 # sum over cells of trunc(coverage * cell estimate); every other kind
 # merges the cells' states before estimating
 ADDITIVE = frozenset({"count", "freq", "range_freq", "window"})
@@ -83,7 +73,7 @@ ADDITIVE = frozenset({"count", "freq", "range_freq", "window"})
 class QuerySpec:
     qid: int
     ranges: list          # [(x1, y1, x2, y2)] inclusive integer cell ranges
-    qkind: str = "freq"   # a QKIND_KERNELS key
+    qkind: str = "freq"   # "count" or one of the kernel's qkinds
     item: int = -1
     item_end: int = -1
     t0: int = -1
@@ -96,115 +86,15 @@ class QuerySpec:
                          qkind, item, item_end, t0)
 
 
-def _estimate_one(kernel, states: list, q: QuerySpec) -> int:
-    """Merge-kind estimate for ONE query over its rect-set's cell
-    states. Fractional coverage is intentionally ignored (a merged
-    bitmap/filter/counter set has no meaningful scalar scaling)."""
-    if q.qkind == "distinct":
-        if kernel.kind == "exact":
-            allitems = np.unique(np.concatenate(
-                [kernel.distinct_items(st) for st in states]))
-            est = int(len(allitems))
-        else:                              # FM: OR-merge then estimate
-            est = int(round(kernel.estimate(kernel.merge(states))))
-    elif q.qkind == "member":
-        hit = any(kernel.member(st, q.item) for st in states)
-        est = 1 if hit else 0
-    elif q.qkind == "window_merge":
-        # reference ECM_merge mode (SpatialSketch.cpp:1175-1221):
-        # merge the cover cells' histograms first (MergeECM arrival
-        # reconstruction), then one HistSum min-over-rows
-        merged = states[0] if len(states) == 1 else kernel.merge(states)
-        est = kernel.query_item(merged, q.item,
-                                q.item_end if q.item_end >= 0 else None,
-                                q.t0 if q.t0 >= 0 else None)
-    elif q.qkind == "l2":
-        if kernel.kind == "exact":
-            parts = [kernel.query_l2_counts(st) for st in states]
-            allit = np.concatenate([p["items"] for p in parts])
-            allct = np.concatenate([p["counts"] for p in parts])
-            uc, inv = np.unique(allit, return_inverse=True)
-            cnt = int_group_sum(inv, allct, len(uc))
-            est = int((cnt ** 2).sum())
-        else:                              # CM: merge counters, L2 min-row
-            est = int(kernel.l2_estimate(kernel.merge(states)))
-    else:
-        raise ValueError(f"unknown merge qkind {q.qkind!r}")
-    return int(est)
-
-
-def _additive_ests(kernel, payloads: pd.Series, val_sum: np.ndarray,
-                   row: np.ndarray, qkind: np.ndarray, item: np.ndarray,
-                   item_end: np.ndarray, t0: np.ndarray) -> np.ndarray:
-    """Per-(cell, query) estimates before coverage scaling. Entry e
-    pairs matched row ``row[e]`` with the query fields ``qkind[e]``,
-    ``item[e]``, ... ; count entries read val_sum, every other entry its
-    row's payload, deserialized once however many entries read it."""
-    ests = np.zeros(len(row), dtype=np.int64)
-    is_cnt = qkind == "count"
-    ests[is_cnt] = val_sum[row[is_cnt]]
-    sel = ~is_cnt
-    if not sel.any():
-        return ests
-    urows, u = np.unique(row[sel], return_inverse=True)
-    blobs = payloads.iloc[urows].reset_index(drop=True)
-    qk, it, ie, tt = qkind[sel], item[sel], item_end[sel], t0[sel]
-    if kernel.kind == "cm":
-        # the scalar CMKernel.query_item guards, on the batch: item_end
-        # == item is a degenerate point freq and is accepted
-        if ((ie >= 0) & (ie != it)).any():
-            raise ValueError("CM answers point frequencies only; item "
-                             "ranges need a 'dcm' (or exact-mode) store")
-        if (tt > 0).any():
-            raise ValueError("CM has no time dimension; window queries "
-                             "need an 'ecm' (or exact-mode) store")
-        # one (B, d, w) counter stack, probed through the entry index
-        counters = kernel.deserialize_batch(blobs)
-        h = kernel.hash(it)                                   # (d, E)
-        ests[sel] = counters[u[:, None], np.arange(kernel.d)[None, :],
-                             h.T].min(axis=1)
-        return ests
-    states = [kernel.deserialize(b) for b in blobs]
-    if kernel.kind == "exact":
-        # one concatenated pass: entry-tagged masks answer freq /
-        # range_freq / window together (exact state = event arrays)
-        ents = [states[i] for i in u.tolist()]
-        lens = np.fromiter((len(s["items"]) for s in ents),
-                           dtype=np.int64, count=len(ents))
-        if int(lens.sum()) == 0:
-            return ests
-        ent = np.repeat(np.arange(len(ents)), lens)
-        allit = np.concatenate([s["items"] for s in ents])
-        allva = np.concatenate([s["values"] for s in ents])
-        allts = np.concatenate([s["ts"] for s in ents])
-        m = (allit >= it[ent]) & (allit <= np.where(ie >= 0, ie, it)[ent])
-        twin = np.where((qk == "window") & (tt >= 0), tt,
-                        np.iinfo(np.int64).min)
-        m &= allts >= twin[ent]
-        ests[sel] = int_group_sum(ent[m], allva[m], len(ents))
-        return ests
-    # dcm / ecm / elastic: per entry (bounded: dyadic item covers / EH
-    # folds)
-    out = np.empty(len(u), dtype=np.int64)
-    for e, i in enumerate(u.tolist()):
-        a, b, t = int(it[e]), int(ie[e]), int(tt[e])
-        if qk[e] == "range_freq" and kernel.kind == "dcm":
-            out[e] = kernel.query_range(states[i], a, b)
-        else:
-            out[e] = kernel.query_item(states[i], a,
-                                       b if b >= 0 else None,
-                                       t if t >= 0 else None)
-    ests[sel] = out
-    return ests
-
-
 def _additive_partials(cfg, kind: str, pid_queries: list):
     """mapInPandas over matched rows (pid, coverage, val_sum, payload):
     every row expands to (row, query) entries for its pid's additive
-    queries, estimated by ``_additive_ests`` and folded to one
-    (qid, partial) row per qid per partition. ``pid_queries[pid]`` is
-    that pid's additive queries; the closure carries them as flat numpy
-    columns in pid order (KBs for any realistic batch)."""
+    queries — count entries read val_sum, every other entry its row's
+    payload through the kernel's ``additive_ests`` — and the scaled
+    estimates fold to one (qid, partial) row per qid per partition.
+    ``pid_queries[pid]`` is that pid's additive queries; the closure
+    carries them as flat numpy columns in pid order (KBs for any
+    realistic batch)."""
     cnt = np.array([len(qs) for qs in pid_queries], dtype=np.int64)
     start = np.cumsum(cnt) - cnt
     flat = [q for qs in pid_queries for q in qs]
@@ -226,10 +116,16 @@ def _additive_partials(cfg, kind: str, pid_queries: list):
             # a row's entries are its pid's contiguous query slice
             qpos = np.repeat(start[pids] - (np.cumsum(nq) - nq), nq) \
                 + np.arange(len(row))
-            ests = _additive_ests(kernel, pdf["payload"],
-                                  pdf["val_sum"].to_numpy(np.int64), row,
-                                  qkinds[qpos], items[qpos], iends[qpos],
-                                  t0s[qpos])
+            ests = pdf["val_sum"].to_numpy(np.int64)[row]
+            sel = qkinds[qpos] != "count"
+            if sel.any():
+                # each matched payload is deserialized once, however
+                # many entries read it
+                urows, ent = np.unique(row[sel], return_inverse=True)
+                p = qpos[sel]
+                ests[sel] = kernel.additive_ests(
+                    pdf["payload"].to_numpy()[urows], ent, qkinds[p],
+                    items[p], iends[p], t0s[p])
             covs = pdf["coverage"].to_numpy(np.float64)
             # trunc per sub-query, exactly as the reference (:766) —
             # values are non-negative so floor == trunc
@@ -262,14 +158,17 @@ def _merge_partials(cfg, kind: str, pid_queries: list):
         # scaled), so two disjoint rects of one rect-set hitting the
         # same floor-level cell must contribute that cell's state ONCE —
         # without this dedup the duplicated counters inflate l2 /
-        # window_merge results for unaligned multi-rect regions.
+        # window_merge results for unaligned multi-rect regions. Every
+        # store holds one row per (grid_key, cell) (a streaming live
+        # view merges on read), so this drops cover duplicates only.
         allpdf = allpdf.drop_duplicates(subset=["pid", "grid_key", "cell"])
         out_qid, out_est = [], []
         for pid, grp in allpdf.groupby("pid", sort=False):
             states = [kernel.deserialize(b) for b in grp["payload"]]
             for q in pid_queries[int(pid)]:
                 out_qid.append(q.qid)
-                out_est.append(_estimate_one(kernel, states, q))
+                out_est.append(kernel.merged_est(
+                    states, q.qkind, q.item, q.item_end, q.t0))
         yield pd.DataFrame({"qid": pd.array(out_qid, dtype="int64"),
                             "est": pd.array(out_est, dtype="int64")})
 
@@ -386,14 +285,13 @@ class SpatialSketchEngine:
         per qid). Validates every query, then adds an additive and/or a
         merge branch over ONE matched relation — each only when the
         batch has queries of that class."""
-        kind = "exact" if self.store.cfg.exact else self.store.kind
+        qkinds = make_kernel(self.store.kind, self.store.cfg).qkinds
         for q in queries:
-            allowed = QKIND_KERNELS.get(q.qkind, ())
-            if allowed is not None and kind not in allowed:
+            if q.qkind != "count" and q.qkind not in qkinds:
                 raise ValueError(
                     f"query kind {q.qkind!r} is not answerable by a "
-                    f"{self.store.kind!r} store (needs one of "
-                    f"{sorted(allowed) if allowed else '?'})")
+                    f"{self.store.kind!r} store (it answers count and "
+                    f"{sorted(qkinds)})")
         spark = self.store.spark
         cfg = self.store.cfg
         m, qpid = self._matched_pids(queries)

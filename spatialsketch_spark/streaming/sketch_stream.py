@@ -4,14 +4,10 @@ The reference consumes an unbounded point stream with per-tuple Update()
 (experiments.cpp:312-319). Spark-native mapping: micro-batches through
 ``foreachBatch``, each batch running the SAME batch build pipeline
 (build_sketch_df) and APPENDING its per-cell partials to the sketch
-table. No merge is required for correctness:
-
-- 'count' queries SUM val_sum over matched rows — partials add up.
-- merge kinds (distinct/member/l2) merge all matched states per qid in
-  the finisher — extra rows per cell are just more states to merge.
-- additive kinds sum per-partial estimates; each partial CM min-row
-  overestimates its own sub-stream, so the sum remains a valid (in fact
-  tighter) CM-style overestimate of the total.
+table. Readers merge on read: ``as_store()`` serves the base snapshot and
+the uncompacted batch partials through ``merge_partials``, the frame
+``compact()`` writes, so every query kind answers on the live view
+exactly as on the compacted snapshot and on a build over all events.
 
 Streaming and batch stores are UNIFIED at the snapshot layer:
 
@@ -154,8 +150,9 @@ class StreamingSketch:
         one row per (grid_key, cell) in a new ``sketch_s<seq>`` data dir
         and write ``manifest_s<seq>.json`` through the batch store's
         commit path. Read-amplification maintenance (the Iceberg
-        rewrite-data-files analogue) — never needed for correctness —
-        but ALSO the unification point: the result is a first-class
+        rewrite-data-files analogue) — not needed for correctness,
+        because ``as_store()`` merges the same partials on read — but
+        ALSO the unification point: the result is a first-class
         SketchStore snapshot (loadable, time-travelable, mergeable)."""
         t0 = time.time()
         man = self._current_manifest()
@@ -221,13 +218,16 @@ class StreamingSketch:
                            self.min_level, manifest, self.path)
 
     def as_store(self) -> SketchStore:
-        """Live read view over snapshot + uncompacted batches. The
-        manifest carries the accumulated input fingerprint, so — unlike
-        the pre-unification view — merge_events works on it (in-memory:
-        no path, so it never races the streaming table's own commits)."""
+        """Live read view over snapshot + uncompacted batches, merged on
+        read to one row per (grid_key, cell): the frame ``compact()``
+        writes, without the write. The manifest carries the accumulated
+        input fingerprint, so merge_events works on it (in-memory: no
+        path, so it never races the streaming table's own commits)."""
         fp, lineage, _ = self._accumulated_state()
-        return SketchStore(self.spark, self.sketch_df(), self.cfg,
-                           self.kind, self.min_level,
+        return SketchStore(self.spark,
+                           merge_partials(self.sketch_df(), self.cfg,
+                                          self.kind),
+                           self.cfg, self.kind, self.min_level,
                            manifest={"kind": self.kind,
                                      "min_level": self.min_level,
                                      "streaming": True,

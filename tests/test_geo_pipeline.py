@@ -709,3 +709,19 @@ def test_build_rejects_out_of_grid_events(spark, bad):
                                "value BIGINT")
     with pytest.raises(Exception, match=f"event {name} outside"):
         SketchStore.build(spark, df, cfg, "cm", MIN_LEVEL)
+
+
+def test_range_freq_without_item_end_is_point_range(spark):
+    """A range_freq query with no item_end asks for the one-item range
+    [item, item] — on a dyadic-CM store as on an exact-mode store."""
+    ev = spark.createDataFrame(
+        [(0, 5, 3, 3, 1), (1, 5, 4, 9, 2), (2, 6, 3, 3, 1)],
+        "ts BIGINT, item BIGINT, x BIGINT, y BIGINT, value BIGINT")
+    for kind, cfg in (
+            ("dcm", SketchConfig.realistic(n=16, item_domain=64)),
+            ("exact", SketchConfig.exact_mode(item_domain=64, n=16))):
+        eng = SpatialSketchEngine(SketchStore.build(spark, ev, cfg, kind, 0))
+        qs = [QuerySpec(0, [(0, 0, 15, 15)], "range_freq", item=5),
+              QuerySpec(1, [(0, 0, 15, 15)], "range_freq", item=5,
+                        item_end=5)]
+        assert eng.query_values(qs) == {0: 3, 1: 3}, kind

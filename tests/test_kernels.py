@@ -174,7 +174,7 @@ def test_dcm_range_queries():
                                np.arange(3000, dtype=np.int64))
     for a, b in [(0, 255), (10, 20), (7, 7), (100, 250)]:
         truth = int(((items >= a) & (items <= b)).sum())
-        assert k.query_range(merged[0], a, b) == truth
+        assert k.query_item(merged[0], a, b) == truth
 
 
 def test_dcm_mixed_levels_overestimates_bounded():
@@ -186,7 +186,7 @@ def test_dcm_mixed_levels_overestimates_bounded():
                                  np.arange(3000, dtype=np.int64))
     for a, b in [(10, 200), (0, 127), (5, 9)]:
         truth = int(((items >= a) & (items <= b)).sum())
-        est = k.query_range(states[0], a, b)
+        est = k.query_item(states[0], a, b)
         assert est >= truth
         assert est <= truth + 0.2 * 3000
 
@@ -853,3 +853,52 @@ def test_one_build_interface(spark):
                                "value BIGINT")
     with pytest.raises(ValueError, match="unknown build mode"):
         build_sketch_df(df, cfg, "cm", 1, mode="zhash")
+
+
+def test_kernels_own_their_query_kinds():
+    """Every kind's kernel class declares the query kinds it answers
+    (the exact kernel all of them); the serving module dispatches to the
+    kernels and never switches on the kernel's kind."""
+    import inspect
+    import spatialsketch_spark.core.kernels as K
+    import spatialsketch_spark.geo.query as Q
+    from spatialsketch_spark.config import SketchConfig
+    cfg = SketchConfig.realistic(n=64, item_domain=500)
+    made = {type(K.make_kernel(kind, cfg)) for kind in KINDS}
+    assert all("qkinds" in vars(c) and c.qkinds for c in made)
+    assert set().union(*(c.qkinds for c in made)) == K.ExactKernel.qkinds
+    src = inspect.getsource(Q)
+    assert ".kind ==" not in src and "QKIND_KERNELS" not in src
+
+
+# one query per kind; the fields each kind reads
+QUERY_FIELDS = {"count": {}, "freq": {"item": 5},
+                "range_freq": {"item": 5, "item_end": 6},
+                "window": {"item": 5, "t0": 1},
+                "window_merge": {"item": 5, "t0": 1},
+                "distinct": {}, "member": {"item": 5}, "l2": {}}
+
+
+@pytest.mark.parametrize("kind", KINDS)
+def test_query_kind_contract(spark, kind):
+    """A store answers count and exactly its kernel's qkinds; every other
+    kind raises before any job runs."""
+    from spatialsketch_spark.config import SketchConfig
+    from spatialsketch_spark.core.kernels import make_kernel
+    from spatialsketch_spark.geo.build import SketchStore
+    from spatialsketch_spark.geo.query import QuerySpec, SpatialSketchEngine
+    cfg = SketchConfig.realistic(n=16, item_domain=64)
+    ev = spark.createDataFrame(
+        [(0, 5, 3, 3, 1), (1, 6, 4, 9, 2), (2, 5, 12, 3, 1)],
+        "ts BIGINT, item BIGINT, x BIGINT, y BIGINT, value BIGINT")
+    eng = SpatialSketchEngine(SketchStore.build(spark, ev, cfg, kind, 0))
+    answers = {"count"} | make_kernel(kind, cfg).qkinds
+    qs = [QuerySpec(i, [(0, 0, 15, 15)], qk, **QUERY_FIELDS[qk])
+          for i, qk in enumerate(sorted(answers))]
+    got = eng.query_values(qs)
+    assert sorted(got) == list(range(len(qs)))
+    assert got[sorted(answers).index("count")] == 4
+    for qk in sorted(set(QUERY_FIELDS) - answers):
+        with pytest.raises(ValueError, match="not answerable"):
+            eng.query_values([QuerySpec(0, [(0, 0, 15, 15)], qk,
+                                        **QUERY_FIELDS[qk])])

@@ -533,3 +533,39 @@ def test_idempotent_sink_nonvacuous_vs_append(spark, tmp_path):
     got = spark.read.parquet(out).groupBy("event_id").count().collect()
     assert len(got) == 100
     assert all(r["count"] == 2 for r in got)      # duplicated exactly
+
+
+# Two micro-batches of disjoint items into the same two cells. The live
+# view holds one partial per batch per cell; it must answer every query
+# kind its kernel answers exactly like compact() and build(all).
+LIVE_BATCHES = ([(0, 1, 10, 10, 1), (1, 1, 11, 12, 1)],
+                [(2, 2, 10, 10, 1), (3, 2, 11, 12, 1)])
+LIVE_QUERIES = {"count": {}, "freq": {"item": 2},
+                "range_freq": {"item": 1, "item_end": 2},
+                "window": {"item": 2, "t0": 3},
+                "window_merge": {"item": 2, "t0": 2},
+                "distinct": {}, "member": {"item": 2}, "l2": {}}
+LIVE_KINDS = {"exact": list(LIVE_QUERIES),
+              "fm": ["count", "distinct"],
+              "bf": ["count", "member"],
+              "cm": ["count", "freq", "l2"]}
+
+
+@pytest.mark.parametrize("kind", sorted(LIVE_KINDS))
+def test_live_view_answers_like_compact(spark, tmp_path, kind):
+    from spatialsketch_spark.geo.build import SketchStore
+    cfg = (SketchConfig.exact_mode(item_domain=64, n=N) if kind == "exact"
+           else SketchConfig.realistic(n=N, item_domain=64))
+    b0, b1 = (spark.createDataFrame(b, EVENT_SCHEMA) for b in LIVE_BATCHES)
+    ss = StreamingSketch(spark, cfg, kind, 0, str(tmp_path / "sk"))
+    ss._process_batch(b0, 0)
+    ss._process_batch(b1, 1)
+    qs = [QuerySpec(i, [(8, 8, 15, 15)], qk, **LIVE_QUERIES[qk])
+          for i, qk in enumerate(LIVE_KINDS[kind])]
+    live = SpatialSketchEngine(ss.as_store()).query_values(qs)
+    compacted = SpatialSketchEngine(ss.compact()).query_values(qs)
+    full = SpatialSketchEngine(SketchStore.build(
+        spark, b0.unionByName(b1), cfg, kind, 0)).query_values(qs)
+    assert live == compacted == full
+    if kind == "exact":
+        assert list(full.values()) == [4, 2, 4, 1, 2, 2, 1, 8]
