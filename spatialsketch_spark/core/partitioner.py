@@ -14,9 +14,11 @@ and is verified against brute-force point-in-polygon in
 tests/test_partitioner.py.
 
 Coordinate convention matches the reference: vertices lie on half-integer
-coordinates (cell centers are integers), and ``rect_to_range`` ceils the
-lower corner / floors the upper corner to get inclusive integer cell
-ranges (Utils.cpp:10-17, README.md:55).
+coordinates (cell centers are integers), and ``rect_to_range`` keeps the
+cells whose centers fall inside, as inclusive integer ranges
+(Utils.cpp:10-17, README.md:55). A center on an edge belongs to the rect
+on its upper side, the rule ``point_in_shape`` uses, so rects sharing an
+integer edge never share a cell.
 """
 
 from __future__ import annotations
@@ -89,12 +91,11 @@ def decompose(shape: Shape) -> list[tuple[float, float, float, float]]:
 
 def rect_to_range(x1: float, y1: float, x2: float, y2: float
                   ) -> tuple[int, int, int, int]:
-    """Continuous rect -> inclusive integer cell range (Utils.cpp:10-17).
-
-    Half-integer rect corners ceil/floor to the integer cells whose
-    centers fall inside.
-    """
-    return (math.ceil(x1), math.ceil(y1), math.floor(x2), math.floor(y2))
+    """Continuous rect -> inclusive integer cell range (Utils.cpp:10-17):
+    the cells whose centers lie in the half-open ``[x1, x2) x [y1, y2)``.
+    For half-integer corners that is ceil/floor, as in the reference."""
+    return (math.ceil(x1), math.ceil(y1), math.ceil(x2) - 1,
+            math.ceil(y2) - 1)
 
 
 def clamp_range(r: tuple[int, int, int, int], n: int

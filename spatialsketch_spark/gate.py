@@ -931,8 +931,9 @@ ORDER BY ts
 def q_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F6/F10 driver gate: REAL Structured-Streaming ingestion — a file
     source consumed in availableNow micro-batches through foreachBatch
-    (exactly-once per-batch partials), a SECOND appended batch picked
-    up incrementally from the checkpoint, then ``compact()`` committing
+    (each one an exactly-once store append), a SECOND appended batch
+    picked up incrementally from the checkpoint, then ``compact()``
+    committing
     a first-class snapshot — queried through the full exact pipeline
     and compared row-for-row against DuckDB over the union input. The
     one gate that runs readStream/writeStream inside the driver's

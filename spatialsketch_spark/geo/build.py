@@ -38,6 +38,7 @@ constant-memory claim (Tech Report §5.2).
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -305,13 +306,32 @@ def merge_partials(df: DataFrame, cfg: SketchConfig, kind: str,
                    num_partitions: int | None = None) -> DataFrame:
     """The merge stage: hash-repartition sketch rows on (grid_key, cell)
     so every cell's partials share a partition, then merge them to one
-    row per cell. Serves the build, ``merge_events`` (snapshot + delta)
-    and streaming compaction (snapshot + micro-batch partials)."""
+    row per cell. Serves the build, an in-memory ``merge_events`` (table
+    + delta) and a snapshot's merge on read (base + deltas)."""
     if num_partitions is None:
         num_partitions = int(
             df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return df.repartition(num_partitions, "grid_key", "cell") \
         .mapInArrow(_merge_partitions(cfg, kind), schema=SKETCH_SCHEMA)
+
+
+def _publish_json(dest: str, obj: dict, exclusive: bool = False) -> None:
+    """Write ``obj`` as JSON to a temp file beside ``dest``, then move it
+    into place: ``os.link`` when ``exclusive`` (FileExistsError if
+    ``dest`` exists), ``os.replace`` otherwise. Readers never see a
+    partly written file, and a failed write leaves no temp file."""
+    head, name = os.path.split(dest)
+    tmp = f"{head}/.{name}.{uuid.uuid4().hex}.tmp"
+    try:
+        with open(tmp, "w") as f:
+            json.dump(obj, f, indent=1, sort_keys=True)
+        if exclusive:
+            os.link(tmp, dest)
+        else:
+            os.replace(tmp, dest)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
 
 
 class SketchStore:
@@ -321,9 +341,18 @@ class SketchStore:
     manifest JSON; on a real cluster this is an Iceberg table and the
     manifest rides in snapshot summary properties):
 
-        <path>/sketch/            parquet, partitioned by grid_key
-        <path>/manifest.json      cfg/kind/min_level + per-partition
-                                  lineage + merge metrics
+        <path>/sketch/                 base from build(), parquet
+                                       partitioned by grid_key
+        <path>/delta_<uuid>/           one flat parquet dir per append
+        <path>/sketch_s<seq>_<uuid>/   a base written by compact()
+        <path>/manifest_s<seq>.json    one immutable manifest per commit:
+                                       cfg/kind/min_level, base
+                                       ``data_dir``, ``deltas``, lineage,
+                                       metrics
+        <path>/manifest.json           the current-snapshot pointer
+
+    A snapshot is its base plus the deltas appended since; readers merge
+    them on read. Every data dir is written once and never rewritten.
 
     ``build_or_load`` makes every stage resumable: if a manifest matching
     (cfg, kind, min_level, input fingerprint) exists, the build is
@@ -362,7 +391,12 @@ class SketchStore:
     def build(cls, spark: SparkSession, events: DataFrame,
               cfg: SketchConfig, kind: str, min_level: int = 0,
               path: str | None = None, mode: str = "zorder",
-              num_partitions: int | None = None) -> "SketchStore":
+              num_partitions: int | None = None,
+              batch_id: int | None = None) -> "SketchStore":
+        """Build the sketch table of ``events``. With a ``path``, write it
+        as the base of snapshot 0, replacing any history the path held;
+        ``batch_id`` is recorded as the last applied replay token (see
+        ``merge_events``)."""
         t0 = time.time()
         df = build_sketch_df(events, cfg, kind, min_level,
                              num_partitions=num_partitions, mode=mode)
@@ -397,34 +431,94 @@ class SketchStore:
                 "build_mode": mode,
             },
         }
+        if batch_id is not None:
+            manifest["last_batch_id"] = int(batch_id)
         if path:
-            manifest["snapshot_seq"] = 0
-            manifest["data_dir"] = "sketch"
+            manifest.update(snapshot_seq=0, data_dir="sketch", deltas=[])
+            cls._drop(path, cls.snapshots(path), keep={"sketch"})
             cls._commit_manifest(path, manifest)
         return cls(spark, df, cfg, kind, min_level, manifest, path)
 
     @staticmethod
-    def _commit_manifest(path: str, manifest: dict) -> None:
-        """Commit = write the immutable per-snapshot metadata file
-        (``manifest_s<seq>.json`` — the Iceberg metadata-log analogue,
-        one file per committed snapshot, never rewritten) then repoint
-        the current-pointer file ``manifest.json`` (the
-        version-hint/catalog analogue). The pointer is written to a temp
-        file in the same directory and renamed over ``manifest.json``,
-        so a write that fails partway leaves the previous snapshot
-        current instead of a torn pointer."""
-        seq = int(manifest.get("snapshot_seq", 0))
-        with open(f"{path}/manifest_s{seq}.json", "w") as f:
-            json.dump(manifest, f, indent=1, sort_keys=True)
-        tmp = f"{path}/.manifest.{uuid.uuid4().hex}.tmp"
+    def _commit_manifest(path: str, manifest: dict,
+                         parent_seq: int | None = None) -> None:
+        """The one snapshot commit. With a ``parent_seq`` (every commit
+        but a build's), in this order:
+
+        1. Re-read the pointer ``manifest.json`` and refuse unless it
+           still names ``parent_seq``. ``expire_snapshots`` deletes old
+           ``manifest_s*`` files, so a writer opened at an expired seq
+           could otherwise recreate one.
+        2. Create ``manifest_s<seq>.json`` exclusively: of two writers
+           racing from the same current parent, the second finds the
+           name taken and raises, overwriting nothing.
+        3. ``os.replace`` the pointer. If that fails, this commit's
+           ``manifest_s<seq>.json`` is removed again, so the previous
+           snapshot stays current and the seq stays free.
+
+        A build (no parent) starts a history and replaces both files."""
+        seq = int(manifest["snapshot_seq"])
+        own = f"{path}/manifest_s{seq}.json"
+        if parent_seq is not None:
+            try:
+                with open(f"{path}/manifest.json") as f:
+                    disk = json.load(f).get("snapshot_seq", 0)
+            except OSError:
+                disk = None
+            if disk != parent_seq:
+                raise ValueError(
+                    f"concurrent snapshot commit detected at {path}: "
+                    f"on-disk seq {disk} != this store's seq {parent_seq}"
+                    " — reload the store and re-apply the change")
         try:
-            with open(tmp, "w") as f:
-                json.dump(manifest, f, indent=1, sort_keys=True)
-            os.replace(tmp, f"{path}/manifest.json")
+            _publish_json(own, manifest, exclusive=parent_seq is not None)
+        except FileExistsError as e:
+            raise ValueError(
+                f"concurrent snapshot commit detected at {path}: seq "
+                f"{seq} was committed by another writer — reload the "
+                "store and re-apply the change") from e
+        try:
+            _publish_json(f"{path}/manifest.json", manifest)
         except BaseException:
-            if os.path.exists(tmp):
-                os.remove(tmp)
+            if parent_seq is not None:
+                os.remove(own)
             raise
+
+    def _commit(self, manifest: dict, new_dir: str | None) -> "SketchStore":
+        """Commit ``manifest`` as the child of this store's snapshot and
+        open it. If the commit fails, the data dir it would have added is
+        removed: no manifest lists it."""
+        try:
+            self._commit_manifest(self.path, manifest,
+                                  int(self.manifest.get("snapshot_seq", 0)))
+        except BaseException:
+            if new_dir:
+                shutil.rmtree(f"{self.path}/{new_dir}", ignore_errors=True)
+            raise
+        return self._open(self.spark, self.path, manifest, self.cfg,
+                          self.kind)
+
+    @classmethod
+    def _open(cls, spark: SparkSession, path: str, manifest: dict,
+              cfg: SketchConfig, kind: str) -> "SketchStore":
+        """The store a committed manifest describes. A base without
+        deltas is read as written. Otherwise the base and each delta dir
+        are read separately and unioned (the base is partitioned by
+        grid_key, the deltas are flat, and Spark rejects a mixed-layout
+        multi-root read), then merged to one row per (grid_key, cell)
+        once and cached, so the queries of this store share one merge."""
+        base = f"{path}/{manifest.get('data_dir', 'sketch')}"
+        deltas = manifest.get("deltas", [])
+        if not deltas:
+            df = spark.read.parquet(base)
+        else:
+            roots = [base] + [f"{path}/{d}" for d in deltas]
+            df = functools.reduce(DataFrame.unionByName, (
+                spark.read.schema(SKETCH_SCHEMA).parquet(r)
+                .select(*ARROW_SCHEMA.names) for r in roots))
+            df = merge_partials(df, cfg, kind).cache()
+        return cls(spark, df, cfg, kind, manifest["min_level"], manifest,
+                   path)
 
     @classmethod
     def snapshots(cls, path: str) -> list[dict]:
@@ -467,13 +561,7 @@ class SketchStore:
                 raise ValueError(
                     f"no snapshot seq {at_seq} at {path}; committed "
                     f"seqs: {have}") from e
-        # data_dir defaults to 'sketch' (initial build); merge_events
-        # snapshots write sketch_s<seq> and repoint the manifest —
-        # Iceberg-snapshot semantics: old data dirs stay readable
-        df = spark.read.parquet(
-            f"{path}/{manifest.get('data_dir', 'sketch')}")
-        return cls(spark, df, cfg, kind, manifest["min_level"], manifest,
-                   path)
+        return cls._open(spark, path, manifest, cfg, kind)
 
     @staticmethod
     def _table_stats(df: DataFrame) -> dict:
@@ -546,19 +634,29 @@ class SketchStore:
         }
 
     def merge_events(self, new_events: DataFrame,
-                     mode: str = "zorder") -> "SketchStore":
+                     batch_id: int | None = None) -> "SketchStore":
         """Incremental batch update — the table-level mirror of the
-        reference's continuous ``Update()`` (SpatialSketch.cpp:535-599)
-        and the MERGE INTO-style posture the Iceberg north rule names:
-        build the sketch DELTA from ``new_events`` only, merge it into
-        this snapshot's table, and write a NEW snapshot (data dir
-        ``sketch_s<seq>``, manifest repointed, parent recorded — old
-        snapshot dirs stay readable). Where the kernel's merge is a
-        commutative monoid (exact, CM, FM, BF, DCM),
-        ``build(A).merge_events(B)`` equals ``build(A ∪ B)`` bit-for-bit
-        (test_merge_events_equals_full_build); the ECM and Elastic
-        merges are deterministic but lossy, so there the result stays
-        inside the kernel's estimate envelope instead
+        reference's continuous ``Update()`` (SpatialSketch.cpp:535-599):
+        build the sketch DELTA from ``new_events`` only.
+
+        On a path-backed store the delta is written to its own
+        ``delta_<uuid>`` dir and committed as a new snapshot whose
+        manifest keeps this snapshot's base and adds the dir to its
+        ``deltas``. No stored row is rewritten; the returned store, like
+        any ``load``, merges base and deltas on read, and ``compact()``
+        folds them into a new base. An in-memory store merges the delta
+        into a new cached table.
+
+        ``batch_id`` is a replay token (Delta Lake's ``txnVersion``): the
+        manifest records the last one applied, and an id at or below it
+        returns this store unchanged, so a replayed micro-batch is
+        applied once.
+
+        Where the kernel's merge is a commutative monoid (exact, CM, FM,
+        BF, DCM), ``build(A).merge_events(B)`` equals ``build(A ∪ B)``
+        bit-for-bit in either layout (test_merge_events_equals_full_build);
+        the ECM and Elastic merges are deterministic but lossy, so there
+        the result stays inside the kernel's estimate envelope instead
         (test_merge_events_lossy_kinds). The union input fingerprint is
         combined arithmetically, so a later ``build_or_load`` over
         A ∪ B serves the merged snapshot without a rebuild."""
@@ -566,87 +664,87 @@ class SketchStore:
             raise ValueError(
                 "merge_events needs a store whose manifest carries an "
                 "input fingerprint to combine (SketchStore.build/"
-                "build_or_load/load, a streaming as_store() view, or a "
-                "compact()ed streaming snapshot)")
+                "build_or_load/load)")
+        last = self.manifest.get("last_batch_id")
+        if batch_id is not None and last is not None and batch_id <= last:
+            return self
         t0 = time.time()
-        spark = self.spark
         delta = build_sketch_df(new_events, self.cfg, self.kind,
-                                self.min_level, mode=mode)
-        merged = merge_partials(self.df.unionByName(delta), self.cfg,
-                                self.kind)
-        seq = int(self.manifest.get("snapshot_seq", 0)) + 1
+                                self.min_level)
         if self.path:
-            # optimistic concurrency (Iceberg commit semantics): the
-            # on-disk manifest must still be the snapshot this store
-            # was opened at — a second merge_events from the same stale
-            # base would otherwise recompute the same seq and OVERWRITE
-            # the first merge's data dir while its store still reads it
-            try:
-                with open(f"{self.path}/manifest.json") as f:
-                    disk = json.load(f)
-            except OSError:
-                disk = {}
-            if (disk.get("snapshot_seq", 0)
-                    != self.manifest.get("snapshot_seq", 0)):
-                raise ValueError(
-                    f"concurrent snapshot commit detected at {self.path}:"
-                    f" on-disk seq {disk.get('snapshot_seq', 0)} != this "
-                    f"store's seq {self.manifest.get('snapshot_seq', 0)} "
-                    "— reload the store and re-apply the delta")
-            data_dir = f"sketch_s{seq}"
-            merged.write.mode("overwrite").partitionBy("grid_key") \
-                  .parquet(f"{self.path}/{data_dir}")
-            merged = spark.read.parquet(f"{self.path}/{data_dir}")
+            new_dir = f"delta_{uuid.uuid4().hex}"
+            delta.write.parquet(f"{self.path}/{new_dir}")
+            stats = self._table_stats(
+                self.spark.read.parquet(f"{self.path}/{new_dir}"))
         else:
-            data_dir = None
-            merged = merged.cache()
-        stats = self._table_stats(merged)   # materializes the cache
+            merged = merge_partials(self.df.unionByName(delta), self.cfg,
+                                    self.kind).cache()
+            stats = self._table_stats(merged)   # materializes the cache
         delta_lineage, delta_fp = self._input_stats(new_events)
+        seq = int(self.manifest.get("snapshot_seq", 0)) + 1
         for r in delta_lineage:
             r["snapshot_seq"] = seq
         manifest = dict(self.manifest)
         manifest["input_fingerprint"] = self._combine_fingerprints(
             self.manifest["input_fingerprint"], delta_fp)
         manifest["snapshot_seq"] = seq
-        manifest["parent_data_dir"] = self.manifest.get(
-            "data_dir", "sketch" if self.path else None)
         manifest["lineage"] = self.manifest.get("lineage", []) + delta_lineage
-        manifest["metrics"] = dict(self.manifest.get("metrics", {}))
-        manifest["metrics"].update({
-            **stats,
-            "input_events": (self.manifest.get("metrics", {})
-                             .get("input_events", 0)
-                             + delta_fp["n_events"]),
+        if batch_id is not None:
+            manifest["last_batch_id"] = int(batch_id)
+        metrics = manifest["metrics"] = dict(self.manifest.get("metrics", {}))
+        metrics.update({
+            "input_events": metrics.get("input_events", 0)
+            + delta_fp["n_events"],
             f"merge_s{seq}_wall_s": round(time.time() - t0, 3),
             f"merge_s{seq}_delta_events": delta_fp["n_events"],
         })
-        if self.path:
-            manifest["data_dir"] = data_dir
-            self._commit_manifest(self.path, manifest)
-        return SketchStore(spark, merged, self.cfg, self.kind,
-                           self.min_level, manifest, self.path)
+        if not self.path:
+            metrics.update(stats)
+            return SketchStore(self.spark, merged, self.cfg, self.kind,
+                               self.min_level, manifest)
+        # n_events adds up across the base and its deltas; sketch_cells
+        # stays the base's until compact()
+        metrics["merged_events"] = (metrics.get("merged_events", 0)
+                                    + stats["merged_events"])
+        manifest["deltas"] = self.manifest.get("deltas", []) + [new_dir]
+        return self._commit(manifest, new_dir)
+
+    def compact(self) -> "SketchStore":
+        """Fold the base and its deltas into one new base dir
+        (``sketch_s<seq>_<uuid>``, partitioned by grid_key) and commit it
+        as a snapshot with no deltas: the one full rewrite (the Iceberg
+        rewrite-data-files analogue). Answers do not change, since
+        readers already merge the deltas on read; a compacted store just
+        stops paying that merge. A store without deltas is returned as
+        it is."""
+        if not self.path:
+            raise ValueError("compact needs a path-backed store")
+        if not self.manifest.get("deltas"):
+            return self
+        t0 = time.time()
+        seq = int(self.manifest.get("snapshot_seq", 0)) + 1
+        new_dir = f"sketch_s{seq}_{uuid.uuid4().hex}"
+        self.df.write.partitionBy("grid_key").parquet(
+            f"{self.path}/{new_dir}")
+        manifest = dict(self.manifest, snapshot_seq=seq, data_dir=new_dir,
+                        deltas=[])
+        manifest["metrics"] = {
+            **self.manifest.get("metrics", {}),
+            **self._table_stats(
+                self.spark.read.parquet(f"{self.path}/{new_dir}")),
+            f"compact_s{seq}_wall_s": round(time.time() - t0, 3)}
+        return self._commit(manifest, new_dir)
 
     def rollback(self, to_seq: int) -> "SketchStore":
         """Iceberg rollback: make snapshot ``to_seq`` current again by
-        committing a NEW snapshot (next seq) that points at the old
-        snapshot's data dir and restores its input fingerprint/lineage.
-        History is preserved — the rolled-back-over commits stay
-        readable via time travel until expired — and later
+        committing a NEW snapshot (next seq) that lists the old
+        snapshot's base and deltas and restores its input
+        fingerprint/lineage. History is preserved — the rolled-back-over
+        commits stay readable via time travel until expired — and later
         merge_events calls layer on top of the restored state. Only
-        valid on the current snapshot (optimistic concurrency, same as
-        merge_events)."""
+        valid on the current snapshot (the commit's pointer check)."""
         if not self.path:
             raise ValueError("rollback needs a path-backed store")
-        try:
-            with open(f"{self.path}/manifest.json") as f:
-                disk = json.load(f)
-        except OSError:
-            disk = {}
-        if (disk.get("snapshot_seq", 0)
-                != self.manifest.get("snapshot_seq", 0)):
-            raise ValueError(
-                f"concurrent snapshot commit detected at {self.path}: "
-                "reload the store before rolling back")
         try:
             with open(f"{self.path}/manifest_s{int(to_seq)}.json") as f:
                 target = json.load(f)
@@ -656,25 +754,20 @@ class SketchStore:
             raise ValueError(f"no snapshot seq {to_seq} at {self.path};"
                              f" committed seqs: {have}") from e
         seq = int(self.manifest.get("snapshot_seq", 0)) + 1
-        manifest = dict(target)
-        manifest["snapshot_seq"] = seq
-        manifest["rolled_back_from"] = int(
-            self.manifest.get("snapshot_seq", 0))
-        manifest["rolled_back_to"] = int(to_seq)
-        self._commit_manifest(self.path, manifest)
-        df = self.spark.read.parquet(
-            f"{self.path}/{manifest.get('data_dir', 'sketch')}")
-        return SketchStore(self.spark, df, self.cfg, self.kind,
-                           manifest["min_level"], manifest, self.path)
+        return self._commit(dict(
+            target, snapshot_seq=seq,
+            rolled_back_from=int(self.manifest.get("snapshot_seq", 0)),
+            rolled_back_to=int(to_seq)), None)
 
     def expire_snapshots(self, keep_last: int = 1) -> list[int]:
         """Iceberg expire-snapshots maintenance: drop committed
         snapshots older than the newest ``keep_last``, deleting their
-        immutable manifest files and any data dir no retained snapshot
-        still references. The current snapshot is always retained
-        (keep_last >= 1 enforced). Time-travel reads to an expired seq
-        fail with the committed-seqs error afterwards — the same
-        contract as Iceberg's expire_snapshots. Returns expired seqs."""
+        immutable manifest files and every base or delta dir no
+        retained snapshot still lists. The current snapshot is always
+        retained (keep_last >= 1 enforced). Time-travel reads to an
+        expired seq fail with the committed-seqs error afterwards — the
+        same contract as Iceberg's expire_snapshots. Returns expired
+        seqs."""
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1 (the current "
                              "snapshot cannot be expired)")
@@ -682,19 +775,27 @@ class SketchStore:
             return []
         hist = self.snapshots(self.path)
         expired, retained = hist[:-keep_last], hist[-keep_last:]
-        keep_dirs = {m.get("data_dir") for m in retained}
-        out = []
-        for m in expired:
-            seq = int(m.get("snapshot_seq", 0))
-            dd = m.get("data_dir")
-            if dd and dd not in keep_dirs:
-                shutil.rmtree(f"{self.path}/{dd}", ignore_errors=True)
+        self._drop(self.path, expired,
+                   keep=set().union(*map(self._data_dirs, retained)))
+        return [int(m.get("snapshot_seq", 0)) for m in expired]
+
+    @staticmethod
+    def _data_dirs(manifest: dict) -> set[str]:
+        return {manifest.get("data_dir", "sketch"),
+                *manifest.get("deltas", [])}
+
+    @classmethod
+    def _drop(cls, path: str, manifests: list[dict], keep: set[str]) -> None:
+        """Delete the files of ``manifests`` and every data dir they list
+        that is not in ``keep``."""
+        for m in manifests:
+            for d in cls._data_dirs(m) - keep:
+                shutil.rmtree(f"{path}/{d}", ignore_errors=True)
             try:
-                os.remove(f"{self.path}/manifest_s{seq}.json")
+                os.remove(f"{path}/manifest_s{int(m.get('snapshot_seq', 0))}"
+                          ".json")
             except OSError:
                 pass
-            out.append(seq)
-        return out
 
     @classmethod
     def build_or_load(cls, spark: SparkSession, events: DataFrame,

@@ -38,6 +38,8 @@ Query kinds and their reference semantics:
             sum-of-squares (QueryRangesL2 :1142-1173)
   window_merge merge the cells' ECM histograms, then one HistSum
             (ECM_merge mode :1175-1221)
+Only the two window kinds take a start time ``t0``; any other kind
+given one is refused before a job runs.
 
 Every kind but ``count`` is answered by the store's kernel
 (``core/kernels.py``): its ``qkinds`` names the kinds it answers, and
@@ -159,8 +161,8 @@ def _merge_partials(cfg, kind: str, pid_queries: list):
         # same floor-level cell must contribute that cell's state ONCE —
         # without this dedup the duplicated counters inflate l2 /
         # window_merge results for unaligned multi-rect regions. Every
-        # store holds one row per (grid_key, cell) (a streaming live
-        # view merges on read), so this drops cover duplicates only.
+        # store holds one row per (grid_key, cell) (a snapshot with
+        # deltas merges on read), so this drops cover duplicates only.
         allpdf = allpdf.drop_duplicates(subset=["pid", "grid_key", "cell"])
         out_qid, out_est = [], []
         for pid, grp in allpdf.groupby("pid", sort=False):
@@ -292,6 +294,10 @@ class SpatialSketchEngine:
                     f"query kind {q.qkind!r} is not answerable by a "
                     f"{self.store.kind!r} store (it answers count and "
                     f"{sorted(qkinds)})")
+            if q.t0 >= 0 and q.qkind not in ("window", "window_merge"):
+                raise ValueError(
+                    f"t0={q.t0} on a {q.qkind!r} query: only window and "
+                    "window_merge queries take a start time")
         spark = self.store.spark
         cfg = self.store.cfg
         m, qpid = self._matched_pids(queries)

@@ -1,6 +1,9 @@
 """End-to-end Spark pipeline tests: sketch build (map-side-combined),
 partitioning invariance, polygon queries vs exact Spark SQL, resume."""
 
+import json
+import os
+
 import numpy as np
 import pytest
 from pyspark.errors import PythonException
@@ -304,16 +307,18 @@ def test_cm_batch_path_rejects_malformed_specs(spark, events):
     point = eng.query_values([QuerySpec(0, r, "freq", item=7)])
     assert eng.query_values(
         [QuerySpec(0, r, "freq", item=7, item_end=7)]) == point
-    for bad, msg in ((QuerySpec(0, r, "freq", item=7, item_end=9),
-                      "CM answers point frequencies"),
-                     (QuerySpec(0, r, "freq", item=7, t0=5),
-                      "CM has no time dimension")):
-        # the guards run in the estimator task: both surfaces re-raise
-        # the task's ValueError on the driver
-        with pytest.raises(PythonException, match=f"ValueError: {msg}"):
-            eng.query_values([bad])
-        with pytest.raises(PythonException, match=f"ValueError: {msg}"):
-            eng.query([bad]).collect()
+    bad = QuerySpec(0, r, "freq", item=7, item_end=9)
+    msg = "CM answers point frequencies"
+    # the guard runs in the estimator task: both surfaces re-raise the
+    # task's ValueError on the driver
+    with pytest.raises(PythonException, match=f"ValueError: {msg}"):
+        eng.query_values([bad])
+    with pytest.raises(PythonException, match=f"ValueError: {msg}"):
+        eng.query([bad]).collect()
+    # a t0 on freq is refused on the driver, before any job
+    for surface in (eng.query_values, eng.query):
+        with pytest.raises(ValueError, match="only window and"):
+            surface([QuerySpec(0, r, "freq", item=7, t0=5)])
 
 
 def _store_rows(st):
@@ -323,15 +328,23 @@ def _store_rows(st):
         for r in st.df.collect())
 
 
-@pytest.mark.parametrize("kind", ["exact", "cm", "fm", "bf", "dcm"])
-def test_merge_events_equals_full_build(spark, events, kind):
+MONOID_KINDS = ["exact", "cm", "fm", "bf", "dcm"]
+
+
+@pytest.mark.parametrize("kind, on_disk", (
+    [pytest.param(k, False, id=k) for k in MONOID_KINDS]
+    + [pytest.param(k, True, id=f"{k}-path") for k in MONOID_KINDS]))
+def test_merge_events_equals_full_build(spark, events, tmp_path, kind,
+                                        on_disk):
     """build(A).merge_events(B) == build(A ∪ B) bit-for-bit for every
     kernel whose merge is a true monoid — the incremental-batch-update
     contract (VERDICT r2 item 3). ECM and Elastic are covered by
     test_merge_events_lossy_kinds: their merges are deterministic but
     intentionally lossy (ECM_merge arrival reconstruction / Ostracism
     rebuild), so bit-equality with a full build is not their contract —
-    same as the reference's ECM_merge mode."""
+    same as the reference's ECM_merge mode. Answers do not depend on
+    layout: a path-backed store (base + delta dir, merged on read),
+    loaded again, equals the full build and its own compact()."""
     if kind == "exact":
         cfg = SketchConfig.exact_mode(item_domain=ITEM_DOMAIN, n=N)
     else:
@@ -340,10 +353,16 @@ def test_merge_events_equals_full_build(spark, events, kind):
     a = events.where(F.col("ts") % 2 == 0)
     b = events.where(F.col("ts") % 2 == 1)
     full = SketchStore.build(spark, events, cfg, kind, 2)
-    inc = SketchStore.build(spark, a, cfg, kind, 2).merge_events(b)
+    p = str(tmp_path / "store") if on_disk else None
+    inc = SketchStore.build(spark, a, cfg, kind, 2, path=p).merge_events(b)
     assert _store_rows(full) == _store_rows(inc)
     assert (inc.manifest["input_fingerprint"]
             == SketchStore.fingerprint_events(events))
+    if on_disk:
+        loaded = SketchStore.load(spark, p, cfg, kind)
+        assert len(loaded.manifest["deltas"]) == 1
+        assert _store_rows(loaded) == _store_rows(full)
+        assert _store_rows(loaded.compact()) == _store_rows(full)
 
 
 @pytest.mark.parametrize("kind", ["ecm", "elastic"])
@@ -396,8 +415,9 @@ def test_merge_events_snapshot_resume(spark, events, tmp_path):
     b = events.where(F.col("ts") % 2 == 1)
     s1 = SketchStore.build_or_load(spark, a, cfg, "exact", 2, p)
     s2 = s1.merge_events(b)
-    assert s2.manifest["data_dir"] == "sketch_s1"
-    assert (tmp_path / "store" / "sketch").exists()   # parent kept
+    assert s2.manifest["data_dir"] == "sketch"        # base kept
+    (delta,) = s2.manifest["deltas"]
+    assert (tmp_path / "store" / delta).exists()
     s3 = SketchStore.build_or_load(spark, events, cfg, "exact", 2, p)
     # served, not rebuilt: the merge snapshot seq survives
     assert s3.manifest.get("snapshot_seq") == 1
@@ -425,8 +445,10 @@ def test_snapshot_time_travel(spark, events, tmp_path):
 
     hist = SketchStore.snapshots(p)
     assert [m["snapshot_seq"] for m in hist] == [0, 1, 2]
-    assert [m.get("data_dir") for m in hist] == \
-        ["sketch", "sketch_s1", "sketch_s2"]
+    # one base; each commit lists its parent's deltas plus its own
+    assert [m["data_dir"] for m in hist] == ["sketch"] * 3
+    assert [len(m["deltas"]) for m in hist] == [0, 1, 2]
+    assert hist[2]["deltas"][:1] == hist[1]["deltas"]
     # history entries are cumulative: fingerprints chain to the prefixes
     assert hist[0]["input_fingerprint"] == SketchStore.fingerprint_events(a)
     assert (hist[2]["input_fingerprint"]
@@ -448,12 +470,17 @@ def test_snapshot_time_travel(spark, events, tmp_path):
     with pytest.raises(ValueError, match="concurrent snapshot commit"):
         stale.merge_events(c)
 
-    # expire-snapshots maintenance: old commits dropped, current kept
-    cur = SketchStore.load(spark, p, cfg, "exact")
-    assert cur.expire_snapshots(keep_last=1) == [0, 1]
-    assert [m["snapshot_seq"] for m in SketchStore.snapshots(p)] == [2]
+    # expire-snapshots maintenance: old commits dropped, current kept;
+    # after a compaction no retained snapshot lists the old base or the
+    # deltas, so their dirs go too
+    cur = SketchStore.load(spark, p, cfg, "exact").compact()
+    assert cur.manifest["snapshot_seq"] == 3
+    assert cur.expire_snapshots(keep_last=1) == [0, 1, 2]
+    assert [m["snapshot_seq"] for m in SketchStore.snapshots(p)] == [3]
     assert not (tmp_path / "store" / "sketch").exists()
-    with pytest.raises(ValueError, match=r"committed seqs: \[2\]"):
+    assert not any((tmp_path / "store" / d).exists()
+                   for d in hist[2]["deltas"])
+    with pytest.raises(ValueError, match=r"committed seqs: \[3\]"):
         SketchStore.load(spark, p, cfg, "exact", at_seq=0)
     est = SpatialSketchEngine(
         SketchStore.load(spark, p, cfg, "exact")).query(
@@ -494,12 +521,13 @@ def test_snapshot_rollback(spark, events, tmp_path):
                                         at_seq=1)) == _store_rows(s1)
     s3 = rb.merge_events(b)
     assert _store_rows(s3) == _store_rows(s1)
-    # expiring history keeps the shared 'sketch' dir (seq 3 -> sketch_s3,
-    # but retained seq 2... after merge seq 3 is current); keep_last=2
-    # retains the rollback commit whose data dir is the original 'sketch'
+    # keep_last=2 retains the rollback commit (seq 2) and the merge on
+    # it (seq 3), which share the original 'sketch' base: it survives,
+    # while seq 1's delta, listed by no retained commit, is removed
     cur = SketchStore.load(spark, p, cfg, "exact")
     assert cur.expire_snapshots(keep_last=2) == [0, 1]
     assert (tmp_path / "store" / "sketch").exists()   # shared dir kept
+    assert not (tmp_path / "store" / s1.manifest["deltas"][0]).exists()
     assert _store_rows(SketchStore.load(spark, p, cfg, "exact",
                                         at_seq=2)) == _store_rows(rb)
 
@@ -527,7 +555,11 @@ def test_merge_events_concurrent_commit_rejected(spark, events, tmp_path):
     with pytest.raises(ValueError, match="concurrent snapshot commit"):
         s.merge_events(c)
     s2 = s1.merge_events(c)     # fresh base: fine
-    assert s2.manifest["data_dir"] == "sketch_s2"
+    assert s2.manifest["snapshot_seq"] == 2
+    assert s2.manifest["deltas"][:1] == s1.manifest["deltas"]
+    # the refused writer left no data dir behind
+    assert sorted(d for d in os.listdir(p) if d.startswith("delta_")) \
+        == sorted(s2.manifest["deltas"])
     assert (s2.manifest["input_fingerprint"]
             == SketchStore.fingerprint_events(events))
 
@@ -551,7 +583,7 @@ def test_torn_pointer_write_keeps_previous_snapshot(spark, events, tmp_path,
         @staticmethod
         def dump(obj, f, **kw):
             text = json.dumps(obj, **kw)
-            if re.search(r"manifest_s\d+\.json$", str(f.name)):
+            if re.search(r"manifest_s\d+\.json", str(f.name)):
                 f.write(text)
                 return
             f.write(text[:len(text) // 2])
@@ -577,6 +609,95 @@ def test_torn_pointer_write_keeps_previous_snapshot(spark, events, tmp_path,
         .manifest["snapshot_seq"] == 1
     assert (s1.manifest["input_fingerprint"]
             == SketchStore.fingerprint_events(events))
+
+
+def test_racing_appends_exactly_one_commits(spark, events, tmp_path,
+                                            monkeypatch):
+    """Two merge_events from the same current parent, the second passing
+    the pointer check before the first commits: exactly one commits, the
+    loser raises without overwriting anything, and the winner's rows
+    load intact."""
+    import spatialsketch_spark.geo.build as build_mod
+
+    cfg = SketchConfig.exact_mode(item_domain=ITEM_DOMAIN, n=N)
+    p = str(tmp_path / "store")
+    a = events.where(F.col("ts") % 3 == 0)
+    b = events.where(F.col("ts") % 3 == 1)
+    c = events.where(F.col("ts") % 3 == 2)
+    s0 = SketchStore.build(spark, a, cfg, "exact", 2, p)
+    winner = []
+
+    class RacingJson:
+        """json whose first read of the current pointer lets the other
+        writer commit right after the read."""
+        dump = staticmethod(json.dump)
+
+        @staticmethod
+        def load(f):
+            out = json.load(f)
+            if not winner and str(f.name).endswith("/manifest.json"):
+                winner.append(None)
+                winner[0] = s0.merge_events(b)
+            return out
+
+    monkeypatch.setattr(build_mod, "json", RacingJson)
+    with pytest.raises(ValueError, match="concurrent snapshot commit"):
+        s0.merge_events(c)
+    monkeypatch.undo()
+    assert [m["snapshot_seq"] for m in SketchStore.snapshots(p)] == [0, 1]
+    cur = SketchStore.load(spark, p, cfg, "exact")
+    assert cur.manifest == winner[0].manifest
+    assert _store_rows(cur) == _store_rows(
+        SketchStore.build(spark, a.unionByName(b), cfg, "exact", 2))
+    assert sorted(d for d in os.listdir(p) if d.startswith("delta_")) \
+        == cur.manifest["deltas"]
+
+
+def test_append_writes_only_its_delta(spark, events, tmp_path):
+    """A path-backed append leaves every file of the base untouched and
+    writes one dir holding the delta's cells only; sketch_cells stays
+    the base's until compact(), merged_events adds up."""
+    from spatialsketch_spark.geo.build import build_sketch_df
+
+    cfg = SketchConfig.exact_mode(item_domain=ITEM_DOMAIN, n=N)
+    p = tmp_path / "store"
+    a = events.where(F.col("ts") % 4 != 0)
+    b = events.where(F.col("ts") % 4 == 0)
+    s0 = SketchStore.build(spark, a, cfg, "exact", 2, str(p))
+
+    def files():
+        return {str(f.relative_to(p)): f.stat().st_mtime_ns
+                for f in (p / "sketch").rglob("*")}
+
+    before = files()
+    s1 = s0.merge_events(b)
+    assert files() == before
+    (delta,) = s1.manifest["deltas"]
+    assert spark.read.parquet(str(p / delta)).count() \
+        == build_sketch_df(b, cfg, "exact", 2).count()
+    m0, m1 = s0.manifest["metrics"], s1.manifest["metrics"]
+    assert m1["sketch_cells"] == m0["sketch_cells"]
+    full = SketchStore.build(spark, events, cfg, "exact", 2)
+    assert m1["merged_events"] == full.manifest["metrics"]["merged_events"]
+    assert (s1.compact().manifest["metrics"]["sketch_cells"]
+            == full.manifest["metrics"]["sketch_cells"])
+
+
+def test_rebuild_replaces_history(spark, events, tmp_path):
+    """A build over a path that holds a history starts a new one: the
+    old commits and their dirs go, and appends commit from seq 0 again."""
+    cfg = SketchConfig.exact_mode(item_domain=ITEM_DOMAIN, n=N)
+    p = str(tmp_path / "store")
+    a = events.where(F.col("ts") % 2 == 0)
+    b = events.where(F.col("ts") % 2 == 1)
+    s1 = SketchStore.build(spark, a, cfg, "exact", 2, p).merge_events(b)
+    r0 = SketchStore.build_or_load(spark, b, cfg, "exact", 2, p)
+    assert [m["snapshot_seq"] for m in SketchStore.snapshots(p)] == [0]
+    assert not os.path.exists(f"{p}/{s1.manifest['deltas'][0]}")
+    r1 = r0.merge_events(a)
+    assert r1.manifest["snapshot_seq"] == 1
+    assert _store_rows(r1) == _store_rows(
+        SketchStore.build(spark, events, cfg, "exact", 2))
 
 
 def test_combine_fingerprints_legacy_manifest_rejected():
@@ -639,8 +760,9 @@ def test_merge_kinds_dedup_cells_shared_by_rects(spark, events):
     split = [(x0, y0, x0 + 2, y0 + 7), (x0 + 4, y0, x0 + 7, y0 + 7)]
     block = [(x0, y0, x0 + 7, y0 + 7)]
     for kind in ("l2", "window_merge", "distinct"):
-        got = eng.query_values([QuerySpec(0, split, kind, item=item, t0=0),
-                                QuerySpec(1, block, kind, item=item, t0=0)])
+        t0 = 0 if kind == "window_merge" else -1
+        got = eng.query_values([QuerySpec(0, split, kind, item=item, t0=t0),
+                                QuerySpec(1, block, kind, item=item, t0=t0)])
         assert got[0] == got[1] > 0, (kind, got)
 
 

@@ -902,3 +902,8 @@ def test_query_kind_contract(spark, kind):
         with pytest.raises(ValueError, match="not answerable"):
             eng.query_values([QuerySpec(0, [(0, 0, 15, 15)], qk,
                                         **QUERY_FIELDS[qk])])
+    # t0 is a window start and nothing else: every other kind refuses it
+    for qk in sorted(answers - {"window", "window_merge"}):
+        with pytest.raises(ValueError, match="only window and"):
+            eng.query_values([QuerySpec(0, [(0, 0, 15, 15)], qk,
+                                        **{**QUERY_FIELDS[qk], "t0": 1})])

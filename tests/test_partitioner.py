@@ -65,6 +65,17 @@ def test_rect_to_range_halfinteger():
     assert clamp_range((17, 0, 20, 3), 16) is None
 
 
+def test_integer_corner_rects_share_no_cell():
+    """An L with integer corners: the rects meeting on its integer edge
+    must not both take that edge's row; the cells are exactly the
+    brute-force point_in_shape set."""
+    shape = Shape(rings=[[(3, 3), (12, 3), (12, 7), (7, 7), (7, 13),
+                          (3, 13)]], grid_size=16, name="int_L")
+    ranges = shape_to_ranges(shape)
+    assert len(ranges) == 2
+    assert cells_of_ranges(ranges) == brute_cells(shape, 16)
+
+
 def test_shape_file_roundtrip():
     txt = """grid size:16
 selection size:25

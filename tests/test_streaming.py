@@ -2,6 +2,8 @@
 micro-batches -> append-only sketch partials -> queries match the batch
 oracle at every point; compaction changes nothing."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -49,9 +51,8 @@ def test_streaming_matches_batch(spark, tmp_path, compact):
     q2.awaitTermination(120)
 
     if compact:
-        ss.compact()
         # exactly one row per cell after compaction
-        dup = (ss.sketch_df().groupBy("grid_key", "cell").count()
+        dup = (ss.compact().df.groupBy("grid_key", "cell").count()
                .where("count > 1").count())
         assert dup == 0
 
@@ -70,12 +71,12 @@ def test_streaming_matches_batch(spark, tmp_path, compact):
 
 
 def test_streaming_batch_unification(spark, tmp_path):
-    """The streaming table IS a batch store at the snapshot layer:
-    batch replay is idempotent (same batch_id overwrites its own dir),
-    as_store() carries the accumulated input fingerprint (so
-    merge_events works on the live view), and compact() commits a
-    first-class SketchStore snapshot — loadable, served by
-    build_or_load over the union input, mergeable, time-travelable."""
+    """The streaming table IS a batch store: micro-batches are store
+    appends, a replayed batch_id is a no-op, as_store() carries the
+    accumulated input fingerprint (so merge_events works on it), and
+    compact() commits a first-class SketchStore snapshot — loadable,
+    served by build_or_load over the union input, mergeable,
+    time-travelable."""
     from spatialsketch_spark.geo.build import SketchStore
     ev = derive_geo_events(spark, SF_UNIT, N).cache()
     first = ev.filter(F.col("ts") < 500)
@@ -84,28 +85,33 @@ def test_streaming_batch_unification(spark, tmp_path):
     p = str(tmp_path / "sk")
     ss = StreamingSketch(spark, cfg, "exact", 0, p)
 
-    # ingest batch 0; a crash-replay of the SAME batch_id must rewrite,
-    # not double-append
+    # ingest batch 0; a crash-replay of the SAME batch_id must not
+    # double-append
     ss._process_batch(first, 0)
     ss._process_batch(first, 0)
     store = ss.as_store()
+    assert store.manifest["snapshot_seq"] == 0
     full = [(0, 0, 63, 63)]
     q = [QuerySpec(0, full, "count")]
     est = SpatialSketchEngine(store).query(q).collect()[0]["est"]
     assert est == first.count()
 
-    # live view is merge-capable: fingerprint accumulated per batch
+    # the store is merge-capable: fingerprint accumulated per batch; a
+    # merge_events carrying the next batch id is that batch's append,
+    # and the same batch arriving through the stream is then a replay
     assert (store.manifest["input_fingerprint"]
             == SketchStore.fingerprint_events(first))
-    merged_view = store.merge_events(second)
+    merged_view = store.merge_events(second, batch_id=1)
     est = SpatialSketchEngine(merged_view).query(q).collect()[0]["est"]
     assert est == ev.count()
+    ss._process_batch(second, 1)
+    assert ss.as_store().manifest == merged_view.manifest
 
     # compact() = snapshot commit through the batch store's path
-    ss._process_batch(second, 1)
     st = ss.compact()
-    assert st.manifest["snapshot_seq"] == 0
-    assert st.manifest["compacted_through_batch"] == 1
+    assert st.manifest["snapshot_seq"] == 2
+    assert st.manifest["deltas"] == []
+    assert st.manifest["last_batch_id"] == 1
     assert (st.manifest["input_fingerprint"]
             == SketchStore.fingerprint_events(ev))
     loaded = SketchStore.load(spark, p, cfg, "exact")
@@ -113,7 +119,7 @@ def test_streaming_batch_unification(spark, tmp_path):
         == ev.count()
     # build_or_load over the union input serves the compacted snapshot
     served = SketchStore.build_or_load(spark, ev, cfg, "exact", 0, p)
-    assert served.manifest["metrics"]["build_mode"] == "streaming_compact"
+    assert served.manifest == st.manifest
 
     # post-compact batches layer on top; second commit, then time travel
     extra = ev.limit(50)
@@ -121,10 +127,10 @@ def test_streaming_batch_unification(spark, tmp_path):
     est = SpatialSketchEngine(ss.as_store()).query(q).collect()[0]["est"]
     assert est == ev.count() + 50
     st2 = ss.compact()
-    assert st2.manifest["snapshot_seq"] == 1
+    assert st2.manifest["snapshot_seq"] == 4
     hist = SketchStore.snapshots(p)
-    assert [m["snapshot_seq"] for m in hist] == [0, 1]
-    tv = SketchStore.load(spark, p, cfg, "exact", at_seq=0)
+    assert [m["snapshot_seq"] for m in hist] == [0, 1, 2, 3, 4]
+    tv = SketchStore.load(spark, p, cfg, "exact", at_seq=2)
     assert SpatialSketchEngine(tv).query(q).collect()[0]["est"] \
         == ev.count()
 
@@ -238,43 +244,44 @@ def test_streaming_session_windows(spark, tmp_path):
 
 def test_compact_concurrent_commit_rejected(spark, tmp_path, monkeypatch):
     """A compact racing another commit on the same path must not
-    clobber the winner's sketch_s<seq>/manifest_s<seq>: compact
-    verifies the on-disk seq BEFORE writing its data dir (ADVICE r4 —
-    the pre-commit re-check alone would raise only after the winner's
-    published sketch_s<seq> had already been overwritten) and again
-    before committing the manifest. Asserts post-race data integrity,
+    clobber the winner: the racer commits while compact() writes its
+    new base, compact()'s commit is refused, its dir is removed, and the
+    winner's snapshot loads intact. Asserts post-race data integrity,
     not just the exception."""
+    from spatialsketch_spark.geo.build import SketchStore
     ev = derive_geo_events(spark, SF_UNIT, N).cache()
     cfg = SketchConfig.exact_mode(item_domain=ITEM_DOMAIN, n=N)
     p = str(tmp_path / "sk")
     ss = StreamingSketch(spark, cfg, "exact", 0, p)
-    ss._process_batch(ev.filter(F.col("ts") < 500), 0)
-    st0 = ss.compact()                       # snapshot seq 0
+    ss._process_batch(ev.filter(F.col("ts") < 500), 0)     # seq 0
+    ss._process_batch(ev.filter(F.col("ts") >= 500), 1)    # seq 1
+    loser = ss.as_store()
 
-    # simulate a commit landing mid-compact: the racer's merge_events
-    # advances the on-disk seq after compact() has read the manifest
-    ss._process_batch(ev.filter(F.col("ts") >= 500), 1)
-    orig = StreamingSketch._accumulated_state
+    # simulate a commit landing mid-compact: the racer's append
+    # advances the on-disk seq while compact() writes its base
+    from pyspark.sql import DataFrameWriter
+    orig = DataFrameWriter.parquet
     racer = []
 
-    def racing(self):
-        out = orig(self)
-        racer.append(st0.merge_events(ev.limit(10)))   # commit -> seq 1
+    def racing(self, path, *a, **kw):
+        out = orig(self, path, *a, **kw)
+        if not racer and "/sketch_s" in path:
+            racer.append(None)
+            racer[0] = ss.as_store().merge_events(ev.limit(10),
+                                                  batch_id=2)
         return out
 
-    monkeypatch.setattr(StreamingSketch, "_accumulated_state", racing)
+    monkeypatch.setattr(DataFrameWriter, "parquet", racing)
     with pytest.raises(ValueError, match="concurrent snapshot commit"):
-        ss.compact()
+        loser.compact()
     monkeypatch.undo()
-    # the loser must NOT have touched the winner's published data dir:
-    # sketch_s1 on disk still holds exactly what the racer committed
-    want = sorted(tuple(r) for r in racer[0].df.collect())
-    got = sorted(tuple(r) for r in
-                 spark.read.parquet(f"{p}/sketch_s1").select(
-                     *racer[0].df.columns).collect())
-    assert got == want
-    st2 = ss.compact()                       # fresh attempt succeeds
-    assert st2.manifest["snapshot_seq"] == 2
+    cur = SketchStore.load(spark, p, cfg, "exact")
+    assert cur.manifest == racer[0].manifest          # seq 2, the racer's
+    assert sorted(map(tuple, cur.df.collect())) \
+        == sorted(map(tuple, racer[0].df.collect()))
+    assert not [d for d in os.listdir(p) if d.startswith("sketch_s")]
+    st3 = ss.compact()                       # fresh attempt succeeds
+    assert st3.manifest["snapshot_seq"] == 3
 
 
 def test_stream_window_fixture_margins_and_drops(spark):
