@@ -47,10 +47,13 @@ import uuid
 
 import numpy as np
 import pyarrow as pa
+from pyspark.rdd import RDD
+from pyspark.serializers import NoOpSerializer
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import SketchConfig
 from ..core.kernels import make_kernel
+from .layout import zorder_col
 
 SKETCH_SCHEMA = ("grid_key INT, cell BIGINT, payload BINARY, "
                  "n_events BIGINT, val_sum BIGINT")
@@ -283,14 +286,10 @@ def build_sketch_df(events: DataFrame, cfg: SketchConfig, kind: str,
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     if mode == "zorder":
-        z = F.lit(0).cast("bigint")
-        for b in range(cfg.levels - 1):
-            z = (z
-                 + (F.shiftright("x", b).bitwiseAND(F.lit(1))
-                    * F.lit(1 << (2 * b + 1)))
-                 + (F.shiftright("y", b).bitwiseAND(F.lit(1))
-                    * F.lit(1 << (2 * b))))
-        events = events.repartitionByRange(num_partitions, z)
+        # y on the even bits, x on the odd: the range bounds, and so the
+        # partials of every kernel, stay those the build has always cut
+        events = events.repartitionByRange(
+            num_partitions, zorder_col(F.col("y"), F.col("x")))
     elif mode == "partials":
         # ensure the narrow input is actually parallel (a single parquet
         # file otherwise serializes the whole partial build on one core)
@@ -313,6 +312,55 @@ def merge_partials(df: DataFrame, cfg: SketchConfig, kind: str,
             df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return df.repartition(num_partitions, "grid_key", "cell") \
         .mapInArrow(_merge_partitions(cfg, kind), schema=SKETCH_SCHEMA)
+
+
+# a probe-index block: one row of raw numpy buffers per table partition
+INDEX_DTYPES = (("key", np.int64), ("val_sum", np.int64), ("lo", np.int64),
+                ("hi", np.int64), ("data", np.uint8))
+INDEX_SCHEMA = ", ".join(f"{c} BINARY" for c, _ in INDEX_DTYPES)
+
+
+def _pack_block(n: int):
+    """The mapInArrow function that packs one partition of a sketch
+    table into one probe-index block, a single row of raw buffers:
+    int64 ``key = grid_key·n² + cell`` ascending, each key's int64
+    ``val_sum``, and its payload as ``data[lo:hi]``. The payload bytes
+    keep their scan order (``lo``/``hi`` follow the keys), so packing
+    never reorders them."""
+
+    def fn(batches):
+        batches = [b for b in batches if b.num_rows]
+        if not batches:
+            return
+        gks, cells, vss = _int64_columns(
+            batches, ("grid_key", "cell", "val_sum"))
+        starts, ends, chunks, base = [], [], [], 0
+        for b in batches:
+            off, data = _binary_buffers(b.column("payload"))
+            starts.append(off[:-1] - off[0] + base)
+            ends.append(off[1:] - off[0] + base)
+            chunks.append(data[off[0]:off[-1]])
+            base += int(off[-1] - off[0])
+        key = gks * (n * n) + cells
+        order = np.argsort(key, kind="stable")
+        cols = (key[order], vss[order], np.concatenate(starts)[order],
+                np.concatenate(ends)[order], np.concatenate(chunks))
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([c.tobytes()], pa.binary()) for c in cols],
+            names=[c for c, _ in INDEX_DTYPES])
+
+    return fn
+
+
+def _block_arrays(message: bytes, large: bool = False) -> tuple:
+    """One probe-index block, an Arrow record batch message of
+    INDEX_SCHEMA (``large``: written with large binary offsets) -> its
+    ``(key, val_sum, lo, hi, data)`` numpy views, without a copy."""
+    binary = pa.large_binary() if large else pa.binary()
+    b = pa.ipc.read_record_batch(pa.py_buffer(message), pa.schema(
+        [(c, binary) for c, _ in INDEX_DTYPES]))
+    return tuple(np.frombuffer(b.column(c)[0].as_buffer(), dt)
+                 for c, dt in INDEX_DTYPES)
 
 
 def _publish_json(dest: str, obj: dict, exclusive: bool = False) -> None:
@@ -371,6 +419,8 @@ class SketchStore:
         self.manifest = manifest or {}
         self.path = path
         self._bucketed = None
+        self._index = None
+        self._batches = 0
 
     def bucketed_df(self) -> DataFrame:
         """The sketch table hash-partitioned by its join key (grid_key,
@@ -385,6 +435,41 @@ class SketchStore:
             self._bucketed = self.df.repartition(
                 p, "grid_key", "cell").cache()
         return self._bucketed
+
+    def serving_index(self, budget_bytes: int):
+        """Count one served batch and pick its path: -> the probe index
+        to answer it from, or None for the SQL join. A store's first
+        batch, and every batch of a store whose payload bytes exceed
+        ``budget_bytes`` (or are not in its manifest), takes the join,
+        so a store queried once never packs an index.
+
+        The index is this store's table as a cached RDD with one block
+        per table partition (``_pack_block``), packed by the first job
+        that reads it; each element reads as ``(key, val_sum, lo, hi,
+        data)`` numpy arrays. The JVM caches each block as one Arrow
+        record batch message: Dataset.toArrowBatchRdd hands the packed
+        rows to Python as Arrow buffers, where ``DataFrame.rdd`` would
+        pickle each ~40 MB block a byte at a time (~2 s more per pack,
+        measured), and a batch reads a cached block without a copy.
+        Every snapshot is its own store object, so ``merge_events``,
+        ``rollback``, ``compact`` and ``load`` each start without an
+        index and never see another snapshot's."""
+        self._batches += 1
+        nbytes = self.manifest.get("metrics", {}).get("payload_bytes")
+        if self._batches == 1 or nbytes is None or nbytes > budget_bytes:
+            return None
+        if self._index is None:
+            packed = self.df.select("grid_key", "cell", "val_sum",
+                                    "payload") \
+                .mapInArrow(_pack_block(self.cfg.n), schema=INDEX_SCHEMA)
+            jrdd = packed._jdf.toArrowBatchRdd().cache()
+            large = self.spark.conf.get(
+                "spark.sql.execution.arrow.useLargeVarTypes",
+                "false").lower() == "true"
+            self._index = RDD(jrdd.toJavaRDD(), self.spark.sparkContext,
+                              NoOpSerializer()) \
+                .map(functools.partial(_block_arrays, large=large))
+        return self._index
 
     # -- construction ------------------------------------------------
     @classmethod
@@ -567,9 +652,12 @@ class SketchStore:
     def _table_stats(df: DataFrame) -> dict:
         """Sketch-table size metrics for the manifest, in one job."""
         r = df.agg(F.count("*").alias("cells"),
-                   F.sum("n_events").alias("merged_events")).collect()[0]
+                   F.sum("n_events").alias("merged_events"),
+                   F.sum(F.length("payload")).alias("payload_bytes")
+                   ).collect()[0]
         return {"sketch_cells": int(r["cells"]),
-                "merged_events": int(r["merged_events"] or 0)}
+                "merged_events": int(r["merged_events"] or 0),
+                "payload_bytes": int(r["payload_bytes"] or 0)}
 
     @staticmethod
     def _input_stats(events: DataFrame) -> tuple[list[dict], dict]:
@@ -702,10 +790,14 @@ class SketchStore:
             metrics.update(stats)
             return SketchStore(self.spark, merged, self.cfg, self.kind,
                                self.min_level, manifest)
-        # n_events adds up across the base and its deltas; sketch_cells
-        # stays the base's until compact()
+        # n_events adds up across the base and its deltas; payload
+        # bytes too, an upper bound on the merged view's (a manifest
+        # without them stays without); sketch_cells stays the base's
+        # until compact()
         metrics["merged_events"] = (metrics.get("merged_events", 0)
                                     + stats["merged_events"])
+        if "payload_bytes" in metrics:
+            metrics["payload_bytes"] += stats["payload_bytes"]
         manifest["deltas"] = self.manifest.get("deltas", []) + [new_dir]
         return self._commit(manifest, new_dir)
 

@@ -30,14 +30,24 @@ from .events import derive_geo_events, geo_events_sql
 _SPREAD = [(256, 0x00FF00FF), (16, 0x0F0F0F0F),
            (4, 0x33333333), (2, 0x55555555)]
 
+# 64-bit parallel bit-spread (a coordinate below 2^32 -> the even
+# positions of a 64-bit word), same construction as _SPREAD one stage
+# wider.
+_SPREAD64 = [(1 << 16, 0x0000FFFF0000FFFF), (1 << 8, 0x00FF00FF00FF00FF),
+             (16, 0x0F0F0F0F0F0F0F0F), (4, 0x3333333333333333),
+             (2, 0x5555555555555555)]
+
 ZORDER_BITS = 12          # grid is N=4096
 DEFAULT_BUCKETS = 64
 
 
 def zorder_col(x, y):
-    """Morton code of two grid coordinates as a codegen Column."""
+    """Morton code of two grid coordinates in [0, 2^31) as a codegen
+    bigint Column: x on the even bits, y on the odd bits. Below 2^12
+    it equals the 32-bit ``_SPREAD`` code the layout oracle computes."""
     def spread(v):
-        for mul, mask in _SPREAD:
+        v = v.cast("bigint")
+        for mul, mask in _SPREAD64:
             v = v.bitwiseOR(v * mul).bitwiseAND(F.lit(mask))
         return v
     return spread(x).bitwiseOR(spread(y) * 2)
@@ -138,12 +148,6 @@ def zorder_rect_buckets(x1: int, y1: int, x2: int, y2: int,
             out.add(_spread_py(bx) | (_spread_py(by) << 1))
     return sorted(out)
 
-
-# 64-bit parallel bit-spread (20-bit coordinate -> even positions of a
-# 40-bit word), same construction as _SPREAD one stage wider.
-_SPREAD64 = [(1 << 16, 0x0000FFFF0000FFFF), (1 << 8, 0x00FF00FF00FF00FF),
-             (16, 0x0F0F0F0F0F0F0F0F), (4, 0x3333333333333333),
-             (2, 0x5555555555555555)]
 
 GEOHASH_B32 = "0123456789bcdefghjkmnpqrstuvwxyz"
 GEOHASH_BITS = 20          # lon/lat index resolution (2^20 per axis)

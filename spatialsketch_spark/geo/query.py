@@ -2,24 +2,43 @@
 ``SpatialSketch::QueryRanges`` (SpatialSketch.cpp:837-855 dispatch and
 the per-sketch query kernels C6-C10 in SURVEY.md §2).
 
-Per batch: polygon -> rectangles (driver, Partitioner) -> dyadic cover
-rewritten against live grids (driver, effective_cover — replaces the
+Per batch, on the driver: polygon -> rectangles (Partitioner) -> dyadic
+cover rewritten against live grids (effective_cover — replaces the
 reference's dropped-grid recursion SpatialSketch.cpp:802-832), expanded
-once per distinct rect-set ("pid") into one Arrow cover table -> join
-against the sketch table pruned to the cover's grid keys (broadcast, or
-a shuffle against the bucketed cache past BROADCAST_COVER_ROWS) -> ONE
-matched relation (pid, coverage, sketch columns). Per-query metadata
-never enters the plan; it travels in the task closure of
-``_partials``, which answers both query classes from that relation:
+once per distinct rect-set ("pid") into one cover table (pid, grid_key,
+cell, coverage). Per-query metadata never enters a plan; it travels in
+task closures (``_ClassQueries``). The cover meets the store's cells on
+one of two paths, with the same estimators and bit-identical answers:
 
-  additive kinds: one mapInPandas estimates every (cell, query) pair
-            where the join output lives and emits per-partition
-            (qid, partial) sums — only scalars leave the task.
-  merge kinds: repartition(pid) -> mapInPandas merges each rect-set's
-            de-duplicated cell states once, then answers its queries.
+  index path: the store's probe index (``SketchStore.serving_index``), a
+            cached RDD with one block per table partition: keys
+            ``grid_key·N² + cell`` sorted, their val_sum and payload
+            bytes. ONE mapPartitions job: each task probes its block with
+            np.searchsorted, answers additive kinds into (qid, partial)
+            sums (count entries never decode a payload) and returns each
+            merge-kind pid's matched payloads once per cell; the driver
+            merges each such pid once.
+  SQL path: the cover as a DataFrame joined to the sketch table pruned
+            to the cover's grid keys (broadcast, or a shuffle against the
+            bucketed cache past BROADCAST_COVER_ROWS) -> ONE matched
+            relation. Additive kinds: one mapInPandas emits
+            per-partition (qid, partial) sums. Merge kinds:
+            repartition(pid) -> mapInPandas merges each rect-set's
+            de-duplicated cell states once.
 
-``query()`` sums the partials per qid as a DataFrame; ``query_values()``
-collects them and folds on the driver.
+Path rule, with no option: a store's first batch takes the SQL path, and
+so does every batch of a store whose manifest ``payload_bytes`` exceed
+INDEX_BUDGET_BYTES (or that has none); every other batch takes the index.
+A store queried once never packs an index, and a large store keeps the
+join. Tests force the SQL path by setting INDEX_BUDGET_BYTES to 0 and the
+index path by serving one batch first.
+
+``query()`` and ``query_values()`` take the same path: on the index path
+``query()`` wraps the driver's answers in a local DataFrame; on the SQL
+path it sums the partials per qid as a DataFrame, and ``query_values()``
+collects them and folds on the driver. Merge kinds merge each pid's
+cells in (grid_key, cell) order on both paths, so the lossy ECM/Elastic
+merges answer alike.
 
 Query kinds and their reference semantics:
   count     sum over cells of trunc(coverage * cell value sum), from the
@@ -43,8 +62,8 @@ given one is refused before a job runs.
 
 Every kind but ``count`` is answered by the store's kernel
 (``core/kernels.py``): its ``qkinds`` names the kinds it answers, and
-its ``additive_ests`` / ``merged_est`` answer them; this module only
-dispatches. The ``exact`` kernel answers every kind exactly
+its ``additive_ests`` / ``merged_est`` answer them on both paths; this
+module only dispatches. The ``exact`` kernel answers every kind exactly
 (collision-free mode) — that is what the DuckDB oracle gate exercises.
 """
 
@@ -56,6 +75,9 @@ from functools import reduce
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+from py4j.java_gateway import is_instance_of
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PythonException
 from pyspark.sql import DataFrame, functions as F
 
 from ..core.dyadic import cover_2d_np, effective_cover
@@ -88,23 +110,67 @@ class QuerySpec:
                          qkind, item, item_end, t0)
 
 
-def _additive_partials(cfg, kind: str, pid_queries: list):
-    """mapInPandas over matched rows (pid, coverage, val_sum, payload):
-    every row expands to (row, query) entries for its pid's additive
-    queries — count entries read val_sum, every other entry its row's
-    payload through the kernel's ``additive_ests`` — and the scaled
-    estimates fold to one (qid, partial) row per qid per partition.
-    ``pid_queries[pid]`` is that pid's additive queries; the closure
-    carries them as flat numpy columns in pid order (KBs for any
-    realistic batch)."""
-    cnt = np.array([len(qs) for qs in pid_queries], dtype=np.int64)
-    start = np.cumsum(cnt) - cnt
-    flat = [q for qs in pid_queries for q in qs]
-    qids = np.array([q.qid for q in flat], dtype=np.int64)
-    qkinds = np.array([q.qkind for q in flat], dtype=object)
-    items = np.array([q.item for q in flat], dtype=np.int64)
-    iends = np.array([q.item_end for q in flat], dtype=np.int64)
-    t0s = np.array([q.t0 for q in flat], dtype=np.int64)
+class _ClassQueries:
+    """One query class's queries of a batch: ``by_pid[pid]`` is a pid's
+    list, and the additive fields ride along as flat numpy columns in
+    pid order (KBs for any realistic batch). Travels in task closures;
+    per-query metadata never enters a plan."""
+
+    def __init__(self, by_pid: list):
+        self.by_pid = by_pid
+        self.pids = [p for p, qs in enumerate(by_pid) if qs]
+        self.has = np.array([bool(qs) for qs in by_pid], dtype=bool)
+        self.cnt = np.array([len(qs) for qs in by_pid], dtype=np.int64)
+        self.start = np.cumsum(self.cnt) - self.cnt
+        flat = [q for qs in by_pid for q in qs]
+        self.qids = np.array([q.qid for q in flat], dtype=np.int64)
+        self.qkinds = np.array([q.qkind for q in flat], dtype=object)
+        self.items = np.array([q.item for q in flat], dtype=np.int64)
+        self.iends = np.array([q.item_end for q in flat], dtype=np.int64)
+        self.t0s = np.array([q.t0 for q in flat], dtype=np.int64)
+
+    def additive(self, kernel, pids, covs, val_sums, payloads):
+        """Matched rows -> (qids, partial sums). Row i is a cell of
+        rect-set ``pids[i]`` at coverage ``covs[i]`` with value sum
+        ``val_sums[i]``; ``payloads(rows)`` returns those rows' payload
+        bytes. Every row expands to (row, query) entries for its pid's
+        queries: count entries read val_sum, every other entry its row's
+        payload through the kernel's ``additive_ests`` (each payload
+        deserialized once, however many entries read it), and the
+        coverage-scaled estimates sum per qid."""
+        nq = self.cnt[pids]
+        row = np.repeat(np.arange(len(pids)), nq)
+        # a row's entries are its pid's contiguous query slice
+        qpos = np.repeat(self.start[pids] - (np.cumsum(nq) - nq), nq) \
+            + np.arange(len(row))
+        ests = val_sums[row]
+        sel = self.qkinds[qpos] != "count"
+        if sel.any():
+            urows, ent = np.unique(row[sel], return_inverse=True)
+            p = qpos[sel]
+            ests[sel] = kernel.additive_ests(
+                payloads(urows), ent, self.qkinds[p], self.items[p],
+                self.iends[p], self.t0s[p])
+        # trunc per sub-query, exactly as the reference (:766) — values
+        # are non-negative so floor == trunc
+        contrib = np.floor(covs[row] * ests).astype(np.int64)
+        uq, inv = np.unique(self.qids[qpos], return_inverse=True)
+        return uq, int_group_sum(inv, contrib, len(uq))
+
+    def merged(self, kernel, pid: int, payloads: list) -> list:
+        """-> [(qid, est)] for pid's queries over its cells' states,
+        deserialized once. Merge kinds ignore coverage, so each cell
+        enters once; callers pass the payloads in (grid_key, cell) order,
+        which keeps the lossy ECM/Elastic merges path-independent."""
+        states = [kernel.deserialize(b) for b in payloads]
+        return [(q.qid, kernel.merged_est(states, q.qkind, q.item,
+                                          q.item_end, q.t0))
+                for q in self.by_pid[pid]]
+
+
+def _additive_fn(cfg, kind: str, add: _ClassQueries):
+    """SQL path, mapInPandas over matched rows (pid, coverage, val_sum,
+    payload) -> one (qid, partial) row per qid per partition."""
 
     def fn(batches):
         kernel = make_kernel(kind, cfg)
@@ -112,28 +178,11 @@ def _additive_partials(cfg, kind: str, pid_queries: list):
         for pdf in batches:
             if not len(pdf):
                 continue
-            pids = pdf["pid"].to_numpy(np.int64)
-            nq = cnt[pids]
-            row = np.repeat(np.arange(len(pdf)), nq)
-            # a row's entries are its pid's contiguous query slice
-            qpos = np.repeat(start[pids] - (np.cumsum(nq) - nq), nq) \
-                + np.arange(len(row))
-            ests = pdf["val_sum"].to_numpy(np.int64)[row]
-            sel = qkinds[qpos] != "count"
-            if sel.any():
-                # each matched payload is deserialized once, however
-                # many entries read it
-                urows, ent = np.unique(row[sel], return_inverse=True)
-                p = qpos[sel]
-                ests[sel] = kernel.additive_ests(
-                    pdf["payload"].to_numpy()[urows], ent, qkinds[p],
-                    items[p], iends[p], t0s[p])
-            covs = pdf["coverage"].to_numpy(np.float64)
-            # trunc per sub-query, exactly as the reference (:766) —
-            # values are non-negative so floor == trunc
-            contrib = np.floor(covs[row] * ests).astype(np.int64)
-            uq, inv = np.unique(qids[qpos], return_inverse=True)
-            part = int_group_sum(inv, contrib, len(uq))
+            payload = pdf["payload"].to_numpy()
+            uq, part = add.additive(
+                kernel, pdf["pid"].to_numpy(np.int64),
+                pdf["coverage"].to_numpy(np.float64),
+                pdf["val_sum"].to_numpy(np.int64), lambda u: payload[u])
             for q, v in zip(uq.tolist(), part.tolist()):
                 sums[q] = sums.get(q, 0) + v
         if sums:
@@ -145,10 +194,9 @@ def _additive_partials(cfg, kind: str, pid_queries: list):
     return fn
 
 
-def _merge_partials(cfg, kind: str, pid_queries: list):
-    """mapInPandas after repartition(pid): all of a rect-set's matched
-    cells share a partition; each pid's states are deserialized once
-    and answer every merge query of that pid (``pid_queries[pid]``)."""
+def _merge_fn(cfg, kind: str, mrg: _ClassQueries):
+    """SQL path, mapInPandas after repartition(pid): all of a rect-set's
+    matched cells share a partition and are merged once per pid."""
 
     def fn(batches):
         kernel = make_kernel(kind, cfg)
@@ -156,23 +204,16 @@ def _merge_partials(cfg, kind: str, pid_queries: list):
         if not chunks:
             return
         allpdf = pd.concat(chunks, ignore_index=True)
-        # merge-kind semantics ignore coverage (states are merged, not
-        # scaled), so two disjoint rects of one rect-set hitting the
-        # same floor-level cell must contribute that cell's state ONCE —
-        # without this dedup the duplicated counters inflate l2 /
-        # window_merge results for unaligned multi-rect regions. Every
-        # store holds one row per (grid_key, cell) (a snapshot with
-        # deltas merges on read), so this drops cover duplicates only.
-        allpdf = allpdf.drop_duplicates(subset=["pid", "grid_key", "cell"])
-        out_qid, out_est = [], []
-        for pid, grp in allpdf.groupby("pid", sort=False):
-            states = [kernel.deserialize(b) for b in grp["payload"]]
-            for q in pid_queries[int(pid)]:
-                out_qid.append(q.qid)
-                out_est.append(kernel.merged_est(
-                    states, q.qkind, q.item, q.item_end, q.t0))
-        yield pd.DataFrame({"qid": pd.array(out_qid, dtype="int64"),
-                            "est": pd.array(out_est, dtype="int64")})
+        # two rects of one rect-set can cover the same floor-level cell;
+        # every store holds one row per (grid_key, cell) (a snapshot
+        # with deltas merges on read), so this drops cover duplicates
+        allpdf = allpdf.drop_duplicates(subset=["pid", "grid_key", "cell"]) \
+            .sort_values(["grid_key", "cell"])
+        out = [a for pid, grp in allpdf.groupby("pid", sort=False)
+               for a in mrg.merged(kernel, int(pid), list(grp["payload"]))]
+        yield pd.DataFrame({
+            "qid": pd.array([q for q, _ in out], dtype="int64"),
+            "est": pd.array([e for _, e in out], dtype="int64")})
 
     return fn
 
@@ -182,6 +223,17 @@ class SpatialSketchEngine:
 
     def __init__(self, store: SketchStore):
         self.store = store
+
+    # broadcast the cover relation up to this many rows (~60 B/row ->
+    # ~200 MB broadcast ceiling); beyond it, shuffle-join against the
+    # bucketed sketch cache instead
+    BROADCAST_COVER_ROWS = 3_000_000
+
+    # manifest payload bytes up to which a store answers its second and
+    # later batches from its probe index. An index batch streams every
+    # block (~1.6 ms/MB measured) where a SQL batch pays a ~600 ms plan
+    # and job floor, so the two cross near 300 MB.
+    INDEX_BUDGET_BYTES = 300_000_000
 
     def _cover_table(self, pid_ranges: list) -> pa.Table:
         """Driver-side cover of ``[(pid, ranges)]`` as one Arrow table
@@ -218,75 +270,13 @@ class SpatialSketchEngine:
         return self.store.spark.createDataFrame(
             self._cover_table(pid_ranges), schema=COVER_SCHEMA)
 
-    # broadcast the cover relation up to this many rows (~60 B/row ->
-    # ~200 MB broadcast ceiling); beyond it, shuffle-join against the
-    # bucketed sketch cache instead
-    BROADCAST_COVER_ROWS = 3_000_000
-
-    # scan-side task sizing for the broadcast-probe path: the store is
-    # cached/written with the BUILD's parallelism (one partition per
-    # shuffle slot), but a probe batch touches O(queries · log²N) cells
-    # — scanning a sandbox-scale store with 32 near-empty tasks pays
-    # pure scheduling + Arrow-worker overhead (~25% of the 600-query
-    # batch floor, measured). Bound the scan to ~32k cells/task via
-    # coalesce, which NEVER increases partitioning: at 100 TB the store
-    # has far more cells per partition than this and the coalesce is a
-    # no-op, while a laptop-scale store drops to a handful of tasks.
-    CELLS_PER_SCAN_TASK = 32_768
-
-    def _scan_tasks(self):
-        cells = (self.store.manifest or {}).get(
-            "metrics", {}).get("sketch_cells")
-        if not cells:
-            return None
-        return max(1, -(-int(cells) // self.CELLS_PER_SCAN_TASK))
-
-    def _matched_pids(self, queries: list[QuerySpec]):
-        """The matched relation at PLACEMENT granularity: identical
-        rect-sets (e.g. the count and the freq probe of one placement,
-        or repeated canned regions) share a pid, so the cover is
-        expanded and joined once per DISTINCT rect-set. Returns
-        (matched DataFrame (grid_key, cell, sketch columns, pid,
-        coverage), the pid of each query)."""
-        groups: dict[tuple, int] = {}
-        pid_ranges: list = []
-        qpid = []
-        for q in queries:
-            pid = groups.setdefault(tuple(map(tuple, q.ranges)), len(groups))
-            if pid == len(pid_ranges):
-                pid_ranges.append((pid, q.ranges))
-            qpid.append(pid)
-        tbl = self._cover_table(pid_ranges)
-        cover = self.store.spark.createDataFrame(tbl, schema=COVER_SCHEMA)
-        # exact grid_key pruning list, from the cover itself
-        needed = np.unique(tbl["grid_key"].to_numpy()).tolist()
-        if tbl.num_rows <= self.BROADCAST_COVER_ROWS:
-            # broadcast the cover -> zero shuffle on the sketch side;
-            # the broadcast exchange is canonically identical across
-            # the additive and merge branches, so ReuseExchange
-            # materializes the cover ONCE per batch.
-            pruned = self.store.df.where(F.col("grid_key").isin(needed))
-            nt = self._scan_tasks()
-            if nt is not None:
-                pruned = pruned.coalesce(nt)
-            m = pruned.join(F.broadcast(cover), ["grid_key", "cell"])
-        else:
-            # cover too large to broadcast -> shuffle join against the
-            # BUCKETED sketch cache: its (grid_key, cell) hash
-            # partitioning is reused by the join, so only the cover side
-            # shuffles — the payload blobs stay put (at cluster scale:
-            # a bucketed table).
-            pruned = self.store.bucketed_df().where(
-                F.col("grid_key").isin(needed))
-            m = pruned.join(cover, ["grid_key", "cell"])
-        return m, qpid
-
-    def _partials(self, queries: list[QuerySpec]) -> DataFrame:
-        """-> DataFrame(qid, est) of per-partition partial answers; a
-        qid's answer is the sum of its rows (merge kinds emit one row
-        per qid). Validates every query, then adds an additive and/or a
-        merge branch over ONE matched relation — each only when the
-        batch has queries of that class."""
+    def _plan(self, queries: list[QuerySpec]):
+        """Validate every query and group the batch by rect-set:
+        identical rect-sets (e.g. the count and the freq probe of one
+        placement, or repeated canned regions) share a pid, so the cover
+        is expanded and matched once per DISTINCT rect-set. -> (pid
+        ranges, additive ``_ClassQueries`` or None, merge
+        ``_ClassQueries`` or None)."""
         qkinds = make_kernel(self.store.kind, self.store.cfg).qkinds
         for q in queries:
             if q.qkind != "count" and q.qkind not in qkinds:
@@ -298,47 +288,145 @@ class SpatialSketchEngine:
                 raise ValueError(
                     f"t0={q.t0} on a {q.qkind!r} query: only window and "
                     "window_merge queries take a start time")
-        spark = self.store.spark
-        cfg = self.store.cfg
-        m, qpid = self._matched_pids(queries)
-        n_pids = max(qpid, default=-1) + 1
-        add_q = [[] for _ in range(n_pids)]
-        mrg_q = [[] for _ in range(n_pids)]
-        for pid, q in zip(qpid, queries):
-            (add_q if q.qkind in ADDITIVE else mrg_q)[pid].append(q)
+        groups: dict[tuple, int] = {}
+        pid_ranges, add, mrg = [], [], []
+        for q in queries:
+            pid = groups.setdefault(tuple(map(tuple, q.ranges)), len(groups))
+            if pid == len(pid_ranges):
+                pid_ranges.append((pid, q.ranges))
+                add.append([])
+                mrg.append([])
+            (add if q.qkind in ADDITIVE else mrg)[pid].append(q)
+        return (pid_ranges, _ClassQueries(add) if any(add) else None,
+                _ClassQueries(mrg) if any(mrg) else None)
 
-        def rows_of(pid_queries):
+    def _index_values(self, index, queries: list[QuerySpec], pid_ranges,
+                      add, mrg) -> dict:
+        """Index path -> {qid: est}: ONE mapPartitions job over the
+        store's probe index. Each task probes its key-sorted block for
+        the cover's keys with ``np.searchsorted`` and returns its
+        additive (qids, partials) and, per merge-kind pid, the matched
+        cells' (key, payload) once each; the driver sums the partials
+        and merges each merge pid once."""
+        cover = self._cover_table(pid_ranges)
+        cfg, kind = self.store.cfg, self.store.kind
+        ckey = cover["grid_key"].to_numpy().astype(np.int64) \
+            * (cfg.n * cfg.n) + cover["cell"].to_numpy()
+        cpid = cover["pid"].to_numpy()
+        ccov = cover["coverage"].to_numpy()
+
+        def probe(blocks):
+            kernel = make_kernel(kind, cfg)
+            for key, val_sum, lo, hi, data in blocks:
+                if not len(key):
+                    continue
+                pos = np.minimum(np.searchsorted(key, ckey), len(key) - 1)
+                hit = key[pos] == ckey
+                rows, pids = pos[hit], cpid[hit]
+
+                def payloads(r):
+                    return [data[lo[j]:hi[j]].tobytes() for j in r.tolist()]
+                if add is not None:
+                    yield ("add", *add.additive(
+                        kernel, pids, ccov[hit], val_sum[rows],
+                        lambda u: payloads(rows[u])))
+                if mrg is not None:
+                    # a pid's rects can share a floor-level cell
+                    sel = mrg.has[pids]
+                    pr = np.unique(pids[sel] * len(key) + rows[sel])
+                    yield ("merge", pr // len(key), key[pr % len(key)],
+                           payloads(pr % len(key)))
+
+        try:
+            recs = index.mapPartitions(probe).collect()
+        except Py4JJavaError as e:
+            # a task's Python error (a kernel guard's ValueError) surfaces
+            # as a PythonException, as it does on the SQL path
+            cause = e.java_exception.getCause()
+            if cause is not None and is_instance_of(
+                    self.store.spark.sparkContext._gateway, cause,
+                    "org.apache.spark.api.python.PythonException"):
+                raise PythonException(
+                    "\n  An exception was thrown from the Python worker. "
+                    "Please see the stack trace below.\n"
+                    + cause.getMessage()) from None
+            raise
+        out = {q.qid: 0 for q in queries}
+        cells: dict[int, dict] = {}
+        for rec in recs:
+            if rec[0] == "add":
+                for q, v in zip(rec[1].tolist(), rec[2].tolist()):
+                    out[q] += v
+            else:
+                for p, k, b in zip(rec[1].tolist(), rec[2].tolist(), rec[3]):
+                    cells.setdefault(p, {})[k] = b
+        kernel = make_kernel(kind, cfg)
+        for p, by_key in cells.items():
+            for q, est in mrg.merged(kernel, p,
+                                     [by_key[k] for k in sorted(by_key)]):
+                out[q] = est
+        return out
+
+    def _matched(self, cover: pa.Table) -> DataFrame:
+        """SQL path: the cover joined to the sketch table pruned to the
+        cover's grid keys -> ONE matched relation (grid_key, cell, sketch
+        columns, pid, coverage)."""
+        df = self.store.spark.createDataFrame(cover, schema=COVER_SCHEMA)
+        # exact grid_key pruning list, from the cover itself
+        needed = np.unique(cover["grid_key"].to_numpy()).tolist()
+        if cover.num_rows <= self.BROADCAST_COVER_ROWS:
+            # broadcast the cover -> zero shuffle on the sketch side;
+            # the broadcast exchange is canonically identical across
+            # the additive and merge branches, so ReuseExchange
+            # materializes the cover ONCE per batch.
+            return self.store.df.where(F.col("grid_key").isin(needed)) \
+                .join(F.broadcast(df), ["grid_key", "cell"])
+        # cover too large to broadcast -> shuffle join against the
+        # BUCKETED sketch cache: its (grid_key, cell) hash partitioning
+        # is reused by the join, so only the cover side shuffles — the
+        # payload blobs stay put (at cluster scale: a bucketed table).
+        return self.store.bucketed_df() \
+            .where(F.col("grid_key").isin(needed)) \
+            .join(df, ["grid_key", "cell"])
+
+    def _sql_partials(self, pid_ranges, add, mrg) -> DataFrame:
+        """SQL path -> DataFrame(qid, est) of per-partition partial
+        answers; a qid's answer is the sum of its rows (merge kinds emit
+        one row per qid). One additive and/or one merge branch over ONE
+        matched relation, each only when the batch has queries of that
+        class."""
+        spark = self.store.spark
+        cfg, kind = self.store.cfg, self.store.kind
+        m = self._matched(self._cover_table(pid_ranges))
+
+        def rows_of(cq):
             # only the pids that carry queries of this class
-            pids = [p for p, qs in enumerate(pid_queries) if qs]
-            if len(pids) == n_pids:
-                return m, pids
-            return m.where(F.col("pid").isin(pids)), pids
+            if len(cq.pids) == len(pid_ranges):
+                return m
+            return m.where(F.col("pid").isin(cq.pids))
 
         parts = []
-        rows, pids = rows_of(add_q)
-        if pids:
+        if add is not None:
             # pids asking only counts never read the blob: NULL it
             # before the Arrow transfer
-            blind = [p for p in pids
-                     if all(q.qkind == "count" for q in add_q[p])]
+            blind = [p for p in add.pids
+                     if all(q.qkind == "count" for q in add.by_pid[p])]
             payload = F.col("payload")
             if blind:
                 payload = F.when(F.col("pid").isin(blind), F.lit(None)) \
                     .otherwise(payload)
             parts.append(
-                rows.select("pid", "coverage", "val_sum",
-                            payload.alias("payload"))
-                .mapInPandas(_additive_partials(cfg, self.store.kind,
-                                                add_q),
+                rows_of(add).select("pid", "coverage", "val_sum",
+                                    payload.alias("payload"))
+                .mapInPandas(_additive_fn(cfg, kind, add),
                              schema=RESULT_SCHEMA))
-        rows, pids = rows_of(mrg_q)
-        if pids:
-            n_parts = min(len(pids), int(spark.conf.get(
+        if mrg is not None:
+            n_parts = min(len(mrg.pids), int(spark.conf.get(
                 "spark.sql.shuffle.partitions")))
             parts.append(
-                rows.select("pid", "grid_key", "cell", "payload")
+                rows_of(mrg).select("pid", "grid_key", "cell", "payload")
                 .repartition(n_parts, "pid")
-                .mapInPandas(_merge_partials(cfg, self.store.kind, mrg_q),
+                .mapInPandas(_merge_fn(cfg, kind, mrg),
                              schema=RESULT_SCHEMA))
         if not parts:
             return spark.createDataFrame([], schema=RESULT_SCHEMA)
@@ -348,12 +436,23 @@ class SpatialSketchEngine:
         """-> DataFrame(qid, est), one row per query; missing-cell-safe
         (untouched cells contribute 0, the analogue of lazily-
         unallocated sketches). The surface for SQL-integrated consumers
-        (the driver gate included): ``_partials`` summed per qid, then a
-        broadcast fill for queries that matched no cell. Raises
-        ValueError for a query kind the store's kernel cannot answer."""
-        res = self._partials(queries).groupBy("qid").agg(
+        (the driver gate included). On the index path the answers are
+        computed now and wrapped in a local DataFrame; on the SQL path
+        the partials are summed per qid, then a broadcast fill adds the
+        queries that matched no cell. Raises ValueError for a query kind
+        the store's kernel cannot answer."""
+        spark = self.store.spark
+        plan = self._plan(queries)
+        index = self.store.serving_index(self.INDEX_BUDGET_BYTES)
+        if index is not None:
+            vals = self._index_values(index, queries, *plan)
+            return spark.createDataFrame(pa.table({
+                "qid": pa.array(list(vals), pa.int64()),
+                "est": pa.array(list(vals.values()), pa.int64())}),
+                schema=RESULT_SCHEMA)
+        res = self._sql_partials(*plan).groupBy("qid").agg(
             F.sum("est").cast("bigint").alias("est"))
-        all_qids = self.store.spark.createDataFrame(
+        all_qids = spark.createDataFrame(
             [(q.qid,) for q in queries], schema="qid BIGINT")
         # the aggregated result is <= |queries| rows — broadcast it so
         # the missing-qid fill join never plans an SMJ (two exchanges +
@@ -364,17 +463,24 @@ class SpatialSketchEngine:
 
     def query_values(self, queries: list[QuerySpec]) -> dict:
         """Low-latency batch answers -> {qid: est}, equal to ``query()``
-        (asserted in tests/test_plans.py). The same ``_partials`` — at
-        most |queries| x #partitions tiny (qid, est) rows — are
-        collected and folded on the DRIVER instead of flowing through a
-        groupBy shuffle plus a qid-fill broadcast join, so each batch
-        sheds one shuffle stage, one broadcast exchange and one job.
+        (asserted in tests/test_plans.py) on either path. On the SQL
+        path the same partials — at most |queries| x #partitions tiny
+        (qid, est) rows — are collected and folded on the DRIVER instead
+        of flowing through a groupBy shuffle plus a qid-fill broadcast
+        join, so each batch sheds one shuffle stage, one broadcast
+        exchange and one job.
 
         Scale posture: the driver fold is O(|queries|) — exactly the
         size of the answer the caller receives either way (the
         reference's query API returns the same, SpatialSketch.cpp:
-        837-855); no payload or per-cell row is ever collected."""
+        837-855). The only per-cell rows a batch collects are the
+        matched payloads of merge-kind rect-sets on the index path,
+        which the SQL path ships to one task instead."""
+        plan = self._plan(queries)
+        index = self.store.serving_index(self.INDEX_BUDGET_BYTES)
+        if index is not None:
+            return self._index_values(index, queries, *plan)
         out = {q.qid: 0 for q in queries}
-        for r in self._partials(queries).collect():
+        for r in self._sql_partials(*plan).collect():
             out[int(r["qid"])] += int(r["est"])
         return out

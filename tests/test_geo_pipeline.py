@@ -170,6 +170,23 @@ def test_build_modes_agree(spark, events):
             np.testing.assert_array_equal(sa[f], sb[f])
 
 
+def test_zorder_build_past_16_bit_grid(spark):
+    """A grid wider than 2^16 cells per axis: the Z-order range key
+    keeps every coordinate bit, and the build equals the skew-safe
+    'partials' mode, which uses no range key."""
+    from spatialsketch_spark.geo.build import build_sketch_df
+    n = 1 << 17
+    ev = spark.range(3000).selectExpr(
+        "id AS ts", "id % 11 AS item", f"(id * 7919) % {n} AS x",
+        f"(id * 104729 + 65536) % {n} AS y", "CAST(1 AS BIGINT) AS value")
+    cfg = SketchConfig.exact_mode(item_domain=11, n=n)
+    rows = [sorted((r["grid_key"], r["cell"], bytes(r["payload"]))
+                   for r in build_sketch_df(ev, cfg, "exact", 10,
+                                            mode=mode).collect())
+            for mode in ("zorder", "partials")]
+    assert rows[0] == rows[1] and len(rows[0]) > 3000
+
+
 def test_store_resume(spark, events, tmp_path):
     cfg = SketchConfig.exact_mode(item_domain=ITEM_DOMAIN, n=N)
     p = str(tmp_path / "store")
@@ -219,22 +236,20 @@ def test_trunc_points_pinned(spark):
     assert got[2] == 1
 
 
-def test_bucketed_join_fallback_matches_broadcast(spark, events, exact_store):
+def test_bucketed_join_fallback_matches_broadcast(spark, events, exact_store,
+                                                  monkeypatch):
     """Force the giant-cover fallback (shuffle join against the
     (grid_key, cell)-bucketed sketch cache) and assert it answers
     exactly like the broadcast path."""
     eng = SpatialSketchEngine(exact_store)
     qs = [QuerySpec(i, [(i % 8, (i * 3) % 8, 32 + i % 16, 40 + i % 8)],
                     "count") for i in range(96)]
+    # the shared store has served batches: keep both on the SQL path
+    monkeypatch.setattr(SpatialSketchEngine, "INDEX_BUDGET_BYTES", 0)
     want = sorted((r["qid"], r["est"])
                   for r in eng.query(qs).collect())
-    bc = SpatialSketchEngine.BROADCAST_COVER_ROWS
-    SpatialSketchEngine.BROADCAST_COVER_ROWS = 0
-    try:
-        got = sorted((r["qid"], r["est"])
-                     for r in eng.query(qs).collect())
-    finally:
-        SpatialSketchEngine.BROADCAST_COVER_ROWS = bc
+    monkeypatch.setattr(SpatialSketchEngine, "BROADCAST_COVER_ROWS", 0)
+    got = sorted((r["qid"], r["est"]) for r in eng.query(qs).collect())
     assert got == want
 
 
@@ -530,6 +545,52 @@ def test_snapshot_rollback(spark, events, tmp_path):
     assert not (tmp_path / "store" / s1.manifest["deltas"][0]).exists()
     assert _store_rows(SketchStore.load(spark, p, cfg, "exact",
                                         at_seq=2)) == _store_rows(rb)
+
+
+@pytest.mark.parametrize("on_disk", [False, True], ids=["memory", "path"])
+def test_each_snapshot_serves_its_own_index(spark, events, tmp_path,
+                                            on_disk):
+    """Every store object is one snapshot with its own probe index: a
+    store queried once never packs one; a store's second batch is
+    answered from its own index, equal to its first (SQL) batch; the
+    parent of merge_events still answers its old snapshot; and on a
+    path-backed store compact() and rollback() start fresh indexes."""
+    cfg = SketchConfig.exact_mode(item_domain=ITEM_DOMAIN, n=N)
+    a = events.where(F.col("ts") % 3 != 0)
+    b = events.where(F.col("ts") % 3 == 0)
+    qs = [QuerySpec(0, [(0, 0, 40, 33)], "count"),
+          QuerySpec(1, [(0, 0, 40, 33)], "freq", item=3),
+          QuerySpec(2, [(5, 9, 63, 50), (0, 0, 4, 4)], "l2"),
+          QuerySpec(3, [(0, 0, 63, 63)], "distinct")]
+
+    def answers(store, want):
+        eng = SpatialSketchEngine(store)
+        first = eng.query_values(qs)
+        assert store._index is None          # one batch: no pack
+        assert eng.query_values(qs) == first == want
+        assert store._index is not None
+        return store._index
+
+    want_a = SpatialSketchEngine(
+        SketchStore.build(spark, a, cfg, "exact", 1)).query_values(qs)
+    want_ab = SpatialSketchEngine(
+        SketchStore.build(spark, events, cfg, "exact", 1)).query_values(qs)
+    assert want_a != want_ab
+    p = str(tmp_path / "store") if on_disk else None
+    s0 = SketchStore.build(spark, a, cfg, "exact", 1, path=p)
+    idx0 = answers(s0, want_a)
+    s1 = s0.merge_events(b)
+    assert answers(s1, want_ab) is not idx0
+    assert SpatialSketchEngine(s0).query_values(qs) == want_a
+    assert s0._index is idx0
+    if on_disk:
+        s2 = s1.compact()
+        idx2 = answers(s2, want_ab)
+        s3 = s2.rollback(0)
+        assert answers(s3, want_a) is not idx2
+        assert SpatialSketchEngine(s2).query_values(qs) == want_ab
+        assert answers(SketchStore.load(spark, p, cfg, "exact"),
+                       want_a) is not s3._index
 
 
 def test_combine_fingerprints_empty_side():

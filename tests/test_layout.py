@@ -26,6 +26,26 @@ def test_zorder_bucket_is_spatial_block(spark):
     assert bad == 0
 
 
+def test_zorder_col_interleaves_31_bit_coordinates(spark):
+    """zorder_col is the build's range key for any grid: it must equal a
+    bit-by-bit interleave (x even, y odd) for coordinates past 16 bits
+    too, up to 2^31 - 1, where a 32-bit spread would drop the high
+    bits."""
+    from spatialsketch_spark.geo.layout import zorder_col
+
+    def morton(x, y):
+        return sum(((x >> b & 1) << 2 * b) | ((y >> b & 1) << 2 * b + 1)
+                   for b in range(31))
+
+    top = (1 << 31) - 1
+    pts = [(0, 0), (1, 0), (0, 1), (4095, 4095), (65535, 65536),
+           (1 << 16, 3), (123456789, 987654321), (top, top), (top, 0)]
+    df = spark.createDataFrame(pts, "x INT, y INT")
+    got = [r["z"] for r in df.select(
+        zorder_col(F.col("x"), F.col("y")).alias("z")).collect()]
+    assert got == [morton(x, y) for x, y in pts]
+
+
 def test_zorder_layout_prunes_partitions(spark, tmp_path):
     """The 100 TB claim made concrete: write the events bucket-
     partitioned by Morton block, rewrite a rectangle query with

@@ -76,32 +76,69 @@ def test_no_row_python_udfs(spark):
     assert "BatchEvalPython" not in p
 
 
-def test_probe_scan_sized_small_store_not_bucketed_path(spark):
-    """The broadcast-probe path coalesces the store scan to
-    ~CELLS_PER_SCAN_TASK cells/task (a no-op on cluster-scale stores,
-    a big scheduling win on small ones); the bucketed-shuffle fallback
-    must NOT be coalesced — it relies on the (grid_key, cell) hash
-    partitioning being intact for its shuffle-free sketch side."""
+# every kind each kernel answers, with the item / item_end / t0 it takes
+PARITY_KINDS = {
+    "exact": [("count", -1, -1, -1), ("freq", 17, -1, -1),
+              ("range_freq", 10, 40, -1), ("window", 3, -1, 500),
+              ("window_merge", 3, -1, 500), ("distinct", -1, -1, -1),
+              ("member", 42, -1, -1), ("l2", -1, -1, -1)],
+    "cm": [("count", -1, -1, -1), ("freq", 17, -1, -1),
+           ("l2", -1, -1, -1)],
+    "dcm": [("count", -1, -1, -1), ("range_freq", 10, 40, -1)],
+    "ecm": [("count", -1, -1, -1), ("freq", 3, -1, -1),
+            ("window", 3, -1, 500), ("window_merge", 3, -1, 500)],
+}
+
+
+def test_index_path_equals_sql_path(spark, monkeypatch):
+    """A store answers its first batch, and every batch once its payload
+    bytes exceed INDEX_BUDGET_BYTES, with the SQL join; its later
+    batches from its probe index. Both paths must give bit-identical
+    answers on both surfaces, for every kind, on an exact store and on
+    realistic cm, dcm and ecm stores (ecm's merge is lossy). Each batch
+    mixes additive and merge kinds, has a region whose two rects share
+    floor-level cells (a merge kind must see such a cell once), and a
+    region that matches no cell."""
     from spatialsketch_spark.geo.build import SketchStore
     from spatialsketch_spark.geo.query import QuerySpec, SpatialSketchEngine
-    cfg = SketchConfig.exact_mode(item_domain=ITEM_DOMAIN, n=N)
-    ev = derive_geo_events(spark, SF_ORACLE, N)
-    st = SketchStore.build(spark, ev, cfg, "exact", 4)
-    eng = SpatialSketchEngine(st)
-    qs = [QuerySpec(i, [(0, 0, 2047, 2047)], "count") for i in range(4)]
-    p = formatted(eng.query(qs))
-    assert "Coalesce" in p, "small-store probe scan must be task-sized"
-    nt = eng._scan_tasks()
-    cells = st.manifest["metrics"]["sketch_cells"]
-    assert nt == -(-cells // eng.CELLS_PER_SCAN_TASK)
-    # bucketed fallback keeps its partitioning: force the shuffle path
-    orig = SpatialSketchEngine.BROADCAST_COVER_ROWS
-    SpatialSketchEngine.BROADCAST_COVER_ROWS = 0
-    try:
-        p2 = formatted(eng._matched_pids(qs)[0])
-        assert "Coalesce" not in p2.split("InMemoryTableScan")[0], p2
-    finally:
-        SpatialSketchEngine.BROADCAST_COVER_ROWS = orig
+    ev = derive_geo_events(spark, SF_ORACLE, N) \
+        .where(F.col("ts") % 7 == 0).cache()
+    # min_level 4: floor cells are 16x16 blocks; split the busiest one
+    blocks = {(r["bx"] * 16, r["by"] * 16): r["count"] for r in ev.groupBy(
+        F.expr("x div 16").alias("bx"), F.expr("y div 16").alias("by"))
+        .count().collect()}
+    x0, y0 = min(blocks, key=lambda b: (-blocks[b], b))
+    empty = next((bx, by) for bx in range(0, N, 16) for by in range(0, N, 16)
+                 if (bx, by) not in blocks)
+    regions = [[(0, 0, 2047, 2047)], [(100, 700, 1900, 3001)],
+               [(x0, y0, x0 + 5, y0 + 15), (x0 + 9, y0, x0 + 15, y0 + 15)],
+               [(empty[0], empty[1], empty[0] + 15, empty[1] + 15)]]
+    exact = SketchConfig.exact_mode(item_domain=ITEM_DOMAIN, n=N)
+    real = SketchConfig.realistic(n=N, eps=0.1, delta=0.05,
+                                  item_domain=ITEM_DOMAIN)
+    for kind, kinds in PARITY_KINDS.items():
+        store = SketchStore.build(spark, ev, exact if kind == "exact"
+                                  else real, kind, 4)
+        eng = SpatialSketchEngine(store)
+        qs = [QuerySpec(len(regions) * i + j, r, k, item=it, item_end=ie,
+                        t0=t0)
+              for i, (k, it, ie, t0) in enumerate(kinds)
+              for j, r in enumerate(regions)]
+        with monkeypatch.context() as m:
+            m.setattr(SpatialSketchEngine, "INDEX_BUDGET_BYTES", 0)
+            sql = eng.query_values(qs)
+            sql_df = {r["qid"]: r["est"] for r in eng.query(qs).collect()}
+        assert store._index is None, kind
+        idx = eng.query_values(qs)
+        assert store._index is not None, kind
+        idx_df = {r["qid"]: r["est"] for r in eng.query(qs).collect()}
+        assert sql == sql_df == idx == idx_df, kind
+        assert len(idx) == len(qs)
+        # the empty region answers 0; the shared cell is not empty
+        assert all(idx[q.qid] == 0 for q in qs if q.ranges == regions[3])
+        assert all(idx[q.qid] > 0 for q in qs
+                   if q.ranges == regions[2] and q.qkind == "l2")
+    ev.unpersist()
 
 
 def test_query_values_equals_query(spark):
@@ -129,7 +166,7 @@ def test_query_values_equals_query(spark):
     # branches, one query_values call
     mixed = [q for q in qs if q.ranges == [rects[2]]
              and q.qkind in ("count", "freq", "l2", "distinct")]
-    assert eng._matched_pids(mixed)[1] == [0] * 4
+    assert len(eng._plan(mixed)[0]) == 1
     assert eng.query_values(mixed) == {q.qid: want[q.qid] for q in mixed}
     # kind-guard parity: a bad dispatch must raise, not return garbage
     from spatialsketch_spark.config import SketchConfig
