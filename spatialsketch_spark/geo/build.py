@@ -352,6 +352,12 @@ def _pack_block(n: int):
     return fn
 
 
+def _index_keys_fit(cfg: SketchConfig) -> bool:
+    """Whether every probe-index key ``grid_key·n² + cell`` fits an
+    int64: grid_key < levels² and cell < n², so n up to 2^26."""
+    return cfg.levels ** 2 * cfg.n ** 2 <= 2 ** 63
+
+
 def _block_arrays(message: bytes, large: bool = False) -> tuple:
     """One probe-index block, an Arrow record batch message of
     INDEX_SCHEMA (``large``: written with large binary offsets) -> its
@@ -437,11 +443,13 @@ class SketchStore:
         return self._bucketed
 
     def serving_index(self, budget_bytes: int):
-        """Count one served batch and pick its path: -> the probe index
-        to answer it from, or None for the SQL join. A store's first
-        batch, and every batch of a store whose payload bytes exceed
-        ``budget_bytes`` (or are not in its manifest), takes the join,
-        so a store queried once never packs an index.
+        """Count one served batch of additive kinds and pick its path:
+        -> the probe index to answer it from, or None for the SQL join.
+        A store's first such batch, and every batch of a store whose
+        payload bytes exceed ``budget_bytes`` (or are not in its
+        manifest), takes the join, so a store queried once never packs
+        an index. So does every batch of a store whose probe keys would
+        overflow int64 (``_index_keys_fit``).
 
         The index is this store's table as a cached RDD with one block
         per table partition (``_pack_block``), packed by the first job
@@ -456,12 +464,17 @@ class SketchStore:
         index and never see another snapshot's."""
         self._batches += 1
         nbytes = self.manifest.get("metrics", {}).get("payload_bytes")
-        if self._batches == 1 or nbytes is None or nbytes > budget_bytes:
+        if (self._batches == 1 or nbytes is None or nbytes > budget_bytes
+                or not _index_keys_fit(self.cfg)):
             return None
         if self._index is None:
             packed = self.df.select("grid_key", "cell", "val_sum",
                                     "payload") \
                 .mapInArrow(_pack_block(self.cfg.n), schema=INDEX_SCHEMA)
+            # toArrowBatchRdd is private[sql] in Spark 4.1, reached over
+            # py4j (so not on Spark Connect): a release that drops or
+            # changes it fails
+            # tests/test_geo_pipeline.py::test_probe_index_blocks
             jrdd = packed._jdf.toArrowBatchRdd().cache()
             large = self.spark.conf.get(
                 "spark.sql.execution.arrow.useLargeVarTypes",

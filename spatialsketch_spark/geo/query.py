@@ -10,14 +10,13 @@ cell, coverage). Per-query metadata never enters a plan; it travels in
 task closures (``_ClassQueries``). The cover meets the store's cells on
 one of two paths, with the same estimators and bit-identical answers:
 
-  index path: the store's probe index (``SketchStore.serving_index``), a
-            cached RDD with one block per table partition: keys
-            ``grid_key·N² + cell`` sorted, their val_sum and payload
-            bytes. ONE mapPartitions job: each task probes its block with
-            np.searchsorted, answers additive kinds into (qid, partial)
-            sums (count entries never decode a payload) and returns each
-            merge-kind pid's matched payloads once per cell; the driver
-            merges each such pid once.
+  index path (batches of additive kinds only): the store's probe index
+            (``SketchStore.serving_index``), a cached RDD with one block
+            per table partition: keys ``grid_key·N² + cell`` sorted,
+            their val_sum and payload bytes. ONE mapPartitions job: each
+            task probes its block with np.searchsorted and returns
+            (qid, partial) sums (count entries never decode a payload);
+            the driver adds them up.
   SQL path: the cover as a DataFrame joined to the sketch table pruned
             to the cover's grid keys (broadcast, or a shuffle against the
             bucketed cache past BROADCAST_COVER_ROWS) -> ONE matched
@@ -26,19 +25,24 @@ one of two paths, with the same estimators and bit-identical answers:
             repartition(pid) -> mapInPandas merges each rect-set's
             de-duplicated cell states once.
 
-Path rule, with no option: a store's first batch takes the SQL path, and
-so does every batch of a store whose manifest ``payload_bytes`` exceed
-INDEX_BUDGET_BYTES (or that has none); every other batch takes the index.
-A store queried once never packs an index, and a large store keeps the
-join. Tests force the SQL path by setting INDEX_BUDGET_BYTES to 0 and the
-index path by serving one batch first.
+Path rule, with no option. A batch with any merge kind takes the SQL
+path, which merges in tasks: on the index path every matched payload
+would reach the driver. Measured on perfbench's ``serve`` events (an
+82 MB CM store asked count + l2, a 130 MB FM store asked count +
+distinct, 600 queries a batch; 4-core VM, local[2]), the index was
+2.3-2.4x faster, but the driver's RSS peaked 35-39 MB higher over ten
+batches. Of the other batches, a store's first takes the SQL path, and
+so does every one of a store whose manifest ``payload_bytes`` exceed
+INDEX_BUDGET_BYTES (or that has none); the rest take the index. A store
+queried once never packs an index, and a large store keeps the join.
+The index was timed faster on stores up to 391 MB; the budget stays
+below that. Tests force the SQL path by setting INDEX_BUDGET_BYTES to
+0, and the index path by serving one additive batch first.
 
 ``query()`` and ``query_values()`` take the same path: on the index path
-``query()`` wraps the driver's answers in a local DataFrame; on the SQL
+``query()`` wraps the driver's sums in a local DataFrame; on the SQL
 path it sums the partials per qid as a DataFrame, and ``query_values()``
-collects them and folds on the driver. Merge kinds merge each pid's
-cells in (grid_key, cell) order on both paths, so the lossy ECM/Elastic
-merges answer alike.
+collects them and folds on the driver. No path collects a payload.
 
 Query kinds and their reference semantics:
   count     sum over cells of trunc(coverage * cell value sum), from the
@@ -119,7 +123,6 @@ class _ClassQueries:
     def __init__(self, by_pid: list):
         self.by_pid = by_pid
         self.pids = [p for p, qs in enumerate(by_pid) if qs]
-        self.has = np.array([bool(qs) for qs in by_pid], dtype=bool)
         self.cnt = np.array([len(qs) for qs in by_pid], dtype=np.int64)
         self.start = np.cumsum(self.cnt) - self.cnt
         flat = [q for qs in by_pid for q in qs]
@@ -157,16 +160,6 @@ class _ClassQueries:
         uq, inv = np.unique(self.qids[qpos], return_inverse=True)
         return uq, int_group_sum(inv, contrib, len(uq))
 
-    def merged(self, kernel, pid: int, payloads: list) -> list:
-        """-> [(qid, est)] for pid's queries over its cells' states,
-        deserialized once. Merge kinds ignore coverage, so each cell
-        enters once; callers pass the payloads in (grid_key, cell) order,
-        which keeps the lossy ECM/Elastic merges path-independent."""
-        states = [kernel.deserialize(b) for b in payloads]
-        return [(q.qid, kernel.merged_est(states, q.qkind, q.item,
-                                          q.item_end, q.t0))
-                for q in self.by_pid[pid]]
-
 
 def _additive_fn(cfg, kind: str, add: _ClassQueries):
     """SQL path, mapInPandas over matched rows (pid, coverage, val_sum,
@@ -196,7 +189,8 @@ def _additive_fn(cfg, kind: str, add: _ClassQueries):
 
 def _merge_fn(cfg, kind: str, mrg: _ClassQueries):
     """SQL path, mapInPandas after repartition(pid): all of a rect-set's
-    matched cells share a partition and are merged once per pid."""
+    matched cells share a partition; each pid's states are deserialized
+    once and answer every merge query of that pid."""
 
     def fn(batches):
         kernel = make_kernel(kind, cfg)
@@ -204,16 +198,21 @@ def _merge_fn(cfg, kind: str, mrg: _ClassQueries):
         if not chunks:
             return
         allpdf = pd.concat(chunks, ignore_index=True)
-        # two rects of one rect-set can cover the same floor-level cell;
-        # every store holds one row per (grid_key, cell) (a snapshot
-        # with deltas merges on read), so this drops cover duplicates
-        allpdf = allpdf.drop_duplicates(subset=["pid", "grid_key", "cell"]) \
-            .sort_values(["grid_key", "cell"])
-        out = [a for pid, grp in allpdf.groupby("pid", sort=False)
-               for a in mrg.merged(kernel, int(pid), list(grp["payload"]))]
-        yield pd.DataFrame({
-            "qid": pd.array([q for q, _ in out], dtype="int64"),
-            "est": pd.array([e for _, e in out], dtype="int64")})
+        # merge-kind semantics ignore coverage (states are merged, not
+        # scaled), so two rects of one rect-set hitting the same
+        # floor-level cell must contribute that cell's state ONCE. Every
+        # store holds one row per (grid_key, cell) (a snapshot with
+        # deltas merges on read), so this drops cover duplicates only.
+        allpdf = allpdf.drop_duplicates(subset=["pid", "grid_key", "cell"])
+        out_qid, out_est = [], []
+        for pid, grp in allpdf.groupby("pid", sort=False):
+            states = [kernel.deserialize(b) for b in grp["payload"]]
+            for q in mrg.by_pid[int(pid)]:
+                out_qid.append(q.qid)
+                out_est.append(kernel.merged_est(
+                    states, q.qkind, q.item, q.item_end, q.t0))
+        yield pd.DataFrame({"qid": pd.array(out_qid, dtype="int64"),
+                            "est": pd.array(out_est, dtype="int64")})
 
     return fn
 
@@ -230,9 +229,12 @@ class SpatialSketchEngine:
     BROADCAST_COVER_ROWS = 3_000_000
 
     # manifest payload bytes up to which a store answers its second and
-    # later batches from its probe index. An index batch streams every
-    # block (~1.6 ms/MB measured) where a SQL batch pays a ~600 ms plan
-    # and job floor, so the two cross near 300 MB.
+    # later additive batches from its probe index. An index batch streams
+    # every block (~1 ms/MB) where a SQL batch pays a ~0.8 s plan and job
+    # floor. Timed with 600 count + freq queries a batch on CM stores of
+    # 155, 258 and 391 MB (4-core VM, local[2]): index 345, 458, 579 ms
+    # against SQL 903, 828, 789 ms. Where they cross, past 391 MB, is
+    # untimed; the budget stays below the largest store timed.
     INDEX_BUDGET_BYTES = 300_000_000
 
     def _cover_table(self, pid_ranges: list) -> pa.Table:
@@ -300,14 +302,20 @@ class SpatialSketchEngine:
         return (pid_ranges, _ClassQueries(add) if any(add) else None,
                 _ClassQueries(mrg) if any(mrg) else None)
 
+    def _index(self, add, mrg):
+        """The probe index to answer a batch from, or None for the SQL
+        path (the rule is in the module docstring): only a batch of
+        additive kinds asks the store, which counts it."""
+        if add is None or mrg is not None:
+            return None
+        return self.store.serving_index(self.INDEX_BUDGET_BYTES)
+
     def _index_values(self, index, queries: list[QuerySpec], pid_ranges,
-                      add, mrg) -> dict:
+                      add) -> dict:
         """Index path -> {qid: est}: ONE mapPartitions job over the
         store's probe index. Each task probes its key-sorted block for
         the cover's keys with ``np.searchsorted`` and returns its
-        additive (qids, partials) and, per merge-kind pid, the matched
-        cells' (key, payload) once each; the driver sums the partials
-        and merges each merge pid once."""
+        (qids, partials); the driver sums them."""
         cover = self._cover_table(pid_ranges)
         cfg, kind = self.store.cfg, self.store.kind
         ckey = cover["grid_key"].to_numpy().astype(np.int64) \
@@ -322,23 +330,14 @@ class SpatialSketchEngine:
                     continue
                 pos = np.minimum(np.searchsorted(key, ckey), len(key) - 1)
                 hit = key[pos] == ckey
-                rows, pids = pos[hit], cpid[hit]
-
-                def payloads(r):
-                    return [data[lo[j]:hi[j]].tobytes() for j in r.tolist()]
-                if add is not None:
-                    yield ("add", *add.additive(
-                        kernel, pids, ccov[hit], val_sum[rows],
-                        lambda u: payloads(rows[u])))
-                if mrg is not None:
-                    # a pid's rects can share a floor-level cell
-                    sel = mrg.has[pids]
-                    pr = np.unique(pids[sel] * len(key) + rows[sel])
-                    yield ("merge", pr // len(key), key[pr % len(key)],
-                           payloads(pr % len(key)))
+                rows = pos[hit]
+                yield add.additive(
+                    kernel, cpid[hit], ccov[hit], val_sum[rows],
+                    lambda u: [data[lo[j]:hi[j]].tobytes()
+                               for j in rows[u].tolist()])
 
         try:
-            recs = index.mapPartitions(probe).collect()
+            parts = index.mapPartitions(probe).collect()
         except Py4JJavaError as e:
             # a task's Python error (a kernel guard's ValueError) surfaces
             # as a PythonException, as it does on the SQL path
@@ -352,19 +351,9 @@ class SpatialSketchEngine:
                     + cause.getMessage()) from None
             raise
         out = {q.qid: 0 for q in queries}
-        cells: dict[int, dict] = {}
-        for rec in recs:
-            if rec[0] == "add":
-                for q, v in zip(rec[1].tolist(), rec[2].tolist()):
-                    out[q] += v
-            else:
-                for p, k, b in zip(rec[1].tolist(), rec[2].tolist(), rec[3]):
-                    cells.setdefault(p, {})[k] = b
-        kernel = make_kernel(kind, cfg)
-        for p, by_key in cells.items():
-            for q, est in mrg.merged(kernel, p,
-                                     [by_key[k] for k in sorted(by_key)]):
-                out[q] = est
+        for uq, part in parts:
+            for q, v in zip(uq.tolist(), part.tolist()):
+                out[q] += v
         return out
 
     def _matched(self, cover: pa.Table) -> DataFrame:
@@ -442,15 +431,15 @@ class SpatialSketchEngine:
         queries that matched no cell. Raises ValueError for a query kind
         the store's kernel cannot answer."""
         spark = self.store.spark
-        plan = self._plan(queries)
-        index = self.store.serving_index(self.INDEX_BUDGET_BYTES)
+        pid_ranges, add, mrg = self._plan(queries)
+        index = self._index(add, mrg)
         if index is not None:
-            vals = self._index_values(index, queries, *plan)
+            vals = self._index_values(index, queries, pid_ranges, add)
             return spark.createDataFrame(pa.table({
                 "qid": pa.array(list(vals), pa.int64()),
                 "est": pa.array(list(vals.values()), pa.int64())}),
                 schema=RESULT_SCHEMA)
-        res = self._sql_partials(*plan).groupBy("qid").agg(
+        res = self._sql_partials(pid_ranges, add, mrg).groupBy("qid").agg(
             F.sum("est").cast("bigint").alias("est"))
         all_qids = spark.createDataFrame(
             [(q.qid,) for q in queries], schema="qid BIGINT")
@@ -473,14 +462,12 @@ class SpatialSketchEngine:
         Scale posture: the driver fold is O(|queries|) — exactly the
         size of the answer the caller receives either way (the
         reference's query API returns the same, SpatialSketch.cpp:
-        837-855). The only per-cell rows a batch collects are the
-        matched payloads of merge-kind rect-sets on the index path,
-        which the SQL path ships to one task instead."""
-        plan = self._plan(queries)
-        index = self.store.serving_index(self.INDEX_BUDGET_BYTES)
+        837-855); no payload or per-cell row is ever collected."""
+        pid_ranges, add, mrg = self._plan(queries)
+        index = self._index(add, mrg)
         if index is not None:
-            return self._index_values(index, queries, *plan)
+            return self._index_values(index, queries, pid_ranges, add)
         out = {q.qid: 0 for q in queries}
-        for r in self._sql_partials(*plan).collect():
+        for r in self._sql_partials(pid_ranges, add, mrg).collect():
             out[int(r["qid"])] += int(r["est"])
         return out

@@ -551,22 +551,24 @@ def test_snapshot_rollback(spark, events, tmp_path):
 def test_each_snapshot_serves_its_own_index(spark, events, tmp_path,
                                             on_disk):
     """Every store object is one snapshot with its own probe index: a
-    store queried once never packs one; a store's second batch is
-    answered from its own index, equal to its first (SQL) batch; the
-    parent of merge_events still answers its old snapshot; and on a
-    path-backed store compact() and rollback() start fresh indexes."""
+    store queried once never packs one, nor does a batch with a merge
+    kind; a store's second additive batch is answered from its own
+    index, equal to its first (SQL) batch; the parent of merge_events
+    still answers its old snapshot; and on a path-backed store compact()
+    and rollback() start fresh indexes."""
     cfg = SketchConfig.exact_mode(item_domain=ITEM_DOMAIN, n=N)
     a = events.where(F.col("ts") % 3 != 0)
     b = events.where(F.col("ts") % 3 == 0)
     qs = [QuerySpec(0, [(0, 0, 40, 33)], "count"),
           QuerySpec(1, [(0, 0, 40, 33)], "freq", item=3),
-          QuerySpec(2, [(5, 9, 63, 50), (0, 0, 4, 4)], "l2"),
-          QuerySpec(3, [(0, 0, 63, 63)], "distinct")]
+          QuerySpec(2, [(5, 9, 63, 50), (0, 0, 4, 4)], "count")]
+    merge = [QuerySpec(3, [(0, 0, 63, 63)], "distinct")]
 
     def answers(store, want):
         eng = SpatialSketchEngine(store)
         first = eng.query_values(qs)
-        assert store._index is None          # one batch: no pack
+        assert eng.query_values(merge)[3] > 0
+        assert store._index is None          # one additive batch: no pack
         assert eng.query_values(qs) == first == want
         assert store._index is not None
         return store._index
@@ -591,6 +593,39 @@ def test_each_snapshot_serves_its_own_index(spark, events, tmp_path,
         assert SpatialSketchEngine(s2).query_values(qs) == want_ab
         assert answers(SketchStore.load(spark, p, cfg, "exact"),
                        want_a) is not s3._index
+
+
+def test_probe_index_blocks(spark, events):
+    """The probe index holds the table: per block, keys grid_key·N² +
+    cell ascending, each with its val_sum and payload bytes. It is read
+    through Dataset.toArrowBatchRdd, a Spark-internal method: a Spark
+    release that drops or changes it fails here."""
+    cfg = SketchConfig.realistic(n=N, item_domain=ITEM_DOMAIN)
+    store = SketchStore.build(spark, events, cfg, "cm", MIN_LEVEL)
+    assert store.serving_index(10 ** 9) is None      # the first batch
+    got = {}
+    for key, val_sum, lo, hi, data in store.serving_index(10 ** 9).collect():
+        assert (np.diff(key) > 0).all()
+        for k, v, i, j in zip(key.tolist(), val_sum.tolist(), lo.tolist(),
+                              hi.tolist()):
+            got[k] = (v, data[i:j].tobytes())
+    assert got == {r["grid_key"] * N * N + r["cell"]:
+                   (r["val_sum"], bytes(r["payload"]))
+                   for r in store.df.collect()}
+
+
+def test_index_keys_past_int64_stay_on_sql_path():
+    """Probe keys grid_key·n² + cell fit an int64 up to n = 2^26; a
+    larger grid's store never packs an index."""
+    from types import SimpleNamespace
+    from spatialsketch_spark.geo.build import _index_keys_fit
+    assert _index_keys_fit(SketchConfig(n=2 ** 26))
+    assert not _index_keys_fit(SketchConfig(n=2 ** 27))
+    store = SketchStore(None, SimpleNamespace(),
+                        SketchConfig(n=2 ** 27), "cm", 0,
+                        {"metrics": {"payload_bytes": 1}})
+    assert store.serving_index(10 ** 9) is None
+    assert store.serving_index(10 ** 9) is None
 
 
 def test_combine_fingerprints_empty_side():

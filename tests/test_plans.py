@@ -91,16 +91,17 @@ PARITY_KINDS = {
 
 
 def test_index_path_equals_sql_path(spark, monkeypatch):
-    """A store answers its first batch, and every batch once its payload
-    bytes exceed INDEX_BUDGET_BYTES, with the SQL join; its later
-    batches from its probe index. Both paths must give bit-identical
-    answers on both surfaces, for every kind, on an exact store and on
-    realistic cm, dcm and ecm stores (ecm's merge is lossy). Each batch
-    mixes additive and merge kinds, has a region whose two rects share
-    floor-level cells (a merge kind must see such a cell once), and a
-    region that matches no cell."""
+    """A store answers its first additive batch, and every batch once
+    its payload bytes exceed INDEX_BUDGET_BYTES, with the SQL join; its
+    later additive batches from its probe index. Both paths must give
+    bit-identical answers on both surfaces, for every additive kind, on
+    an exact store and on realistic cm, dcm and ecm stores, including a
+    region whose two rects share floor-level cells and a region that
+    matches no cell. A batch mixing in a merge kind stays on the SQL
+    path, and its additive answers equal the index's."""
     from spatialsketch_spark.geo.build import SketchStore
-    from spatialsketch_spark.geo.query import QuerySpec, SpatialSketchEngine
+    from spatialsketch_spark.geo.query import (ADDITIVE, QuerySpec,
+                                               SpatialSketchEngine)
     ev = derive_geo_events(spark, SF_ORACLE, N) \
         .where(F.col("ts") % 7 == 0).cache()
     # min_level 4: floor cells are 16x16 blocks; split the busiest one
@@ -116,6 +117,10 @@ def test_index_path_equals_sql_path(spark, monkeypatch):
     exact = SketchConfig.exact_mode(item_domain=ITEM_DOMAIN, n=N)
     real = SketchConfig.realistic(n=N, eps=0.1, delta=0.05,
                                   item_domain=ITEM_DOMAIN)
+
+    def no_index(*a):
+        raise AssertionError("a batch with a merge kind took the index")
+
     for kind, kinds in PARITY_KINDS.items():
         store = SketchStore.build(spark, ev, exact if kind == "exact"
                                   else real, kind, 4)
@@ -124,20 +129,29 @@ def test_index_path_equals_sql_path(spark, monkeypatch):
                         t0=t0)
               for i, (k, it, ie, t0) in enumerate(kinds)
               for j, r in enumerate(regions)]
+        add = [q for q in qs if q.qkind in ADDITIVE]
         with monkeypatch.context() as m:
             m.setattr(SpatialSketchEngine, "INDEX_BUDGET_BYTES", 0)
-            sql = eng.query_values(qs)
-            sql_df = {r["qid"]: r["est"] for r in eng.query(qs).collect()}
+            sql = eng.query_values(add)
+            sql_df = {r["qid"]: r["est"] for r in eng.query(add).collect()}
         assert store._index is None, kind
-        idx = eng.query_values(qs)
+        idx = eng.query_values(add)
         assert store._index is not None, kind
-        idx_df = {r["qid"]: r["est"] for r in eng.query(qs).collect()}
+        idx_df = {r["qid"]: r["est"] for r in eng.query(add).collect()}
         assert sql == sql_df == idx == idx_df, kind
-        assert len(idx) == len(qs)
-        # the empty region answers 0; the shared cell is not empty
-        assert all(idx[q.qid] == 0 for q in qs if q.ranges == regions[3])
-        assert all(idx[q.qid] > 0 for q in qs
-                   if q.ranges == regions[2] and q.qkind == "l2")
+        assert len(idx) == len(add)
+        # the empty region answers 0; the shared block is not empty
+        assert all(idx[q.qid] == 0 for q in add if q.ranges == regions[3])
+        assert all(idx[q.qid] > 0 for q in add
+                   if q.ranges == regions[2] and q.qkind == "count")
+        if len(add) < len(qs):
+            with monkeypatch.context() as m:
+                m.setattr(SpatialSketchEngine, "_index_values", no_index)
+                mixed = eng.query_values(qs)
+            assert {q.qid: mixed[q.qid] for q in add} == idx, kind
+            # the region of two rects sharing floor cells merges them
+            assert all(mixed[q.qid] > 0 for q in qs
+                       if q.ranges == regions[2] and q.qkind == "l2")
     ev.unpersist()
 
 
