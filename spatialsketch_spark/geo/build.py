@@ -47,6 +47,7 @@ import uuid
 
 import numpy as np
 import pyarrow as pa
+from pyspark import SparkFiles
 from pyspark.rdd import RDD
 from pyspark.serializers import NoOpSerializer
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -160,10 +161,14 @@ def _sketch_batches(grid_key, cells, offsets, data, n_events, val_sum,
         lo = hi
 
 
-def _binary_buffers(arr: pa.BinaryArray):
-    """(int64 offsets, uint8 data) numpy views of a binary array."""
+def _binary_buffers(arr: pa.Array):
+    """(int64 offsets, uint8 data) numpy views of a binary or large
+    binary array (Spark sends large ones under
+    ``spark.sql.execution.arrow.useLargeVarTypes``)."""
     _, off, data = arr.buffers()
-    return (np.frombuffer(off, np.int32, len(arr) + 1, arr.offset * 4)
+    width = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    return (np.frombuffer(off, width, len(arr) + 1,
+                          arr.offset * np.dtype(width).itemsize)
             .astype(np.int64), np.frombuffer(data, np.uint8))
 
 
@@ -212,9 +217,12 @@ def _merge_partitions(cfg: SketchConfig, kind: str):
     def fn(batches):
         # Spark matches output columns by position: pass-through batches
         # must be in SKETCH_SCHEMA order (a parquet-read table puts its
-        # grid_key partition column last)
+        # grid_key partition column last), and in its types (under
+        # useLargeVarTypes the payload arrives as large_binary)
         batches = [b.select(ARROW_SCHEMA.names) for b in batches
                    if b.num_rows]
+        batches = [b if b.schema.field("payload").type == pa.binary()
+                   else b.cast(ARROW_SCHEMA) for b in batches]
         if not batches:
             return
         gks, cells, nevs, vss = _int64_columns(
@@ -358,15 +366,60 @@ def _index_keys_fit(cfg: SketchConfig) -> bool:
     return cfg.levels ** 2 * cfg.n ** 2 <= 2 ** 63
 
 
-def _block_arrays(message: bytes, large: bool = False) -> tuple:
+INDEX_DIR = "ssk-index"
+# the text of the error a task raises when its block file is not on its
+# executor; the engine matches it to fall back to the SQL join
+BLOCK_MISSING = "probe-index block file missing"
+
+
+class IndexBlockMissing(FileNotFoundError):
+    """A probe-index block file is not on the executor reading it."""
+
+
+def _block_arrays(buf: pa.Buffer, large: bool = False) -> tuple:
     """One probe-index block, an Arrow record batch message of
     INDEX_SCHEMA (``large``: written with large binary offsets) -> its
     ``(key, val_sum, lo, hi, data)`` numpy views, without a copy."""
     binary = pa.large_binary() if large else pa.binary()
-    b = pa.ipc.read_record_batch(pa.py_buffer(message), pa.schema(
+    b = pa.ipc.read_record_batch(buf, pa.schema(
         [(c, binary) for c, _ in INDEX_DTYPES]))
     return tuple(np.frombuffer(b.column(c)[0].as_buffer(), dt)
                  for c, dt in INDEX_DTYPES)
+
+
+def _load_block(path: str, large: bool = False) -> tuple:
+    """A block file written by ``_block_writer`` -> its numpy views over
+    the memory-mapped file (no copy; the mapping lives as long as the
+    views). Raises IndexBlockMissing when this executor lacks the
+    file."""
+    try:
+        with pa.memory_map(path) as f:
+            buf = f.read_buffer()
+    except FileNotFoundError:
+        raise IndexBlockMissing(f"{BLOCK_MISSING}: {path}") from None
+    return _block_arrays(buf, large)
+
+
+def _block_writer(index_id: str):
+    """The mapPartitionsWithIndex function that writes a partition's
+    probe-index block (one Arrow record batch message; a partition packs
+    into at most one) to ``<SparkFiles root>/ssk-index/<index_id>-<split>
+    .arrow`` on the executor running it, and yields that path. Spark
+    deletes the root directory when the session stops."""
+
+    def fn(split, messages):
+        d = os.path.join(SparkFiles.getRootDirectory(), INDEX_DIR)
+        os.makedirs(d, exist_ok=True)
+        for message in messages:
+            path = os.path.join(d, f"{index_id}-{split}.arrow")
+            # a retried task never leaves a reader a partly written file
+            tmp = f"{path}.{uuid.uuid4().hex}.tmp"
+            with open(tmp, "wb") as f:
+                f.write(message)
+            os.replace(tmp, path)
+            yield path
+
+    return fn
 
 
 def _publish_json(dest: str, obj: dict, exclusive: bool = False) -> None:
@@ -425,7 +478,7 @@ class SketchStore:
         self.manifest = manifest or {}
         self.path = path
         self._bucketed = None
-        self._index = None
+        self._index = self._index_paths = None
         self._batches = 0
 
     def bucketed_df(self) -> DataFrame:
@@ -451,17 +504,22 @@ class SketchStore:
         an index. So does every batch of a store whose probe keys would
         overflow int64 (``_index_keys_fit``).
 
-        The index is this store's table as a cached RDD with one block
-        per table partition (``_pack_block``), packed by the first job
-        that reads it; each element reads as ``(key, val_sum, lo, hi,
-        data)`` numpy arrays. The JVM caches each block as one Arrow
-        record batch message: Dataset.toArrowBatchRdd hands the packed
-        rows to Python as Arrow buffers, where ``DataFrame.rdd`` would
-        pickle each ~40 MB block a byte at a time (~2 s more per pack,
-        measured), and a batch reads a cached block without a copy.
-        Every snapshot is its own store object, so ``merge_events``,
-        ``rollback``, ``compact`` and ``load`` each start without an
-        index and never see another snapshot's."""
+        The index is this store's table packed into one block per table
+        partition (``_pack_block``), packed by the first job that reads
+        it. Each block is written once, as one Arrow record batch
+        message, to a file on the executor that packed it
+        (``_block_writer``); Spark caches only the RDD of file paths.
+        Each element of the returned RDD reads as ``(key, val_sum, lo,
+        hi, data)`` numpy views over its memory-mapped file, so a batch
+        moves no block bytes from the JVM to Python. The packed rows
+        reach Python as Arrow buffers through Dataset.toArrowBatchRdd,
+        where ``DataFrame.rdd`` would pickle each ~40 MB block a byte at
+        a time (~2 s more per pack, measured). A task whose executor
+        lacks its block file raises IndexBlockMissing; the engine then
+        drops the index (``_index = None``) and the next batch packs a
+        new one. Every snapshot is its own store object, so
+        ``merge_events``, ``rollback``, ``compact`` and ``load`` each
+        start without an index and never see another snapshot's."""
         self._batches += 1
         nbytes = self.manifest.get("metrics", {}).get("payload_bytes")
         if (self._batches == 1 or nbytes is None or nbytes > budget_bytes
@@ -475,14 +533,23 @@ class SketchStore:
             # py4j (so not on Spark Connect): a release that drops or
             # changes it fails
             # tests/test_geo_pipeline.py::test_probe_index_blocks
-            jrdd = packed._jdf.toArrowBatchRdd().cache()
+            blocks = RDD(packed._jdf.toArrowBatchRdd().toJavaRDD(),
+                         self.spark.sparkContext, NoOpSerializer())
+            self._index_paths = blocks.mapPartitionsWithIndex(
+                _block_writer(uuid.uuid4().hex)).cache()
             large = self.spark.conf.get(
                 "spark.sql.execution.arrow.useLargeVarTypes",
                 "false").lower() == "true"
-            self._index = RDD(jrdd.toJavaRDD(), self.spark.sparkContext,
-                              NoOpSerializer()) \
-                .map(functools.partial(_block_arrays, large=large))
+            self._index = self._index_paths.map(
+                functools.partial(_load_block, large=large))
         return self._index
+
+    def drop_index(self) -> None:
+        """Forget the probe index (its block files stay until the
+        session stops); the next additive batch packs a new one."""
+        if self._index is not None:
+            self._index_paths.unpersist()
+        self._index = self._index_paths = None
 
     # -- construction ------------------------------------------------
     @classmethod

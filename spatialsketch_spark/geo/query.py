@@ -11,12 +11,16 @@ task closures (``_ClassQueries``). The cover meets the store's cells on
 one of two paths, with the same estimators and bit-identical answers:
 
   index path (batches of additive kinds only): the store's probe index
-            (``SketchStore.serving_index``), a cached RDD with one block
-            per table partition: keys ``grid_key·N² + cell`` sorted,
-            their val_sum and payload bytes. ONE mapPartitions job: each
-            task probes its block with np.searchsorted and returns
-            (qid, partial) sums (count entries never decode a payload);
-            the driver adds them up.
+            (``SketchStore.serving_index``), one block per table
+            partition: keys ``grid_key·N² + cell`` sorted, their val_sum
+            and payload bytes, written once to a file on the executor
+            that packed it; Spark caches only the paths. ONE
+            mapPartitions job: each task memory-maps its block, probes
+            it with np.searchsorted and returns (qid, partial) sums
+            (count entries never decode a payload); the driver adds them
+            up. A task whose executor lacks its block file fails the job
+            with a marked error: the batch is answered on the SQL path
+            and the next additive batch packs a new index.
   SQL path: the cover as a DataFrame joined to the sketch table pruned
             to the cover's grid keys (broadcast, or a shuffle against the
             bucketed cache past BROADCAST_COVER_ROWS) -> ONE matched
@@ -87,7 +91,7 @@ from pyspark.sql import DataFrame, functions as F
 from ..core.dyadic import cover_2d_np, effective_cover
 from ..core.kernels import int_group_sum, make_kernel
 from ..core.partitioner import Shape, shape_to_ranges
-from .build import SketchStore
+from .build import BLOCK_MISSING, SketchStore
 
 COVER_SCHEMA = "pid BIGINT, grid_key INT, cell BIGINT, coverage DOUBLE"
 RESULT_SCHEMA = "qid BIGINT, est BIGINT"
@@ -229,12 +233,14 @@ class SpatialSketchEngine:
     BROADCAST_COVER_ROWS = 3_000_000
 
     # manifest payload bytes up to which a store answers its second and
-    # later additive batches from its probe index. An index batch streams
-    # every block (~1 ms/MB) where a SQL batch pays a ~0.8 s plan and job
-    # floor. Timed with 600 count + freq queries a batch on CM stores of
-    # 155, 258 and 391 MB (4-core VM, local[2]): index 345, 458, 579 ms
-    # against SQL 903, 828, 789 ms. Where they cross, past 391 MB, is
-    # untimed; the budget stays below the largest store timed.
+    # later additive batches from its probe index. The budget bounds the
+    # one-off pack (2.3, 4.1 and 5.6 s for CM stores of 155, 258 and
+    # 391 MB) and the executors' local disk the block files take (a
+    # second copy of the table). Timed when each batch still streamed
+    # every block from the JVM, with 600 count + freq queries a batch on
+    # those stores (4-core VM, local[2]): index 345, 458, 579 ms against
+    # SQL 903, 828, 789 ms. Larger stores are untimed; the budget stays
+    # below the largest store timed.
     INDEX_BUDGET_BYTES = 300_000_000
 
     def _cover_table(self, pid_ranges: list) -> pa.Table:
@@ -302,20 +308,14 @@ class SpatialSketchEngine:
         return (pid_ranges, _ClassQueries(add) if any(add) else None,
                 _ClassQueries(mrg) if any(mrg) else None)
 
-    def _index(self, add, mrg):
-        """The probe index to answer a batch from, or None for the SQL
-        path (the rule is in the module docstring): only a batch of
-        additive kinds asks the store, which counts it."""
-        if add is None or mrg is not None:
-            return None
-        return self.store.serving_index(self.INDEX_BUDGET_BYTES)
-
     def _index_values(self, index, queries: list[QuerySpec], pid_ranges,
-                      add) -> dict:
+                      add) -> dict | None:
         """Index path -> {qid: est}: ONE mapPartitions job over the
-        store's probe index. Each task probes its key-sorted block for
-        the cover's keys with ``np.searchsorted`` and returns its
-        (qids, partials); the driver sums them."""
+        store's probe index. Each task memory-maps its key-sorted block,
+        probes it for the cover's keys with ``np.searchsorted`` and
+        returns its (qids, partials); the driver sums them. -> None when
+        a task's executor lacked its block file: the store's index is
+        dropped and the caller answers the batch on the SQL path."""
         cover = self._cover_table(pid_ranges)
         cfg, kind = self.store.cfg, self.store.kind
         ckey = cover["grid_key"].to_numpy().astype(np.int64) \
@@ -342,19 +342,33 @@ class SpatialSketchEngine:
             # a task's Python error (a kernel guard's ValueError) surfaces
             # as a PythonException, as it does on the SQL path
             cause = e.java_exception.getCause()
-            if cause is not None and is_instance_of(
+            if cause is None or not is_instance_of(
                     self.store.spark.sparkContext._gateway, cause,
                     "org.apache.spark.api.python.PythonException"):
-                raise PythonException(
-                    "\n  An exception was thrown from the Python worker. "
-                    "Please see the stack trace below.\n"
-                    + cause.getMessage()) from None
-            raise
+                raise
+            if BLOCK_MISSING in cause.getMessage():
+                self.store.drop_index()
+                return None
+            raise PythonException(
+                "\n  An exception was thrown from the Python worker. "
+                "Please see the stack trace below.\n"
+                + cause.getMessage()) from None
         out = {q.qid: 0 for q in queries}
         for uq, part in parts:
             for q, v in zip(uq.tolist(), part.tolist()):
                 out[q] += v
         return out
+
+    def _index_answers(self, queries, pid_ranges, add, mrg) -> dict | None:
+        """The batch's answers from the store's probe index, or None
+        for the SQL path (the rule is in the module docstring): only a
+        batch of additive kinds asks the store, which counts it."""
+        if add is None or mrg is not None:
+            return None
+        index = self.store.serving_index(self.INDEX_BUDGET_BYTES)
+        if index is None:
+            return None
+        return self._index_values(index, queries, pid_ranges, add)
 
     def _matched(self, cover: pa.Table) -> DataFrame:
         """SQL path: the cover joined to the sketch table pruned to the
@@ -432,9 +446,8 @@ class SpatialSketchEngine:
         the store's kernel cannot answer."""
         spark = self.store.spark
         pid_ranges, add, mrg = self._plan(queries)
-        index = self._index(add, mrg)
-        if index is not None:
-            vals = self._index_values(index, queries, pid_ranges, add)
+        vals = self._index_answers(queries, pid_ranges, add, mrg)
+        if vals is not None:
             return spark.createDataFrame(pa.table({
                 "qid": pa.array(list(vals), pa.int64()),
                 "est": pa.array(list(vals.values()), pa.int64())}),
@@ -464,9 +477,9 @@ class SpatialSketchEngine:
         reference's query API returns the same, SpatialSketch.cpp:
         837-855); no payload or per-cell row is ever collected."""
         pid_ranges, add, mrg = self._plan(queries)
-        index = self._index(add, mrg)
-        if index is not None:
-            return self._index_values(index, queries, pid_ranges, add)
+        vals = self._index_answers(queries, pid_ranges, add, mrg)
+        if vals is not None:
+            return vals
         out = {q.qid: 0 for q in queries}
         for r in self._sql_partials(pid_ranges, add, mrg).collect():
             out[int(r["qid"])] += int(r["est"])

@@ -595,23 +595,105 @@ def test_each_snapshot_serves_its_own_index(spark, events, tmp_path,
                        want_a) is not s3._index
 
 
-def test_probe_index_blocks(spark, events):
-    """The probe index holds the table: per block, keys grid_key·N² +
-    cell ascending, each with its val_sum and payload bytes. It is read
-    through Dataset.toArrowBatchRdd, a Spark-internal method: a Spark
-    release that drops or changes it fails here."""
-    cfg = SketchConfig.realistic(n=N, item_domain=ITEM_DOMAIN)
-    store = SketchStore.build(spark, events, cfg, "cm", MIN_LEVEL)
-    assert store.serving_index(10 ** 9) is None      # the first batch
+def _index_table(paths, large=False):
+    """{key: (val_sum, payload)} of the probe-index blocks in ``paths``,
+    read through their files as a task reads them."""
+    from spatialsketch_spark.geo.build import _load_block
     got = {}
-    for key, val_sum, lo, hi, data in store.serving_index(10 ** 9).collect():
+    for p in paths:
+        key, val_sum, lo, hi, data = _load_block(p, large)
         assert (np.diff(key) > 0).all()
         for k, v, i, j in zip(key.tolist(), val_sum.tolist(), lo.tolist(),
                               hi.tolist()):
             got[k] = (v, data[i:j].tobytes())
-    assert got == {r["grid_key"] * N * N + r["cell"]:
-                   (r["val_sum"], bytes(r["payload"]))
-                   for r in store.df.collect()}
+    return got
+
+
+def _table_by_key(store):
+    return {r["grid_key"] * N * N + r["cell"]:
+            (r["val_sum"], bytes(r["payload"])) for r in store.df.collect()}
+
+
+def test_probe_index_blocks(spark, events):
+    """The probe index holds the table: per block, keys grid_key·N² +
+    cell ascending, each with its val_sum and payload bytes. Each block
+    is a file under the session's SparkFiles root, and Spark caches only
+    the RDD of their paths, not the block bytes. The blocks are packed
+    through Dataset.toArrowBatchRdd, a Spark-internal method: a Spark
+    release that drops or changes it fails here."""
+    from pyspark import SparkFiles
+    cfg = SketchConfig.realistic(n=N, item_domain=ITEM_DOMAIN)
+    store = SketchStore.build(spark, events, cfg, "cm", MIN_LEVEL)
+    jsc = spark.sparkContext._jsc.sc()
+    cached = {i.id() for i in jsc.getRDDStorageInfo()}
+    assert store.serving_index(10 ** 9) is None      # the first batch
+    index = store.serving_index(10 ** 9)
+    assert index.count() > 0                         # packs the index
+    paths = store._index_paths.collect()
+    root = os.path.join(SparkFiles.getRootDirectory(), "ssk-index")
+    assert paths and all(os.path.dirname(p) == root and os.path.isfile(p)
+                         for p in paths)
+    assert _index_table(paths) == _table_by_key(store)
+    # the pack cached one RDD: the paths, a few bytes each
+    new = [i for i in jsc.getRDDStorageInfo() if i.id() not in cached]
+    assert [i.id() for i in new] == [store._index_paths.id()]
+    assert new[0].memSize() + new[0].diskSize() < 1000 * len(paths)
+    assert sum(os.path.getsize(p) for p in paths) > \
+        store.manifest["metrics"]["payload_bytes"]
+
+
+def test_probe_index_large_var_types(spark, events):
+    """Under spark.sql.execution.arrow.useLargeVarTypes Spark hands
+    Python binary columns with 64-bit offsets: the build, the pack and
+    the block reader honour it, and both serving paths answer as
+    without it."""
+    conf = "spark.sql.execution.arrow.useLargeVarTypes"
+    cfg = SketchConfig.realistic(n=N, item_domain=ITEM_DOMAIN)
+    qs = [QuerySpec(0, [(0, 0, 40, 33)], "count"),
+          QuerySpec(1, [(0, 0, 40, 33)], "freq", item=3),
+          QuerySpec(2, [(5, 9, 63, 50), (0, 0, 4, 4)], "freq", item=7)]
+    plain = SketchStore.build(spark, events, cfg, "cm", MIN_LEVEL)
+    want = SpatialSketchEngine(plain).query_values(qs)
+    spark.conf.set(conf, "true")
+    try:
+        store = SketchStore.build(spark, events, cfg, "cm", MIN_LEVEL)
+        assert _store_rows(store) == _store_rows(plain)
+        eng = SpatialSketchEngine(store)
+        assert eng.query_values(qs) == want              # SQL path
+        assert store._index is None
+        assert eng.query_values(qs) == want              # index path
+        assert store._index is not None
+        paths = store._index_paths.collect()
+    finally:
+        spark.conf.unset(conf)
+    assert _index_table(paths, large=True) == _table_by_key(plain)
+
+
+def test_missing_block_file_falls_back_to_sql(spark, events):
+    """A task whose executor lacks its block file (lost executor, a
+    locality wait that expired) fails with a marked error: the batch is
+    answered on the SQL join with the same answers, the store drops its
+    index, and the next additive batch packs a fresh one."""
+    cfg = SketchConfig.exact_mode(item_domain=ITEM_DOMAIN, n=N)
+    store = SketchStore.build(spark, events, cfg, "exact", 1)
+    eng = SpatialSketchEngine(store)
+    qs = [QuerySpec(0, [(0, 0, 40, 33)], "count"),
+          QuerySpec(1, [(0, 0, 40, 33)], "freq", item=3),
+          QuerySpec(2, [(5, 9, 63, 50), (0, 0, 4, 4)], "count")]
+    want = eng.query_values(qs)                          # SQL path
+    assert eng.query_values(qs) == want                  # packs the index
+    for surface in (eng.query_values,
+                    lambda q: {r["qid"]: r["est"]
+                               for r in eng.query(q).collect()}):
+        old = store._index_paths.collect()
+        for p in old:
+            os.remove(p)
+        assert surface(qs) == want                       # falls back
+        assert store._index is None
+        assert eng.query_values(qs) == want              # packs anew
+        new = store._index_paths.collect()
+        assert all(os.path.isfile(p) for p in new)
+        assert not set(new) & set(old)
 
 
 def test_index_keys_past_int64_stay_on_sql_path():
