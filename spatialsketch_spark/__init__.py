@@ -22,7 +22,13 @@ sketch table, and everything crossing the JVM/Python boundary moves in
 Arrow batches (no per-row Python).
 """
 
+import logging
+
 __version__ = "0.2.0"
+
+# the library logs through stdlib loggers under this package and prints
+# nothing unless the application configures logging
+logging.getLogger(__name__).addHandler(logging.NullHandler())
 
 # Public API: the names a reference user drives the engine through.
 # (Heavy imports stay lazy — pulling in pyspark at package import time

@@ -47,9 +47,7 @@ import uuid
 
 import numpy as np
 import pyarrow as pa
-from pyspark import SparkFiles
-from pyspark.rdd import RDD
-from pyspark.serializers import NoOpSerializer
+from pyspark import SparkFiles, TaskContext
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import SketchConfig
@@ -322,19 +320,24 @@ def merge_partials(df: DataFrame, cfg: SketchConfig, kind: str,
         .mapInArrow(_merge_partitions(cfg, kind), schema=SKETCH_SCHEMA)
 
 
-# a probe-index block: one row of raw numpy buffers per table partition
+# a probe-index block: one Arrow record batch message, one row of raw
+# numpy buffers, per table partition
 INDEX_DTYPES = (("key", np.int64), ("val_sum", np.int64), ("lo", np.int64),
                 ("hi", np.int64), ("data", np.uint8))
-INDEX_SCHEMA = ", ".join(f"{c} BINARY" for c, _ in INDEX_DTYPES)
+INDEX_SCHEMA = pa.schema([(c, pa.binary()) for c, _ in INDEX_DTYPES])
+INDEX_DIR = "ssk-index"
 
 
-def _pack_block(n: int):
+def _pack_block(n: int, index_id: str):
     """The mapInArrow function that packs one partition of a sketch
     table into one probe-index block, a single row of raw buffers:
     int64 ``key = grid_key·n² + cell`` ascending, each key's int64
     ``val_sum``, and its payload as ``data[lo:hi]``. The payload bytes
     keep their scan order (``lo``/``hi`` follow the keys), so packing
-    never reorders them."""
+    never reorders them. The task writes the block to
+    ``<SparkFiles root>/ssk-index/<index_id>-<partition>.arrow`` on the
+    executor running it and yields one row: that path. Spark deletes
+    the root directory when the session stops."""
 
     def fn(batches):
         batches = [b for b in batches if b.num_rows]
@@ -353,9 +356,19 @@ def _pack_block(n: int):
         order = np.argsort(key, kind="stable")
         cols = (key[order], vss[order], np.concatenate(starts)[order],
                 np.concatenate(ends)[order], np.concatenate(chunks))
-        yield pa.RecordBatch.from_arrays(
+        block = pa.RecordBatch.from_arrays(
             [pa.array([c.tobytes()], pa.binary()) for c in cols],
-            names=[c for c, _ in INDEX_DTYPES])
+            schema=INDEX_SCHEMA)
+        d = os.path.join(SparkFiles.getRootDirectory(), INDEX_DIR)
+        os.makedirs(d, exist_ok=True)
+        path = os.path.join(
+            d, f"{index_id}-{TaskContext.get().partitionId()}.arrow")
+        # a retried task never leaves a reader a partly written file
+        tmp = f"{path}.{uuid.uuid4().hex}.tmp"
+        with open(tmp, "wb") as f:
+            f.write(block.serialize())
+        os.replace(tmp, path)
+        yield pa.RecordBatch.from_arrays([pa.array([path])], ["path"])
 
     return fn
 
@@ -366,60 +379,19 @@ def _index_keys_fit(cfg: SketchConfig) -> bool:
     return cfg.levels ** 2 * cfg.n ** 2 <= 2 ** 63
 
 
-INDEX_DIR = "ssk-index"
-# the text of the error a task raises when its block file is not on its
-# executor; the engine matches it to fall back to the SQL join
-BLOCK_MISSING = "probe-index block file missing"
-
-
-class IndexBlockMissing(FileNotFoundError):
-    """A probe-index block file is not on the executor reading it."""
-
-
-def _block_arrays(buf: pa.Buffer, large: bool = False) -> tuple:
-    """One probe-index block, an Arrow record batch message of
-    INDEX_SCHEMA (``large``: written with large binary offsets) -> its
-    ``(key, val_sum, lo, hi, data)`` numpy views, without a copy."""
-    binary = pa.large_binary() if large else pa.binary()
-    b = pa.ipc.read_record_batch(buf, pa.schema(
-        [(c, binary) for c, _ in INDEX_DTYPES]))
-    return tuple(np.frombuffer(b.column(c)[0].as_buffer(), dt)
-                 for c, dt in INDEX_DTYPES)
-
-
-def _load_block(path: str, large: bool = False) -> tuple:
-    """A block file written by ``_block_writer`` -> its numpy views over
-    the memory-mapped file (no copy; the mapping lives as long as the
-    views). Raises IndexBlockMissing when this executor lacks the
-    file."""
+def _load_block(path: str):
+    """A block file written by ``_pack_block`` -> its ``(key, val_sum,
+    lo, hi, data)`` numpy views over the memory-mapped file (no copy;
+    the mapping lives as long as the views). When this executor lacks
+    the file it returns the marker: ``path`` itself, a str."""
     try:
         with pa.memory_map(path) as f:
             buf = f.read_buffer()
     except FileNotFoundError:
-        raise IndexBlockMissing(f"{BLOCK_MISSING}: {path}") from None
-    return _block_arrays(buf, large)
-
-
-def _block_writer(index_id: str):
-    """The mapPartitionsWithIndex function that writes a partition's
-    probe-index block (one Arrow record batch message; a partition packs
-    into at most one) to ``<SparkFiles root>/ssk-index/<index_id>-<split>
-    .arrow`` on the executor running it, and yields that path. Spark
-    deletes the root directory when the session stops."""
-
-    def fn(split, messages):
-        d = os.path.join(SparkFiles.getRootDirectory(), INDEX_DIR)
-        os.makedirs(d, exist_ok=True)
-        for message in messages:
-            path = os.path.join(d, f"{index_id}-{split}.arrow")
-            # a retried task never leaves a reader a partly written file
-            tmp = f"{path}.{uuid.uuid4().hex}.tmp"
-            with open(tmp, "wb") as f:
-                f.write(message)
-            os.replace(tmp, path)
-            yield path
-
-    return fn
+        return path
+    b = pa.ipc.read_record_batch(buf, INDEX_SCHEMA)
+    return tuple(np.frombuffer(b.column(c)[0].as_buffer(), dt)
+                 for c, dt in INDEX_DTYPES)
 
 
 def _publish_json(dest: str, obj: dict, exclusive: bool = False) -> None:
@@ -505,19 +477,20 @@ class SketchStore:
         overflow int64 (``_index_keys_fit``).
 
         The index is this store's table packed into one block per table
-        partition (``_pack_block``), packed by the first job that reads
-        it. Each block is written once, as one Arrow record batch
-        message, to a file on the executor that packed it
-        (``_block_writer``); Spark caches only the RDD of file paths.
-        Each element of the returned RDD reads as ``(key, val_sum, lo,
-        hi, data)`` numpy views over its memory-mapped file, so a batch
-        moves no block bytes from the JVM to Python. The packed rows
-        reach Python as Arrow buffers through Dataset.toArrowBatchRdd,
-        where ``DataFrame.rdd`` would pickle each ~40 MB block a byte at
-        a time (~2 s more per pack, measured). A task whose executor
-        lacks its block file raises IndexBlockMissing; the engine then
-        drops the index (``_index = None``) and the next batch packs a
-        new one. Every snapshot is its own store object, so
+        partition by ONE step (``_pack_block``, a ``mapInArrow``) that
+        the first job reading the index runs: each task writes its
+        block, one Arrow record batch message, to a file on the
+        executor running it and yields only the file's path, so Spark
+        caches the RDD of paths (``.rdd`` of the pack's tiny output),
+        never the block bytes. Each element of the returned RDD reads
+        as ``(key, val_sum, lo, hi, data)`` numpy views over its
+        memory-mapped file (``_load_block``), so a batch moves no block
+        bytes from the JVM to Python. A task whose executor lacks its
+        block file gets the path back as a marker; the engine then drops
+        the index and answers the batch on the SQL join, and the next
+        batch packs a new one. Untested: whether the cached paths keep
+        executor locality on a multi-executor cluster (only ``local``
+        masters were run). Every snapshot is its own store object, so
         ``merge_events``, ``rollback``, ``compact`` and ``load`` each
         start without an index and never see another snapshot's."""
         self._batches += 1
@@ -528,20 +501,10 @@ class SketchStore:
         if self._index is None:
             packed = self.df.select("grid_key", "cell", "val_sum",
                                     "payload") \
-                .mapInArrow(_pack_block(self.cfg.n), schema=INDEX_SCHEMA)
-            # toArrowBatchRdd is private[sql] in Spark 4.1, reached over
-            # py4j (so not on Spark Connect): a release that drops or
-            # changes it fails
-            # tests/test_geo_pipeline.py::test_probe_index_blocks
-            blocks = RDD(packed._jdf.toArrowBatchRdd().toJavaRDD(),
-                         self.spark.sparkContext, NoOpSerializer())
-            self._index_paths = blocks.mapPartitionsWithIndex(
-                _block_writer(uuid.uuid4().hex)).cache()
-            large = self.spark.conf.get(
-                "spark.sql.execution.arrow.useLargeVarTypes",
-                "false").lower() == "true"
-            self._index = self._index_paths.map(
-                functools.partial(_load_block, large=large))
+                .mapInArrow(_pack_block(self.cfg.n, uuid.uuid4().hex),
+                            schema="path STRING")
+            self._index_paths = packed.rdd.map(lambda r: r.path).cache()
+            self._index = self._index_paths.map(_load_block)
         return self._index
 
     def drop_index(self) -> None:

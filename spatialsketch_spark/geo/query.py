@@ -18,9 +18,10 @@ one of two paths, with the same estimators and bit-identical answers:
             mapPartitions job: each task memory-maps its block, probes
             it with np.searchsorted and returns (qid, partial) sums
             (count entries never decode a payload); the driver adds them
-            up. A task whose executor lacks its block file fails the job
-            with a marked error: the batch is answered on the SQL path
-            and the next additive batch packs a new index.
+            up. A task whose executor lacks its block file yields a
+            marker instead of failing: the driver logs one WARNING,
+            answers the batch on the SQL path, and the next additive
+            batch packs a new index.
   SQL path: the cover as a DataFrame joined to the sketch table pruned
             to the cover's grid keys (broadcast, or a shuffle against the
             bucketed cache past BROADCAST_COVER_ROWS) -> ONE matched
@@ -77,6 +78,7 @@ module only dispatches. The ``exact`` kernel answers every kind exactly
 
 from __future__ import annotations
 
+import logging
 from dataclasses import dataclass
 from functools import reduce
 
@@ -91,7 +93,9 @@ from pyspark.sql import DataFrame, functions as F
 from ..core.dyadic import cover_2d_np, effective_cover
 from ..core.kernels import int_group_sum, make_kernel
 from ..core.partitioner import Shape, shape_to_ranges
-from .build import BLOCK_MISSING, SketchStore
+from .build import SketchStore
+
+log = logging.getLogger(__name__)
 
 COVER_SCHEMA = "pid BIGINT, grid_key INT, cell BIGINT, coverage DOUBLE"
 RESULT_SCHEMA = "qid BIGINT, est BIGINT"
@@ -314,8 +318,9 @@ class SpatialSketchEngine:
         store's probe index. Each task memory-maps its key-sorted block,
         probes it for the cover's keys with ``np.searchsorted`` and
         returns its (qids, partials); the driver sums them. -> None when
-        a task's executor lacked its block file: the store's index is
-        dropped and the caller answers the batch on the SQL path."""
+        a task's executor lacked its block file (the task yields the
+        path, ``_load_block``'s marker): the store's index is dropped
+        and the caller answers the batch on the SQL path."""
         cover = self._cover_table(pid_ranges)
         cfg, kind = self.store.cfg, self.store.kind
         ckey = cover["grid_key"].to_numpy().astype(np.int64) \
@@ -325,7 +330,11 @@ class SpatialSketchEngine:
 
         def probe(blocks):
             kernel = make_kernel(kind, cfg)
-            for key, val_sum, lo, hi, data in blocks:
+            for block in blocks:
+                if isinstance(block, str):
+                    yield block
+                    continue
+                key, val_sum, lo, hi, data = block
                 if not len(key):
                     continue
                 pos = np.minimum(np.searchsorted(key, ckey), len(key) - 1)
@@ -346,13 +355,18 @@ class SpatialSketchEngine:
                     self.store.spark.sparkContext._gateway, cause,
                     "org.apache.spark.api.python.PythonException"):
                 raise
-            if BLOCK_MISSING in cause.getMessage():
-                self.store.drop_index()
-                return None
             raise PythonException(
                 "\n  An exception was thrown from the Python worker. "
                 "Please see the stack trace below.\n"
                 + cause.getMessage()) from None
+        missing = [p for p in parts if isinstance(p, str)]
+        if missing:
+            log.warning("probe-index block file %s is missing (%d of the "
+                        "index's blocks); the store drops its index and "
+                        "answers this batch on the SQL join", missing[0],
+                        len(missing))
+            self.store.drop_index()
+            return None
         out = {q.qid: 0 for q in queries}
         for uq, part in parts:
             for q, v in zip(uq.tolist(), part.tolist()):

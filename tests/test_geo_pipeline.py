@@ -1,8 +1,11 @@
 """End-to-end Spark pipeline tests: sketch build (map-side-combined),
 partitioning invariance, polygon queries vs exact Spark SQL, resume."""
 
+import inspect
 import json
+import logging
 import os
+import pathlib
 
 import numpy as np
 import pytest
@@ -595,13 +598,13 @@ def test_each_snapshot_serves_its_own_index(spark, events, tmp_path,
                        want_a) is not s3._index
 
 
-def _index_table(paths, large=False):
+def _index_table(paths):
     """{key: (val_sum, payload)} of the probe-index blocks in ``paths``,
     read through their files as a task reads them."""
     from spatialsketch_spark.geo.build import _load_block
     got = {}
     for p in paths:
-        key, val_sum, lo, hi, data = _load_block(p, large)
+        key, val_sum, lo, hi, data = _load_block(p)
         assert (np.diff(key) > 0).all()
         for k, v, i, j in zip(key.tolist(), val_sum.tolist(), lo.tolist(),
                               hi.tolist()):
@@ -618,9 +621,9 @@ def test_probe_index_blocks(spark, events):
     """The probe index holds the table: per block, keys grid_key·N² +
     cell ascending, each with its val_sum and payload bytes. Each block
     is a file under the session's SparkFiles root, and Spark caches only
-    the RDD of their paths, not the block bytes. The blocks are packed
-    through Dataset.toArrowBatchRdd, a Spark-internal method: a Spark
-    release that drops or changes it fails here."""
+    the RDD of their paths, not the block bytes. The serving modules
+    reach no Spark-internal API (``_jdf``, ``toArrowBatchRdd``) to pack
+    it."""
     from pyspark import SparkFiles
     cfg = SketchConfig.realistic(n=N, item_domain=ITEM_DOMAIN)
     store = SketchStore.build(spark, events, cfg, "cm", MIN_LEVEL)
@@ -640,6 +643,10 @@ def test_probe_index_blocks(spark, events):
     assert new[0].memSize() + new[0].diskSize() < 1000 * len(paths)
     assert sum(os.path.getsize(p) for p in paths) > \
         store.manifest["metrics"]["payload_bytes"]
+    geo = pathlib.Path(inspect.getsourcefile(SketchStore)).parent
+    for f in geo.glob("*.py"):
+        src = f.read_text()
+        assert "_jdf" not in src and "toArrowBatchRdd" not in src, f
 
 
 def test_probe_index_large_var_types(spark, events):
@@ -666,14 +673,17 @@ def test_probe_index_large_var_types(spark, events):
         paths = store._index_paths.collect()
     finally:
         spark.conf.unset(conf)
-    assert _index_table(paths, large=True) == _table_by_key(plain)
+    assert _index_table(paths) == _table_by_key(plain)
 
 
-def test_missing_block_file_falls_back_to_sql(spark, events):
+def test_missing_block_file_falls_back_to_sql(spark, events, caplog):
     """A task whose executor lacks its block file (lost executor, a
-    locality wait that expired) fails with a marked error: the batch is
-    answered on the SQL join with the same answers, the store drops its
-    index, and the next additive batch packs a fresh one."""
+    locality wait that expired) yields a marker instead of failing: the
+    batch is answered on the SQL join with the same answers and no
+    failed task, the engine logs one WARNING naming the file, the store
+    drops its index, and the next additive batch packs a fresh one."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
     cfg = SketchConfig.exact_mode(item_domain=ITEM_DOMAIN, n=N)
     store = SketchStore.build(spark, events, cfg, "exact", 1)
     eng = SpatialSketchEngine(store)
@@ -682,14 +692,31 @@ def test_missing_block_file_falls_back_to_sql(spark, events):
           QuerySpec(2, [(5, 9, 63, 50), (0, 0, 4, 4)], "count")]
     want = eng.query_values(qs)                          # SQL path
     assert eng.query_values(qs) == want                  # packs the index
-    for surface in (eng.query_values,
-                    lambda q: {r["qid"]: r["est"]
-                               for r in eng.query(q).collect()}):
+    for i, surface in enumerate((
+            eng.query_values,
+            lambda q: {r["qid"]: r["est"] for r in eng.query(q).collect()})):
         old = store._index_paths.collect()
         for p in old:
             os.remove(p)
-        assert surface(qs) == want                       # falls back
+        group = f"missing-block-fallback-{i}"
+        sc.setJobGroup(group, "a batch whose block files are gone")
+        caplog.clear()
+        try:
+            with caplog.at_level(logging.WARNING):
+                assert surface(qs) == want               # falls back
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
         assert store._index is None
+        jobs = tracker.getJobIdsForGroup(group)
+        stages = [tracker.getStageInfo(st) for j in jobs
+                  for st in tracker.getJobInfo(j).stageIds]
+        assert jobs and sum(st.numFailedTasks for st in stages
+                            if st is not None) == 0
+        warned = [r for r in caplog.records
+                  if r.name == "spatialsketch_spark.geo.query"]
+        assert [r.levelno for r in warned] == [logging.WARNING]
+        msg = warned[0].getMessage()
+        assert any(p in msg for p in old) and "SQL join" in msg
         assert eng.query_values(qs) == want              # packs anew
         new = store._index_paths.collect()
         assert all(os.path.isfile(p) for p in new)
